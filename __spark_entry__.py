@@ -85,16 +85,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _ensure_shipped(spark)
         from pdf_to_text_spark.sources.warc import synthetic_warc_pages
 
-        # dedup_strategy="window": over the mapInPandas WARC source the
-        # auto prefilter's eager stats job cannot prune columns past the
-        # walker, so it executes the full gunzip+record walk a second
-        # time per run (extraction.py's own r6 SCALE CAVEAT); the window
-        # strategy gives identical keep-newest semantics in one pass and
-        # the corpus's dup urls have distinct whole-second timestamps
-        # (r6 review)
-        ex = extraction.run_extraction(
-            synthetic_warc_pages(spark, 120), dedup_strategy="window"
-        )
+        # the corpus's dup urls have distinct whole-second timestamps,
+        # so the keep-newest winner per url is deterministic
+        ex = extraction.run_extraction(synthetic_warc_pages(spark, 120))
         return ex.select("url", "content_type", "n_pages", "n_chars", "parse_status")
 
     def q_pricing_summary(spark, sf):
@@ -143,11 +136,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _ensure_shipped(spark)
         from pdf_to_text_spark.sources.warc import synthetic_warc_pages
 
-        # window strategy for the same single-pass reason as
-        # q_extraction_pdf_e2e above
-        ex = extraction.run_extraction(
-            synthetic_warc_pages(spark, 120), dedup_strategy="window"
-        )
+        ex = extraction.run_extraction(synthetic_warc_pages(spark, 120))
         return ex.groupBy("parse_status").agg(
             F.count(F.lit(1)).alias("docs"),
             F.sum(F.col("n_pages").cast("long")).alias("pages"),

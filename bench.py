@@ -155,9 +155,7 @@ def main() -> int:
     docs_1k = docs.where(docs.doc_id < 1000)
 
     def q_extract_pages():
-        # default layout: kernel over scan splits, no payload shuffle
-        # (num_partitions only applies with shuffle_payloads=True and is
-        # a loud error otherwise — r6 review)
+        # kernel over scan splits, no payload shuffle
         return run_extraction(pages)
 
     headline = {

@@ -432,9 +432,9 @@ def main() -> int:
         "",
         f"Input: deterministic synthetic pages table, {docs} docs "
         f"(~33% PDF incl. 1% 100-page megadocs, ~66% HTML; seed-pinned).",
-        "Job: full extraction pipeline (broadcast dedup prefilter — tiny",
-        "stats job + broadcast filter BEFORE the kernel, the r4 default →",
-        "Arrow-batched PDF/HTML kernels over size-bounded scan splits →",
+        "Job: full extraction pipeline (Arrow-batched PDF/HTML kernels",
+        "over size-bounded scan splits → keep-newest-per-url window over",
+        "the extracted rows →",
         f"noop sink). Cold JVM per run, warm Python worker pool, {args.reps} reps.",
         "",
         "| cores | docs/sec (median) | docs/sec (best) | per-rep docs/sec |",

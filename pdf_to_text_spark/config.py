@@ -35,8 +35,6 @@ HTML_DROP_TAGS = frozenset("script style noscript template svg iframe".split())
 # would be sized to keep each bucket's input < a few GB (e.g. 2^14 buckets);
 # in the sandbox it is kept small so local runs don't create tiny tasks.
 N_BUCKETS = int(os.environ.get("PTS_N_BUCKETS", "32"))
-# salt modulus for skew-flattening repartition of mega-documents
-SKEW_SALT = int(os.environ.get("PTS_SKEW_SALT", "8"))
 # ── adaptive small-scan spreading (plans/layout.spread_small_scan) ──────────
 # Relations between MIN and MAX estimated bytes are round-robin
 # repartitioned before CPU-heavy map stages (single-row-group parquet

@@ -1,8 +1,8 @@
 """The extraction pipeline: pages → extracted text + metrics.
 
 Spark-first restatement of the reference's /upload dataflow
-(src/main.ts:133-263): scan → validity dispatch → dedup-by-url →
-salted repartition → Arrow-batched extraction kernel → metrics rollup.
+(src/main.ts:133-263): scan → Arrow-batched extraction kernel over the
+scan splits → keep the newest crawl per url → metrics rollup.
 Everything before and after the one mapInPandas stage is built-in
 Catalyst expressions (pushdown/pruning-friendly).
 """
@@ -17,56 +17,42 @@ from pyspark.sql.window import Window
 
 from ..config import N_BUCKETS
 from ..functions.udfs import EXTRACT_SCHEMA, content_type_col, extract_batches
-from ..plans.layout import salted_repartition, with_bucket
+from ..plans.layout import with_bucket
 
 PAGES_COLS = ["url", "warc_ts", "html", "text", "lang"]
 
 
-def dedup_latest_by_url(pages: DataFrame) -> DataFrame:
+def dedup_latest_by_url(df: DataFrame) -> DataFrame:
     """Keep the newest crawl per url (Common-Crawl inputs repeat urls).
 
     row_number over (url ORDER BY warc_ts DESC) == 1 — SURVEY.md §2.1.
-    At scale this is a single hash-shuffle on url; AQE handles stragglers.
-    This is the shuffle-bearing strategy; run_extraction's default "auto"
-    path replaces it with dup_url_stats + a broadcast filter whenever the
-    duplicate-url set is broadcastable (see run_extraction docstring).
+    Spark sorts NULLs last in descending order, so a timestamp-less crawl
+    loses to any dated one; an exact (url, warc_ts) tie keeps one of the
+    tied rows, and NULL urls group together like any other key. Works on
+    any frame with `url` and `warc_ts`: run_extraction applies it to the
+    extracted rows, so its one hash-shuffle on url carries kilobyte rows,
+    never page payloads.
     """
     w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
     return (
-        pages.withColumn("_rn", F.row_number().over(w))
+        df.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
 
 
-# Broadcast ceiling for the prefilter dedup strategy: the duplicated-url
-# relation is collect()ed and re-broadcast when it has at most this many
-# rows. Driver-memory honesty (r4 review): at the cap that is ~1 GB peak,
-# not the naive 100 B/row — CPython Row objects cost ~300-500 B each and
-# _dedup_prefilter materializes a second (url, ts) tuple list before
-# createDataFrame. Size the driver accordingly (the default 8g config
-# clears it 8×). Crawl dup rates run ~2%, so the cap covers ~50M-doc
-# corpora; beyond it run_extraction falls back to the window strategy
-# (which still shuffles only extracted kilobyte rows, never payloads).
-PREFILTER_MAX_DUP_URLS = 1_000_000
-
-
 def dup_url_stats(pages: DataFrame) -> DataFrame:
     """Per-duplicated-url stats: (url, _max_ts, _n, _tie_free).
 
-    Built from ONLY (url, warc_ts) — parquet column pruning makes this a
-    tiny-column scan and ONE keyed aggregation with map-side partials
-    (the shuffle carries per-url partial rows, never payloads). Measured
-    0.4 s warm at the sandbox's 48k-doc bench scale, core-count-
-    independent (pure stage latency); at real scale it amortizes into
-    the scan. Rows come back only for urls with more than one crawl.
-    _max_ts is the newest warc_ts (F.max skips NULLs, so a timestamp-
-    less crawl only wins when every crawl of the url is timestamp-less —
-    matching the window strategy's desc-nulls-last). _tie_free is true
-    when every crawl has a distinct timestamp (countDistinct skips
-    NULLs; at most one NULL keeps it tie-free) — conservative: a
-    repeated ts anywhere routes the url set to the window fallback even
-    when the repeat is not at the max."""
+    A stats helper for reporting how many urls a corpus repeats; it is
+    not on the extraction path (run_extraction dedups with
+    dedup_latest_by_url after the kernel). Built from only (url,
+    warc_ts), so over parquet it is a tiny-column scan and one keyed
+    aggregation with map-side partials. Rows come back only for urls
+    with more than one crawl. _max_ts is the newest warc_ts (F.max skips
+    NULLs). _tie_free is true when every crawl of the url has a distinct
+    timestamp (countDistinct skips NULLs; at most one NULL keeps it
+    tie-free)."""
     n_null = F.sum(F.when(F.col("warc_ts").isNull(), 1).otherwise(0))
     agg = (
         pages.select("url", "warc_ts")
@@ -83,138 +69,38 @@ def dup_url_stats(pages: DataFrame) -> DataFrame:
     return agg.where(F.col("_n") > 1).select("url", "_max_ts", "_n", "_tie_free")
 
 
-def _dedup_prefilter(pages: DataFrame, dup_rows) -> DataFrame:
-    """Drop superseded crawls via a broadcast anti-filter — zero payload
-    shuffle. `dup_rows` is the collected dup_url_stats result (driver-side
-    list of Rows, size-capped by the caller); every row must be _tie_free
-    (no exact (url, warc_ts) collisions — those need the window).
-    """
-    spark = pages.sparkSession
-    dup = spark.createDataFrame(
-        [(r["url"], r["_max_ts"]) for r in dup_rows],
-        "url string, _max_ts timestamp",
-    )
-    return (
-        pages.join(F.broadcast(dup), "url", "left_outer")
-        .where(F.col("_max_ts").isNull() | F.col("warc_ts").eqNullSafe(F.col("_max_ts")))
-        .drop("_max_ts")
-    )
-
-
 def run_extraction(
     pages: DataFrame,
     *,
-    num_partitions: int | None = None,
     dedup: bool = True,
-    dedup_strategy: str = "auto",
-    shuffle_payloads: bool = False,
     n_buckets: int | None = None,
 ) -> DataFrame:
     """pages → extracted (url, warc_ts, lang, content_type, extracted_text,
     n_pages, n_chars, parse_status, parse_failed, bucket, partition_id).
 
+    Returns a lazy plan: the call itself launches no Spark job.
+
     Scale-critical ordering: NEVER shuffle raw payloads. The kernel maps
     directly over the size-bounded scan splits (maxPartitionBytes already
-    caps task input, which is what actually balances megabyte-PDF skew at
-    the scan).
-
-    dedup_strategy (keep-newest-crawl-per-url semantics, SURVEY §2.1):
-      * "prefilter" — dup_url_stats (a tiny-column scan + map-combined
-        agg, the ONLY shuffle in the job and it carries (url, ts, count)
-        partials) finds the duplicated urls; superseded crawls are then
-        dropped BEFORE the kernel by a broadcast filter. Payloads and
-        extracted text never cross a shuffle, and duplicated urls are no
-        longer redundantly extracted. Requires the dup-url set to fit the
-        broadcast cap (PREFILTER_MAX_DUP_URLS) and no exact
-        (url, warc_ts) collisions — raises ValueError otherwise.
-      * "window" — row_number over (url ORDER BY warc_ts DESC) AFTER
-        extraction: one hash-shuffle of the derived rows (~100-1000×
-        smaller than payloads, the kilobytes-not-megabytes trade) plus
-        ~2% redundant kernel CPU on the dup urls. No driver job, no
-        broadcast cap, handles exact-ts collisions — the unconditional
-        fallback.
-      * "auto" (default) — runs the dup_url_stats job eagerly (metrics-
-        sized collect, same class as checkpoint commit metadata): zero
-        dups → no dedup plan at all; broadcastable and collision-free →
-        prefilter; else window. The decision is logged in the plan shape
-        (tests/test_plan_quality.py pins that no Exchange carries
-        payload or extracted-text columns on the prefilter path).
-        SCALE CAVEAT (r6 review): the stats job's "tiny-column scan"
-        relies on column pruning reaching the source. Over parquet that
-        is free; over a source that computes rows (warc_to_page_rows'
-        binaryFile + record walk, pages_df's generator) pruning cannot
-        pass the mapInPandas and the eager job EXECUTES THE FULL SOURCE
-        PLAN once before extraction runs it again. For WARC-scale
-        ingest, either land records to parquet first (the recommended
-        crawl pattern — sources/warc.py docstring) or pass
-        dedup_strategy="window", which folds dedup into the single pass.
-
-    `shuffle_payloads=True` restores the pre-shuffle layout (bucket +
-    salted repartition before the kernel) for inputs that arrive so
-    skewed that scan splits can't balance them (e.g. one giant file of
-    mega-PDFs with tiny row groups).
+    caps task input, which is what balances megabyte-PDF skew at the
+    scan). With `dedup` (the default) dedup_latest_by_url then keeps the
+    newest crawl per url over the extracted rows: the one shuffle carries
+    derived rows (~100-1000× smaller than payloads), at the cost of
+    extracting the ~2% of superseded crawls too.
 
     `n_buckets` overrides the bucket-column modulus (default
     config.N_BUCKETS) — callers that partition work by a custom bucket
     count (run_resumable_extraction) must pass it here too, or the
     output/metrics `bucket` column would silently disagree with their
-    wave filtering (r6 review).
+    wave filtering.
     """
-    if dedup_strategy not in ("auto", "prefilter", "window"):
-        raise ValueError(f"unknown dedup_strategy {dedup_strategy!r}")
-    if num_partitions is not None and not shuffle_payloads:
-        # same guard run_resumable_extraction has had since r3: the value
-        # is consumed only by the shuffle_payloads layout, and a silently
-        # dead tuning knob misleads benchmarks and callers (r6 review —
-        # bench.py itself was passing it to no effect)
-        raise ValueError(
-            "run_extraction: num_partitions only applies with "
-            "shuffle_payloads=True — the default layout maps the kernel "
-            "over scan splits and the value would be silently ignored"
-        )
     nb = N_BUCKETS if n_buckets is None else n_buckets
-    df = pages.select(*PAGES_COLS)
-
-    post_window = False
-    if dedup and dedup_strategy != "window":
-        # cap+1 so overflow is detectable without counting the full set
-        dup_rows = dup_url_stats(df).limit(PREFILTER_MAX_DUP_URLS + 1).collect()
-        broadcastable = len(dup_rows) <= PREFILTER_MAX_DUP_URLS
-        # ties need the window; so does a duplicated NULL url (join keys
-        # never match NULL, so the filter could not drop its extra rows)
-        tie_free = all(r["_tie_free"] and r["url"] is not None for r in dup_rows)
-        if broadcastable and tie_free:
-            if dup_rows:
-                df = _dedup_prefilter(df, dup_rows)
-            # else: no duplicated urls at all — dedup is a no-op
-        elif dedup_strategy == "prefilter":
-            # when the cap overflowed, tie_free was computed over the
-            # truncated limit(cap+1) sample — don't report it as a fact
-            # about the whole corpus (ADVICE r4)
-            tie_msg = (
-                f"tie_free={tie_free} (over a truncated sample)"
-                if not broadcastable else f"tie_free={tie_free}"
-            )
-            raise ValueError(
-                "dedup_strategy='prefilter' needs a broadcastable, "
-                f"collision-free dup-url set (got {len(dup_rows)} dup urls, "
-                f"{tie_msg}); use 'window' or 'auto'"
-            )
-        else:
-            post_window = True
-
-    if shuffle_payloads:
-        df = with_bucket(df, n_buckets=nb)
-        df = salted_repartition(df, num_partitions or 64).select(*PAGES_COLS)
-    extracted = df.mapInPandas(extract_batches, schema=EXTRACT_SCHEMA)
+    extracted = pages.select(*PAGES_COLS).mapInPandas(
+        extract_batches, schema=EXTRACT_SCHEMA
+    )
     extracted = extracted.withColumn("partition_id", F.spark_partition_id())
-    if dedup and (dedup_strategy == "window" or post_window):
-        w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
-        extracted = (
-            extracted.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+    if dedup:
+        extracted = dedup_latest_by_url(extracted)
     # bucket is recomputed (cheap, deterministic) rather than shipped
     # through the Python worker.
     return with_bucket(extracted, n_buckets=nb)

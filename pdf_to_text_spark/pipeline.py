@@ -31,22 +31,21 @@ from .operators.records import (
 
 
 def run_reference_pipeline(
-    pages: DataFrame, *, dedup: bool = True, dedup_strategy: str = "auto",
-    enricher=None,
+    pages: DataFrame, *, dedup: bool = True, enricher=None,
 ) -> dict[str, DataFrame]:
     """pages → every artifact the reference produces per document.
 
     `enricher=None` uses the deterministic regex field parser on blocks
     (records_df); pass an operators.enrichment.HTTPEnricher to run the
     reference's LLM stage instead (then records come from enrich_chunks).
-    `dedup_strategy` passes through to run_extraction (auto | prefilter
-    | window).
+    `dedup` passes through to run_extraction (keep the newest crawl per
+    url).
 
     NOTE for materializing callers: every returned frame shares the
     extraction lineage lazily — writing all of them re-runs the kernel
     per sink. Write extracted/ first, re-read it, and feed
     artifacts_from_extracted() instead (what run.py does; r5 review)."""
-    extracted = run_extraction(pages, dedup=dedup, dedup_strategy=dedup_strategy)
+    extracted = run_extraction(pages, dedup=dedup)
     return {
         "extracted": extracted,
         **artifacts_from_extracted(extracted, enricher=enricher),

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import N_BUCKETS
-from ..operators.extraction import metrics_rollup, run_extraction
+from ..operators.extraction import PAGES_COLS, metrics_rollup, run_extraction
 from .layout import with_bucket
 
 
@@ -186,30 +186,21 @@ def run_resumable_extraction(
     *,
     n_buckets: int = N_BUCKETS,
     buckets_per_commit: int = 8,
-    num_partitions: int | None = None,
-    shuffle_payloads: bool = False,
     dedup: bool = True,
-    dedup_strategy: str = "auto",
     fail_after_commits: int | None = None,
 ) -> ManifestTable:
     """Extract `pages` into a snapshot-checkpointed table, resuming past
     already-committed buckets.
 
     `fail_after_commits` injects a crash for the resume test (SURVEY §5.6).
-    At cluster scale each commit wave is one Spark job over ~1/W of the
-    buckets; bucket pruning happens at the scan via the pushed-down
-    `bucket IN (...)` predicate on the derived column.
-
-    `num_partitions` takes effect only with `shuffle_payloads=True`
-    (run_extraction's contract: the default layout is scan-split-driven
-    and deliberately has no pre-kernel repartition to size).
+    Each commit wave writes ~1/W of the buckets; building a wave's plan
+    launches no Spark job, only its write does. The wave's
+    `bucket IN (...)` filter is on a column derived from the url hash, so
+    it is not pushed into the scan (`PushedFilters: []`): every wave
+    lists and reads every input file, and the filter drops the other
+    buckets' rows after the scan. Pruning at the scan needs the input
+    laid out by bucket (ROADMAP item 3).
     """
-    if num_partitions is not None and not shuffle_payloads:
-        raise ValueError(
-            "run_resumable_extraction: num_partitions only applies with "
-            "shuffle_payloads=True — without it the kernel maps over scan "
-            "splits and the value would be silently ignored"
-        )
     mt = ManifestTable(table_path)
     # A resume with a different modulus reinterprets old bucket ids under
     # the new one — rows silently dropped AND duplicated (r6 review). The
@@ -231,20 +222,15 @@ def run_resumable_extraction(
     # default-bucketed column would leave buckets >= n_buckets matching
     # no wave filter — silently dropping most of the corpus while the
     # run reports complete (r5 review)
-    pages_b = with_bucket(
-        pages.select("url", "warc_ts", "html", "text", "lang"),
-        n_buckets=n_buckets,
-    )
+    pages_b = with_bucket(pages.select(*PAGES_COLS), n_buckets=n_buckets)
 
     commits = 0
     for i in range(0, len(todo), buckets_per_commit):
         wave = todo[i : i + buckets_per_commit]
         subset = pages_b.where(F.col("bucket").isin(wave))
         extracted = run_extraction(
-            subset, num_partitions=num_partitions,
-            shuffle_payloads=shuffle_payloads,
+            subset,
             dedup=dedup,  # r5 review: the CLI's --no-dedup reaches here now
-            dedup_strategy=dedup_strategy,
             # r6 review: without this the output/metrics bucket column is
             # recomputed mod N_BUCKETS and disagrees with the wave filter
             # above whenever n_buckets is custom — lineage rows would not

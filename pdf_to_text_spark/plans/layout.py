@@ -1,11 +1,10 @@
-"""Partition layout: url-hash bucketing + salted skew-flattening repartition.
+"""Partition layout: url-hash bucketing and small-scan spreading.
 
-North-star requirements (BASELINE.json): "partitions by url-hash buckets
-with salted repartitioning to defuse skew from megabyte-scale PDFs".
-
-At 100 TB the bucket column is also the table partition/sort key, so file
-pruning and co-located resume both key on it; in the sandbox it drives the
-shuffle layout only.
+The bucket column keys the resumable job's waves and the per-bucket
+metrics. Megabyte-PDF skew is balanced at the scan, not by a shuffle:
+the extraction kernel maps over size-bounded scan splits
+(maxPartitionBytes caps each task's input), so extraction never
+repartitions a page payload.
 """
 
 from __future__ import annotations
@@ -13,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import N_BUCKETS, SKEW_SALT
+from ..config import N_BUCKETS
 
 
 def with_bucket(df: DataFrame, url_col: str = "url", n_buckets: int = N_BUCKETS) -> DataFrame:
@@ -100,25 +99,6 @@ def xxhash64_py(data: bytes | str, seed: int = 42) -> int:
 def bucket_of(url: str, n_buckets: int = N_BUCKETS) -> int:
     """pmod(xxhash64(url), n_buckets) without a SparkSession."""
     return xxhash64_py(url) % n_buckets
-
-
-def salted_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    url_col: str = "url",
-    salt_mod: int = SKEW_SALT,
-) -> DataFrame:
-    """Spread each url-hash bucket across `salt_mod` shuffle partitions.
-
-    Mega-documents concentrate in few buckets (FIXTURES.md skew knob); a
-    plain repartition("bucket") would put all of them in the same tasks.
-    Salting with a second, independent hash of the url (seeded via a
-    prefix so it decorrelates from the bucket hash) flattens the heavy
-    buckets while keeping the shuffle deterministic. Used before the
-    extraction mapInPandas so task input sizes stay balanced.
-    """
-    salt = F.pmod(F.xxhash64(F.concat(F.lit("salt:"), F.col(url_col))), F.lit(salt_mod))
-    return df.repartition(num_partitions, F.col("bucket"), salt)
 
 
 def spread_small_scan(df: DataFrame) -> DataFrame:

@@ -21,11 +21,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--resume", action="store_true",
                     help="snapshot-checkpointed extraction (resumable)")
     ap.add_argument("--no-dedup", action="store_true")
-    ap.add_argument("--dedup-strategy", default="auto",
-                    choices=["auto", "prefilter", "window"],
-                    help="latest-by-url dedup plan: broadcast prefilter "
-                         "(zero payload shuffle), post-extraction window, "
-                         "or auto (stats-driven; the default)")
     args = ap.parse_args(argv)
 
     from .config import build_spark
@@ -40,7 +35,6 @@ def main(argv: list[str] | None = None) -> int:
             mt = run_resumable_extraction(
                 spark, pages, f"{args.output}/extracted",
                 dedup=not args.no_dedup,  # r5 review: was silently ignored
-                dedup_strategy=args.dedup_strategy,
             )
             # SAME five-artifact contract as the non-resume branch (r6
             # review: --resume used to stop at extracted+metrics, so a
@@ -72,10 +66,9 @@ def main(argv: list[str] | None = None) -> int:
             from .operators.extraction import run_extraction
             from .pipeline import artifacts_from_extracted
 
-            run_extraction(
-                pages, dedup=not args.no_dedup,
-                dedup_strategy=args.dedup_strategy,
-            ).write.mode("overwrite").parquet(f"{args.output}/extracted")
+            run_extraction(pages, dedup=not args.no_dedup).write.mode(
+                "overwrite"
+            ).parquet(f"{args.output}/extracted")
             extracted = spark.read.parquet(f"{args.output}/extracted")
             out = artifacts_from_extracted(extracted)
             for name in ("records", "csv_docs", "json_docs", "metrics"):

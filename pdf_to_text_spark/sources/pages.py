@@ -11,9 +11,10 @@ executors, so even the 100k-row bench table never materializes on the
 driver. Skew knob: 1% of PDF rows are 100-page "mega" docs whose urls are
 crafted — via the driver-side xxhash64 mirror (plans/layout.py
 bucket_of) — to REALLY land in 2 url-hash buckets (FIXTURES.md §1),
-which the salted repartition in plans/layout.py must flatten. (Before r6
-this concentration was only claimed: distinct urls under a shared path
-prefix still hash uniformly, so the skew knob didn't exist.)
+the skew any bucket-keyed work (resumable waves, per-bucket metrics)
+sees. (Before r6 this concentration was only claimed: distinct urls
+under a shared path prefix still hash uniformly, so the skew knob
+didn't exist.)
 """
 
 from __future__ import annotations
@@ -35,8 +36,8 @@ _LANG_CYCLE = (["en"] * 20 + ["es"] * 8 + ["de"] * 7 + ["fr"] * 8 + ["zh"] * 7)
 
 MEGA_EVERY = 100      # 1% mega PDFs
 # the two url-hash buckets ALL mega docs land in — the documented
-# hash-skew knob the salted repartition must flatten. Residues are of a
-# PINNED modulus (below), NOT the env-configurable config.N_BUCKETS:
+# hash-skew knob. Residues are of a PINNED modulus (below), NOT the
+# env-configurable config.N_BUCKETS:
 # corpus bytes must be a pure function of PAGES_GEN (the .benchdata
 # cache key), and with PTS_N_BUCKETS=16 the 10k-probe search for a
 # bucket-21 url could never hit (generation crashed; r6 review). Under

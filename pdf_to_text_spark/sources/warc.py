@@ -36,14 +36,13 @@ Scale notes (the part that matters at 10^12 docs):
 - **No per-row Python:** one Python invocation per *file*, vectorized
   pandas construction per slice — same Arrow-batch discipline as the
   extraction kernels.
-- **Land to parquet before auto dedup.** run_extraction's default
-  "auto" dedup runs an eager (url, warc_ts) stats job first; over this
-  source column pruning cannot pass the mapInPandas, so that job would
-  walk every archive once and extraction would walk it AGAIN (r6
-  review). At crawl scale: warc_pages → write parquet → run_extraction
-  over the parquet (the ingest/extract split every real crawl pipeline
-  makes anyway), or run_extraction(warc_pages(...),
-  dedup_strategy="window") for a single pass.
+- **Land to parquet before extracting at crawl scale.**
+  run_extraction(warc_pages(...)) is a single pass (its keep-newest
+  window runs after the kernel, over the extracted rows), but column
+  pruning cannot pass this source's mapInPandas, so every other query
+  over the same frame walks every archive again. At crawl scale:
+  warc_pages → write parquet → run_extraction over the parquet (the
+  ingest/extract split every real crawl pipeline makes anyway).
 
 Reference parity note: the reference (pierotech/pdf-to-text,
 src/main.ts:136-149) receives one uploaded file per request; WARC is the

@@ -150,30 +150,6 @@ def test_resume_with_different_n_buckets_is_loud(spark, pages, tmp_path):
         run_resumable_extraction(spark, pages, table, n_buckets=32)
 
 
-def test_num_partitions_without_payload_shuffle_is_loud(spark, tmp_path):
-    """num_partitions is consumed only by the shuffle_payloads layout —
-    passing it alone used to be silently dead (r3 review)."""
-    import pytest
-
-    from pdf_to_text_spark.plans.checkpoint import run_resumable_extraction
-    from pdf_to_text_spark.sources.pages import pages_df
-
-    with pytest.raises(ValueError, match="num_partitions"):
-        run_resumable_extraction(
-            spark, pages_df(spark, 10), str(tmp_path / "t"), num_partitions=4
-        )
-
-
-def test_run_extraction_num_partitions_alone_is_loud(spark):
-    """Same guard as run_resumable_extraction, now at the shared layer
-    (r6 review: bench.py was passing a silently dead num_partitions)."""
-    from pdf_to_text_spark.operators.extraction import run_extraction
-    from pdf_to_text_spark.sources.pages import pages_df
-
-    with pytest.raises(ValueError, match="num_partitions"):
-        run_extraction(pages_df(spark, 10), num_partitions=4)
-
-
 def test_commit_conflict_across_moduli_is_loud(tmp_path):
     """Bucket ids only compare within one modulus: a 64-bucket writer's
     wave [32..63] shows no id clash against a 32-bucket writer's
@@ -186,3 +162,48 @@ def test_commit_conflict_across_moduli_is_loud(tmp_path):
     b = ManifestTable(str(tmp_path / "t"))
     with pytest.raises(ConcurrentCommitError, match="n_buckets=64"):
         b.commit([32, 33], ["fb"], [], n_buckets=64)
+
+
+def test_extraction_plans_launch_no_jobs(spark, pages, tmp_path, monkeypatch):
+    """run_extraction, and each checkpoint wave's plan, must stay lazy: no
+    Spark job from the start of planning until the wave's write. An eager
+    driver-side job there puts a serial stage in front of every kernel
+    stage."""
+    from pdf_to_text_spark.operators.extraction import dup_url_stats, run_extraction
+    from pdf_to_text_spark.plans import checkpoint
+
+    sc = spark.sparkContext
+
+    def jobs(group):
+        # the status store is fed asynchronously by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        sc.setJobGroup("plan", "run_extraction must launch no job")
+        run_extraction(pages)
+        run_extraction(pages, dedup=False)
+        assert jobs("plan") == 0
+        dup_url_stats(pages).collect()  # an eager job is seen
+        assert jobs("plan") > 0
+
+        per_wave = []
+        extract, write_wave = checkpoint.run_extraction, checkpoint._write_wave
+
+        def planned_extract(*args, **kwargs):
+            sc.setJobGroup(f"wave{len(per_wave)}", "wave plan")
+            return extract(*args, **kwargs)
+
+        def counted_write(extracted, dest):
+            per_wave.append(jobs(f"wave{len(per_wave)}"))
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            return write_wave(extracted, dest)
+
+        monkeypatch.setattr(checkpoint, "run_extraction", planned_extract)
+        monkeypatch.setattr(checkpoint, "_write_wave", counted_write)
+        run_resumable_extraction(
+            spark, pages, str(tmp_path / "t"), buckets_per_commit=16
+        )
+        assert per_wave == [0, 0]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -1,10 +1,9 @@
 """The mega-doc hash-skew knob must actually exist (r6 review): before
 r6 the generator only CLAIMED its mega urls concentrated into 2 url-hash
 buckets — a shared path prefix does not constrain pmod(xxhash64(url), N)
-and they spread uniformly, so every salted-repartition skew claim was
-vacuous. Pinned here: the driver-side hash mirror is bit-identical to
-the JVM expression, the mega urls really land in MEGA_BUCKETS, and the
-salt spreads them across many shuffle partitions."""
+and they spread uniformly, so every bucket-skew claim was vacuous.
+Pinned here: the driver-side hash mirror is bit-identical to the JVM
+expression and the mega urls really land in MEGA_BUCKETS."""
 
 from pyspark.sql import functions as F
 
@@ -64,20 +63,3 @@ def test_mega_urls_concentrate_into_two_buckets():
     i = _mega_ids()[0]
     url, *_ = _row_payload(i)
     assert bucket_of(url, MEGA_BUCKET_MOD) == MEGA_BUCKETS[(i // MEGA_EVERY) % 2]
-
-
-def test_salt_spreads_mega_buckets(spark):
-    """salted_repartition must fan each heavy bucket over multiple
-    shuffle partitions — that's the whole point of the knob."""
-    from pdf_to_text_spark.plans.layout import salted_repartition, with_bucket
-
-    urls = [(u,) for _, u in _mega_urls()]
-    df = with_bucket(spark.createDataFrame(urls * 4, "url string"))
-    parts = (
-        salted_repartition(df, 16)
-        .withColumn("pid", F.spark_partition_id())
-        .select("pid")
-        .distinct()
-        .count()
-    )
-    assert parts > 2, "salting left the two heavy buckets on two partitions"

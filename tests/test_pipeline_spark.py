@@ -267,9 +267,9 @@ def test_as_of_join_semantics(spark):
 
 
 def test_local1_equals_local4(spark, pages):
-    """Layout independence: scan-split mapping and the salted-repartition
-    path must produce identical results."""
-    a = run_extraction(pages, shuffle_payloads=True, num_partitions=13)
+    """Layout independence: the result must not depend on how the input
+    is split into kernel tasks."""
+    a = run_extraction(pages.repartition(13))
     b = run_extraction(pages)
     ha = a.select("url", "extracted_text", "parse_status").exceptAll(
         b.select("url", "extracted_text", "parse_status")
@@ -334,23 +334,24 @@ def test_null_url_rows_extract_not_crash(spark):
     assert rows[0]["parse_status"] == "ok" and rows[0]["n_chars"] > 100
 
 
-# ── dedup strategies (round 4: broadcast prefilter vs window) ───────────────
+# ── keep-newest-per-url inside run_extraction ───────────────────────────────
 
 
-def test_dedup_strategies_agree_on_corpus(spark, pages):
-    """auto (→prefilter on this corpus) and window must produce the same
-    deduped relation — same urls, same surviving warc_ts, same text."""
-    cols = ["url", "warc_ts", "extracted_text", "parse_status"]
+def test_dedup_matches_window_oracle(spark, pages):
+    """run_extraction keeps the newest crawl per url AFTER the kernel; it
+    must equal extracting the window-deduped pages — same urls, same
+    surviving warc_ts, same text, pages and status, one row per url."""
+    cols = ["url", "warc_ts", "extracted_text", "n_pages", "parse_status"]
     a = run_extraction(pages).select(*cols)
-    b = run_extraction(pages, dedup_strategy="window").select(*cols)
+    b = run_extraction(dedup_latest_by_url(pages), dedup=False).select(*cols)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert a.count() == b.count()
+    assert a.count() == b.count() == pages.select("url").distinct().count()
 
 
 def test_dedup_prefilter_keeps_latest_and_null_ts(spark):
-    """Prefilter semantics vs crafted edges: newest wins; NULL warc_ts
-    loses to any real timestamp (desc-nulls-last parity); an all-NULL-ts
-    singleton url survives untouched."""
+    """Crafted edges: newest wins; NULL warc_ts loses to any real
+    timestamp (desc-nulls-last); an all-NULL-ts singleton url survives
+    untouched."""
     df = spark.createDataFrame(
         [
             ("u1", dt.datetime(2024, 1, 1), b"old", None, "en"),
@@ -361,21 +362,16 @@ def test_dedup_prefilter_keeps_latest_and_null_ts(spark):
         ],
         schema=PAGES_SCHEMA,
     )
-    out = run_extraction(df, dedup_strategy="prefilter")
-    got = {r["url"]: r["warc_ts"] for r in out.collect()}
-    assert set(got) == {"u1", "u2", "u3"}
+    rows = run_extraction(df).collect()
+    got = {r["url"]: r["warc_ts"] for r in rows}
+    assert len(rows) == len(got) == 3
     assert got["u1"] == dt.datetime(2024, 1, 3)
-    win = {r["url"]: r["warc_ts"]
-           for r in run_extraction(df, dedup_strategy="window").collect()}
-    assert got == win
+    assert got == {r["url"]: r["warc_ts"] for r in dedup_latest_by_url(df).collect()}
 
 
 def test_dedup_exact_tie_routes_to_window(spark):
-    """An exact (url, warc_ts) collision cannot be broadcast-filtered —
-    'prefilter' must refuse loudly, 'auto' must fall back to the window
-    and still keep exactly one row per url."""
-    import pytest as _pytest
-
+    """An exact (url, warc_ts) collision still keeps exactly one row per
+    url, through the window."""
     df = spark.createDataFrame(
         [
             ("u1", dt.datetime(2024, 1, 2), b"tie-a", None, "en"),
@@ -384,16 +380,14 @@ def test_dedup_exact_tie_routes_to_window(spark):
         ],
         schema=PAGES_SCHEMA,
     )
-    with _pytest.raises(ValueError, match="prefilter"):
-        run_extraction(df, dedup_strategy="prefilter")
-    out = run_extraction(df)  # auto → window fallback
-    assert out.count() == 2
+    out = run_extraction(df)
+    assert sorted(r["url"] for r in out.collect()) == ["u1", "u2"]
     assert "Window" in out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_dedup_duplicated_null_url_routes_to_window(spark):
-    """A duplicated NULL url never matches a broadcast join key, so auto
-    must use the window (which groups NULLs) — one survivor."""
+    """A duplicated NULL url groups like any other key in the window —
+    one survivor, the newest."""
     df = spark.createDataFrame(
         [
             (None, dt.datetime(2024, 1, 1), b"a", None, "en"),
@@ -403,22 +397,6 @@ def test_dedup_duplicated_null_url_routes_to_window(spark):
     )
     out = run_extraction(df).collect()
     assert len(out) == 1 and out[0]["warc_ts"] == dt.datetime(2024, 1, 2)
-
-
-def test_dedup_auto_no_dups_is_pure_map(spark):
-    """Zero duplicated urls → auto plans NO dedup at all: no Exchange,
-    no Window — the whole job is scan → kernel → project."""
-    df = spark.createDataFrame(
-        [
-            ("u1", dt.datetime(2024, 1, 1), b"a", None, "en"),
-            ("u2", dt.datetime(2024, 1, 2), b"b", None, "en"),
-        ],
-        schema=PAGES_SCHEMA,
-    )
-    out = run_extraction(df)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Window" not in plan
-    assert out.count() == 2
 
 
 def test_html_roundtrip_fused_matches_unfused(spark):

@@ -48,35 +48,20 @@ def _exchange_inputs(plan: str) -> list[str]:
 
 
 def test_no_payload_shuffle_before_kernel(pages):
-    """The 100 TB invariant, both dedup strategies: NO Exchange ever
-    carries payload bytes. On the default (auto→prefilter) path not even
-    extracted text crosses a shuffle — the only exchange is the broadcast
-    of the collected dup-url relation."""
+    """The 100 TB invariant: the kernel maps straight off the scan (no
+    Exchange between them), and no Exchange carries payload bytes — the
+    keep-newest shuffle after the kernel moves extracted rows only."""
     from pdf_to_text_spark.operators.extraction import run_extraction
 
-    plan = _plan(run_extraction(pages))  # auto → prefilter on this corpus
-    assert "MapInPandas" in plan
-    inputs = _exchange_inputs(plan)
-    for cols in inputs:
-        assert "html" not in cols and "extracted_text" not in cols, plan
-    # prefilter: the ONLY exchange is the broadcast of the tiny dup set
-    assert all("Broadcast" in m for m in re.findall(r"\) (\w*Exchange\w*)", plan)), plan
-
-    # window strategy: kernel straight off the scan, the one shuffle is
-    # AFTER the kernel and carries derived rows only (kilobytes, not MB)
-    plan_w = _plan(run_extraction(pages, dedup_strategy="window"))
-    kernel_pos = plan_w.find("MapInPandas")
-    scan_to_kernel = plan_w[plan_w.find("Scan parquet") : kernel_pos]
-    assert "Exchange" not in scan_to_kernel
-    for cols in _exchange_inputs(plan_w):
-        assert "html" not in cols, plan_w
-
-
-def test_salted_path_shuffles_by_bucket_and_salt(pages):
-    from pdf_to_text_spark.operators.extraction import run_extraction
-
-    plan = _plan(run_extraction(pages, shuffle_payloads=True, num_partitions=8))
-    assert "hashpartitioning" in plan and "xxhash64" in plan
+    plan = _plan(run_extraction(pages))
+    # the formatted plan opens with the operator tree, root first: the
+    # nodes between the kernel and the scan sit between their first
+    # mentions
+    kernel_pos, scan_pos = plan.find("MapInPandas"), plan.find("Scan parquet")
+    assert 0 <= kernel_pos < scan_pos, plan
+    assert "Exchange" not in plan[kernel_pos:scan_pos], plan
+    for cols in _exchange_inputs(plan):
+        assert "html" not in cols, plan
 
 
 def test_broadcast_join_for_small_dims(spark):
