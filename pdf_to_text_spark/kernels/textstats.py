@@ -1,16 +1,24 @@
 """Text-analysis / dedup primitives for the training-data pipeline operators.
 
 Pure Python + numpy, deterministic (fixed hash seeds), used inside
-Arrow-batched pandas UDFs. The Spark-side operators live in
+Arrow-batched Spark UDFs. The Spark-side operators live in
 pdf_to_text_spark.operators.{dedup,text_analysis}; where the math is
 SQL-expressible it is ALSO written with built-in functions so the hot path
 stays JVM-side — these kernels back only the genuinely non-SQL parts
 (MinHash/SimHash signatures, winnowing fingerprints, n-gram language ID).
+
+MinHash is one batch kernel, ``minhash_batch``: per batch of texts it
+hashes each doc's distinct shingles once, runs the n_perm universal
+hashes as row-chunked numpy matrix ops and hashes the LSH bands, so the
+Python work per shingle is one blake2b digest. ``minhash_signature`` and
+``minhash_bands`` are its one-row views; their values are the ones the
+per-shingle formula (documented on ``minhash_batch``) has always given.
 """
 
 from __future__ import annotations
 
 import hashlib
+import itertools
 import re
 import struct
 
@@ -19,6 +27,7 @@ import numpy as np
 __all__ = [
     "normalize_text",
     "word_shingles",
+    "minhash_batch",
     "minhash_signature",
     "minhash_bands",
     "simhash64",
@@ -48,15 +57,18 @@ def normalize_text(text: str) -> str:
 
 def word_shingles(text: str, k: int = 5) -> set[bytes]:
     """Set of k-word shingles (utf-8 bytes) over the normalized text."""
-    words = normalize_text(text).split()
-    if len(words) < k:
-        return {(" ".join(words)).encode()} if words else set()
-    return {" ".join(words[i : i + k]).encode() for i in range(len(words) - k + 1)}
+    return set(_shingles(text, k))
 
 
 def _stable_u64(data: bytes, seed: int = 0) -> int:
     h = hashlib.blake2b(data, digest_size=8, person=struct.pack("<q", seed))
     return struct.unpack("<Q", h.digest())[0]
+
+
+def _hasher(seed: int):
+    """blake2b-64 personalized with `seed`: `.copy()` it per message, which
+    skips the per-call key set-up of hashlib.blake2b(...)."""
+    return hashlib.blake2b(digest_size=8, person=struct.pack("<q", seed))
 
 
 def _perm_params(n_perm: int) -> tuple[np.ndarray, np.ndarray]:
@@ -68,60 +80,141 @@ def _perm_params(n_perm: int) -> tuple[np.ndarray, np.ndarray]:
 
 
 _PERM_CACHE: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+_P = np.uint64(_MERSENNE)
+_SHIFT = np.uint64(61)
+_EMPTY = np.uint64(0xFFFFFFFFFFFFFFFF)
+# shingles per (n_perm × rows) matrix: 1024 × 64 × 8 B = 512 KB per
+# temporary however long the longest text is (8192 rows ran 2× slower,
+# out of cache)
+_CHUNK_ROWS = 1024
+# lower() then this byte map == normalize_text's regex: [0-9a-z] stay,
+# every other byte (and, via encode's '?', every non-ASCII char) → space
+_ASCII_FOLD = bytes(c if 48 <= c <= 57 or 97 <= c <= 122 else 32 for c in range(256))
 
 
-def minhash_signature(text: str, n_perm: int = _N_PERM_DEFAULT, k: int = 5) -> np.ndarray:
-    """MinHash signature (uint64[n_perm]) over k-word shingles.
+def _mod_p(x: np.ndarray) -> np.ndarray:
+    """x mod 2^61-1 in place, exact for any uint64: 2^61 ≡ 1 (mod p), so
+    x ≡ (x & p) + (x >> 61) ≤ p + 7, and one conditional subtract ends it."""
+    hi = x >> _SHIFT
+    x &= _P
+    x += hi
+    np.subtract(x, _P, out=x, where=x >= _P)
+    return x
 
-    Hash family: h_i(x) = ((a_i*x mod 2^64) + b_i mod 2^64) mod p,
-    p = 2^61-1 — i.e. Broder-'97-SHAPED universal hashing whose product
-    deliberately runs in wrapping uint64 numpy arithmetic rather than
-    exact bigints (r5 review pinned the honest formula: with a,x ~ 2^61
-    the product wraps mod 2^64 BEFORE the mod-p, so the textbook
-    pairwise-independence proof does not apply verbatim). The wrap is a
-    fixed measure-preserving permutation of the product space, the
-    estimator's Jaccard tracking is pinned empirically by
-    test_minhash_sql_estimates_track_exact_jaccard and the
-    recall-vs-brute-force gates, and exact-bigint hashing here would
-    forfeit the vectorized numpy path this kernel exists for.
-    Empty text → all-ones sentinel (never collides with real content).
-    """
+
+def _shingles(text: str | None, k: int) -> list[bytes]:
+    """The k-word shingles of normalize_text(text) as utf-8 bytes, repeats
+    kept (a text of 1..k-1 words is one shingle). ``lower()`` then the
+    ASCII byte map splits exactly where normalize_text's regex does."""
+    words = (text or "").lower().encode("ascii", "replace").translate(_ASCII_FOLD).split()
+    if len(words) <= k:
+        return [b" ".join(words)] if words else []
+    return list(map(b" ".join, zip(*[words[i:] for i in range(k)])))
+
+
+def _signatures(texts, n_perm: int, k: int) -> np.ndarray:
+    """uint64[len(texts), n_perm]: every text's MinHash signature (see
+    minhash_batch). The batch's distinct-per-doc shingles form one flat
+    run of base hashes, doc after doc; each chunk of it is hashed n_perm
+    ways and min-reduced per doc segment."""
     if n_perm not in _PERM_CACHE:
         _PERM_CACHE[n_perm] = _perm_params(n_perm)
     a, b = _PERM_CACHE[n_perm]
-    shingles = word_shingles(text, k)
-    if not shingles:
-        return np.full(n_perm, np.uint64(0xFFFFFFFFFFFFFFFF), dtype=np.uint64)
-    base = np.fromiter(
-        (_stable_u64(s) % _MERSENNE for s in shingles), dtype=np.uint64, count=len(shingles)
-    )
-    # (n_shingles, n_perm) would be large; do it perm-major with broadcasting
-    vals = (base[:, None] * a[None, :] + b[None, :]) % np.uint64(_MERSENNE)
-    return vals.min(axis=0)
+    distinct = [set(_shingles(t, k)) for t in texts]
+    out = np.full((len(distinct), n_perm), _EMPTY, dtype=np.uint64)
+    new = _hasher(0).copy
+
+    def digest(s: bytes) -> bytes:
+        h = new()
+        h.update(s)
+        return h.digest()
+
+    base = _mod_p(np.frombuffer(
+        b"".join(map(digest, itertools.chain.from_iterable(distinct))), "<u8").copy())
+    owner = np.repeat(np.arange(len(distinct)), [len(d) for d in distinct])
+    for c0 in range(0, len(base), _CHUNK_ROWS):
+        # perm-major (n_perm × rows): each doc's rows are one contiguous run
+        vals = a[:, None] * base[None, c0 : c0 + _CHUNK_ROWS]  # wraps mod 2^64
+        vals += b[:, None]
+        _mod_p(vals)
+        own = owner[c0 : c0 + _CHUNK_ROWS]
+        first = np.flatnonzero(np.r_[True, own[1:] != own[:-1]])
+        docs = own[first]
+        out[docs] = np.minimum(out[docs], np.minimum.reduceat(vals, first, axis=1).T)
+    return out
 
 
-def minhash_bands(sig: np.ndarray, n_bands: int = 16) -> list[int]:
-    """LSH banding: hash each band of the signature → bucket keys.
-
-    n_perm=64, n_bands=16 → rows-per-band r=4; detection threshold
-    s ≈ (1/b)^(1/r) ≈ 0.5 Jaccard. n_perm must divide evenly into the
-    bands — a remainder would silently drop the trailing permutations
-    from every bucket key, degrading recall below the threshold math
-    above with no signal (r6 review).
-    """
-    n_perm = len(sig)
+def _rows_per_band(n_perm: int, n_bands: int) -> int:
+    # a remainder would silently drop the trailing permutations from every
+    # bucket key, degrading recall below the banding threshold math
     if n_perm % n_bands:
         raise ValueError(
             f"minhash_bands: n_perm={n_perm} is not a multiple of "
             f"n_bands={n_bands}; {n_perm % n_bands} trailing permutations "
             f"would never influence any bucket"
         )
-    r = n_perm // n_bands
+    return n_perm // n_bands
+
+
+def _band_keys(sigs: np.ndarray, n_bands: int) -> np.ndarray:
+    """int64[n, n_bands]: band b of row i hashes the bytes of
+    sigs[i, b*r:(b+1)*r] with blake2b personalized by b+1, top bit cleared."""
+    n, n_perm = sigs.shape
+    width = _rows_per_band(n_perm, n_bands) * sigs.itemsize
+    raw = np.ascontiguousarray(sigs).tobytes()
+    news = [_hasher(bi + 1).copy for bi in range(n_bands)]
     out = []
-    for bi in range(n_bands):
-        band = sig[bi * r : (bi + 1) * r].tobytes()
-        out.append(_stable_u64(band, seed=bi + 1) & 0x7FFFFFFFFFFFFFFF)
-    return out
+    for i in range(n):
+        row = i * n_bands * width
+        for bi, new in enumerate(news):
+            h = new()
+            h.update(raw[row + bi * width : row + (bi + 1) * width])
+            out.append(h.digest())
+    keys = np.frombuffer(b"".join(out), "<u8").reshape(n, n_bands)
+    return (keys & np.uint64(0x7FFFFFFFFFFFFFFF)).astype(np.int64)
+
+
+def minhash_batch(
+    texts, n_perm: int = _N_PERM_DEFAULT, n_bands: int = 16, k: int = 5
+) -> tuple[np.ndarray, np.ndarray]:
+    """MinHash signatures and LSH band keys for a batch of texts →
+    (uint64[n, n_perm], int64[n, n_bands]); None reads as "".
+
+    Shingles: the k-word windows of normalize_text(t) (a text of fewer
+    words is one shingle), each hashed once per doc to
+    x = blake2b-64(shingle, person=0) mod p, p = 2^61-1.
+
+    Hash family: h_i(x) = ((a_i*x mod 2^64) + b_i mod 2^64) mod p —
+    Broder-'97-SHAPED universal hashing whose product deliberately runs
+    in wrapping uint64 arithmetic rather than exact bigints: with
+    a, x ~ 2^61 the product wraps mod 2^64 BEFORE the mod-p, so the
+    textbook pairwise-independence proof does not apply verbatim. The
+    wrap is a fixed measure-preserving permutation of the product space;
+    the estimator's Jaccard tracking is pinned empirically by
+    test_minhash_sql_estimates_track_exact_jaccard and the
+    recall-vs-brute-force gates. Each mod p is the exact Mersenne fold
+    (_mod_p), not a uint64 `%`. A text without shingles gets the
+    all-ones sentinel, which never collides with real content.
+
+    Bands: n_perm/n_bands rows per band (64/16 → r=4, detection threshold
+    s ≈ (1/b)^(1/r) ≈ 0.5 Jaccard); n_perm must divide evenly into the
+    bands, or it raises ValueError before any hashing.
+    """
+    _rows_per_band(n_perm, n_bands)
+    sigs = _signatures(texts, n_perm, k)
+    return sigs, _band_keys(sigs, n_bands)
+
+
+def minhash_signature(text: str, n_perm: int = _N_PERM_DEFAULT, k: int = 5) -> np.ndarray:
+    """uint64[n_perm] MinHash signature of one text: row 0 of
+    minhash_batch([text])'s signatures."""
+    return _signatures([text], n_perm, k)[0]
+
+
+def minhash_bands(sig: np.ndarray, n_bands: int = 16) -> list[int]:
+    """LSH band keys of one signature (minhash_batch's band rule); raises
+    ValueError when n_bands does not divide len(sig)."""
+    return _band_keys(np.asarray(sig, np.uint64)[None, :], n_bands)[0].tolist()
 
 
 def simhash64(text: str) -> int:

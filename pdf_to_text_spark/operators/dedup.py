@@ -4,9 +4,10 @@ Six dedup families, each with the scale-path layout a 100 TB run needs:
 
   * exact            — md5(normalized text) groupBy; one shuffle keyed by
                        fingerprint, map-side partial agg
-  * minhash_lsh      — signature (Arrow batch kernel, vectorized) → explode LSH
-                       bands → bucket-join candidates → signature-estimate
-                       verify; pair space is per-bucket, never global
+  * minhash_lsh      — signature (kernels.textstats.minhash_batch, one call
+                       per Arrow batch) → explode LSH bands → bucket-join
+                       candidates → signature-estimate verify; pair space
+                       is per-bucket, never global
   * simhash          — 64-bit simhash, hamming≤k via the 4-band exact-match
                        pigeonhole trick (any pair at distance ≤3 shares at
                        least one of 4 16-bit bands verbatim)
@@ -20,6 +21,14 @@ Six dedup families, each with the scale-path layout a 100 TB run needs:
                        (strip_duplicate_substrings; plus the line-granular
                        strip_duplicate_lines)
 
+dedup_corpus, the keep-list the curation stage runs, composes exact and
+minhash_lsh as one lazy linear plan: one read of the text, one kernel
+pass, three keyed shuffles, no persist and no join. It folds each LSH
+bucket in place instead of forming the bucket self-join's pairs; the
+pairs operators (minhash_dedup_pairs and friends) keep the join form for
+callers that want the pairs themselves. Both verify with the one
+signature estimate, _sig_estimate.
+
 At bench scale (sf0.1: 5k docs) all run comfortably; at 100 TB exact and
 minhash_lsh are the production paths (linear shuffles), ngram_jaccard is
 the sampled audit, embedding-cosine runs behind the LSH bucketing in
@@ -30,7 +39,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 
@@ -75,63 +83,66 @@ def dedup_exact(documents: DataFrame) -> DataFrame:
 
 # ── MinHash + LSH ────────────────────────────────────────────────────────────
 
-_SIG_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("sig", T.ArrayType(T.LongType())),
-        T.StructField("bands", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def minhash_signatures(documents: DataFrame, n_perm: int = 64, n_bands: int = 16) -> DataFrame:
-    """doc_id → minhash signature + LSH band keys (Arrow-native batches).
-
-    r7: mapInArrow instead of mapInPandas — the signatures land in one
-    (n × n_perm) int64 matrix per batch and become Arrow ListArrays via
-    offsets over the flat buffer (guide §4.2: re-slice, don't build
-    per-row Python lists), skipping the pandas object-column round-trip
-    that cost ~15% of the stage. Values are bit-identical (signed store
-    x−2^63 == flip the top bit and reinterpret; digest-verified)."""
+def _minhash_batches(n_perm: int, n_bands: int, extra: tuple[str, ...] = ()):
+    """The one mapInArrow body for MinHash: (doc_id, *extra, text)
+    batches → (doc_id, *extra, sig, bands), one textstats.minhash_batch
+    call per Arrow batch. doc_id is widened to long (as the old pandas
+    path silently did), `extra` columns pass through as they are. Both
+    matrices become Arrow ListArrays via offsets over their flat buffer —
+    no per-row Python lists. sig is stored signed: x − 2^63 == the top
+    bit flipped, reinterpreted, so the bits are the kernel's."""
+    keep = ("doc_id", *extra)
 
     def gen(batches):
         import numpy as np
         import pyarrow as pa
 
-        from ..kernels.textstats import minhash_bands, minhash_signature
+        from ..kernels.textstats import minhash_batch
+
+        def list_arr(mat):
+            n, width = mat.shape
+            offs = pa.array(np.arange(0, (n + 1) * width, width, dtype=np.int32))
+            return pa.ListArray.from_arrays(offs, pa.array(mat.reshape(-1), type=pa.int64()))
 
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
+            if rb.num_rows == 0:
                 continue
-            texts = rb.column(rb.schema.get_field_index("text")).to_pylist()
-            ids = rb.column(rb.schema.get_field_index("doc_id"))
-            if ids.type != pa.int64():  # widen int32 etc. like the old
-                ids = ids.cast(pa.int64())  # pandas path silently did
-            sig_mat = np.empty((n, n_perm), dtype=np.int64)
-            band_mat = np.empty((n, n_bands), dtype=np.int64)
-            for i, t in enumerate(texts):
-                s = minhash_signature(t or "", n_perm=n_perm)
-                # store as signed: x - 2^63 == top-bit flip reinterpreted
-                sig_mat[i] = (s ^ np.uint64(1 << 63)).view(np.int64)
-                band_mat[i] = minhash_bands(s, n_bands=n_bands)
-
-            def list_arr(mat, width):
-                vals = pa.array(mat.reshape(-1), type=pa.int64())
-                offs = pa.array(
-                    np.arange(0, (n + 1) * width, width, dtype=np.int32)
-                )
-                return pa.ListArray.from_arrays(offs, vals)
-
+            sigs, bands = minhash_batch(
+                rb.column(rb.schema.get_field_index("text")).to_pylist(), n_perm, n_bands
+            )
+            cols = [rb.column(rb.schema.get_field_index(c)) for c in keep]
+            cols[0] = cols[0].cast(pa.int64())
             yield pa.RecordBatch.from_arrays(
-                [ids, list_arr(sig_mat, n_perm), list_arr(band_mat, n_bands)],
-                ["doc_id", "sig", "bands"],
+                [*cols, list_arr((sigs ^ np.uint64(1 << 63)).view(np.int64)), list_arr(bands)],
+                [*keep, "sig", "bands"],
             )
 
+    return gen
+
+
+def minhash_signatures(documents: DataFrame, n_perm: int = 64, n_bands: int = 16) -> DataFrame:
+    """doc_id → minhash signature + LSH band keys: one batched kernel
+    call per Arrow batch (_minhash_batches, shared with dedup_corpus), the
+    signatures bit-identical to kernels.textstats.minhash_signature."""
     from ..plans.layout import spread_small_scan
 
     base = spread_small_scan(documents.select("doc_id", "text"))
-    return base.mapInArrow(gen, schema=_SIG_SCHEMA)
+    return base.mapInArrow(
+        _minhash_batches(n_perm, n_bands),
+        schema="doc_id long, sig array<long>, bands array<long>",
+    )
+
+
+def _sig_estimate(sig_a, sig_b):
+    """round(fraction of equal signature positions, 4): THE signature
+    Jaccard estimate, shared by the LSH pair verify and dedup_corpus's
+    bucket fold so the two paths cannot drift."""
+    est = F.aggregate(
+        F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    ) / F.size(sig_a)
+    return F.round(est, 4)
 
 
 # Hot-bucket guard for every LSH band self-join (VERDICT r2 "what's
@@ -265,15 +276,10 @@ def _verify_candidate_pairs(sigs: DataFrame, threshold: float,
     pairs = minhash_candidate_pairs(sigs, max_bucket)
     sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.size("sig_a")
     return (
         pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .withColumn("est_jaccard", F.round(est, 4))
+        .withColumn("est_jaccard", _sig_estimate(F.col("sig_a"), F.col("sig_b")))
         .where(F.col("est_jaccard") >= threshold)
         .select("doc_a", "doc_b", "est_jaccard")
     )
@@ -316,54 +322,98 @@ def dedup_corpus(
     n_bands: int = 16,
     max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
-    """Full corpus dedup pass → (doc_id, keep, reason).
+    """Full corpus dedup pass → (doc_id, keep, reason), one row per doc.
 
-    Stage 1: exact dups (same normalized-text fingerprint) keep the
-    minimum doc_id per group (reason 'exact_dup' for the rest).
-    Stage 2: near-dups among the survivors via MinHash LSH candidates +
-    signature-estimate ≥ τ; the larger doc_id of each surviving pair is
-    dropped (reason 'near_dup') — the standard pair-drop policy (cf.
-    C4/RefinedWeb dedup): not transitively closed, but one bucket-local
-    pass at 100 TB instead of a connected-components iteration.
+    Verdicts: exact dups (same normalized-text fingerprint) keep the
+    minimum doc_id per group (reason 'exact_dup' for the rest). Among
+    the survivors, a doc is 'near_dup' when it shares an LSH band bucket
+    of ≤ max_bucket members with a smaller doc_id whose signature
+    estimate reaches near_threshold — the pair-drop policy of
+    minhash_dedup_pairs (cf. C4/RefinedWeb dedup): not transitively
+    closed, but one bucket-local pass instead of a connected-components
+    iteration. Everything else is 'kept'.
 
-    Every stage is a keyed shuffle (fingerprint, band bucket) — the pair
-    space never approaches corpus²."""
-    # fp fans out into BOTH sides of the tagged join (probe side and the
-    # reps groupBy) — without its own persist the full-text normalization
-    # regex + md5 scan runs twice when tagged materializes, an entire
-    # extra text scan at 100 TB (r6 review; the comment below used to
-    # claim tagged's persist alone made it run once)
-    fp = documents.select(
-        "doc_id", fingerprint_col().alias("fingerprint")
-    ).persist()
-    reps = fp.groupBy("fingerprint").agg(F.min("doc_id").alias("rep_doc_id"))
-    # persist the TINY (doc_id, fingerprint, rep_doc_id) projection at its
-    # own plan fan-out too (survivor filter + final keep-list), so the
-    # final select never re-scans text (r3 review; same persist-at-fan-out
-    # rule as the signature/shingle relations)
-    tagged = fp.join(reps, "fingerprint").persist()
-    survivors = documents.select("doc_id", "text").join(
-        tagged.where(F.col("doc_id") == F.col("rep_doc_id")).select("doc_id"),
-        "doc_id",
+    One lazy, linear plan: no persist, no join, and `text` is read once.
+      1. scan → (doc_id, fingerprint_col(), text) → one mapInArrow
+         (_minhash_batches) → (doc_id, fingerprint, sig, bands). Every
+         doc is hashed, exact dups included (they are few; hashing them
+         saves a second read of the text).
+      2. rep_doc_id = min(doc_id) over (partition by fingerprint):
+         shuffle 1, keyed by fingerprint, ~1 KB rows (sig + bands).
+      3. Each survivor explodes its n_bands (band_idx, band_hash) keys,
+         each row carrying (doc_id, rep_doc_id, sig); each exact dup
+         carries one private key (-1, doc_id), so it reaches the fold
+         alone. Shuffle 2, keyed by bucket: the signature rides all
+         n_bands rows of a survivor (~8 KB of shuffle per doc at 64/16,
+         the price of not joining the signatures back).
+      4. collect_list per bucket; a member is near when some member with
+         a smaller doc_id reaches _sig_estimate ≥ near_threshold.
+      5. Shuffle 3, keyed by doc_id, tiny rows: fold each doc's flags
+         into keep/reason.
+
+    Skew. A hot bucket (more than max_bucket members, boilerplate the
+    exact stage missed) forms no pairs, the cap of
+    minhash_candidate_pairs, but its members are still collected into
+    one row in one task: memory linear in its size (~0.5 KB each), no
+    quadratic work. Under the cap the fold is up to members² estimates
+    in that task, as the band self-join was. A hot fingerprint (many
+    exact copies of one text) puts all its rows into one window
+    partition of shuffle 1, which Spark buffers and spills past
+    spark.sql.windowExec.buffer.spill.threshold; each copy then leaves
+    with one private key, so nothing downstream is hot."""
+    sigs = documents.select(
+        "doc_id", fingerprint_col().alias("fingerprint"), "text"
+    ).mapInArrow(
+        _minhash_batches(n_perm, n_bands, extra=("fingerprint",)),
+        schema="doc_id long, fingerprint string, sig array<long>, bands array<long>",
     )
-    near_pairs = minhash_dedup_pairs(
-        survivors, threshold=near_threshold, n_perm=n_perm, n_bands=n_bands,
-        max_bucket=max_bucket,
+    tagged = sigs.withColumn(
+        "rep_doc_id", F.min("doc_id").over(Window.partitionBy("fingerprint"))
     )
-    near_drop = near_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    return (
-        tagged.join(near_drop.withColumn("_near", F.lit(1)), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("doc_id") != F.col("rep_doc_id"), F.lit(0))
-            .when(F.col("_near") == 1, F.lit(0))
-            .otherwise(F.lit(1))
-            .alias("keep"),
-            F.when(F.col("doc_id") != F.col("rep_doc_id"), F.lit("exact_dup"))
-            .when(F.col("_near") == 1, F.lit("near_dup"))
-            .otherwise(F.lit("kept"))
-            .alias("reason"),
+    keys = F.when(
+        F.col("doc_id") == F.col("rep_doc_id"),
+        F.transform("bands", lambda h, i: F.struct(i.alias("band_idx"), h.alias("band_hash"))),
+    ).otherwise(
+        F.array(F.struct(F.lit(-1).alias("band_idx"), F.col("doc_id").alias("band_hash")))
+    )
+    buckets = (
+        tagged.select(F.explode(keys).alias("key"), F.struct("doc_id", "rep_doc_id", "sig").alias("m"))
+        .groupBy("key")
+        .agg(F.collect_list("m").alias("members"))
+    )
+
+    def near(m):
+        return F.when(F.size("members") > max_bucket, F.lit(False)).otherwise(
+            F.exists(
+                "members",
+                lambda o: (o["doc_id"] < m["doc_id"])
+                & (_sig_estimate(o["sig"], m["sig"]) >= near_threshold),
+            )
         )
+
+    flags = buckets.select(
+        F.inline(
+            F.transform(
+                "members",
+                lambda m: F.struct(
+                    m["doc_id"].alias("doc_id"),
+                    m["rep_doc_id"].alias("rep_doc_id"),
+                    near(m).alias("near"),
+                ),
+            )
+        )
+    )
+    verdict = flags.groupBy("doc_id").agg(
+        F.min("rep_doc_id").alias("rep_doc_id"), F.max("near").alias("near")
+    )
+    exact = F.col("doc_id") != F.col("rep_doc_id")
+    return verdict.select(
+        "doc_id",
+        F.when(exact | F.col("near"), F.lit(0)).otherwise(F.lit(1)).alias("keep"),
+        F.when(exact, F.lit("exact_dup"))
+        .when(F.col("near"), F.lit("near_dup"))
+        .otherwise(F.lit("kept"))
+        .alias("reason"),
     )
 
 

@@ -125,6 +125,29 @@ def test_lsh_band_join_is_hash_keyed_not_cartesian(spark):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
+
+def test_dedup_corpus_is_one_linear_kernel_pass(spark):
+    """dedup_corpus reads the text once: exactly one MapInArrow (the
+    kernel runs once per doc), no cached relation, no join, and `text`
+    never crosses an Exchange (fingerprint window, bucket and doc_id
+    shuffles only)."""
+    import os
+
+    from pdf_to_text_spark.operators import dedup
+    from pdf_to_text_spark.sources.catalog import DEFAULT_SF_DIR, load
+
+    # the smallest generated table set, beside the default one
+    docs = load(spark, "documents", os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001"))
+    plan = _plan(dedup.dedup_corpus(docs))
+    tree = plan.split("\n\n", 1)[0]  # the operator tree, one line per node
+    assert len(re.findall(r"\bMapInArrow\b", tree)) == 1, plan
+    assert not re.search(r"InMemory(TableScan|Relation)", plan), plan
+    assert "Join" not in tree, plan
+    inputs = _exchange_inputs(plan)
+    assert len(inputs) == 3, plan
+    for cols in inputs:
+        assert not re.search(r"\btext#", cols), plan
+
 def test_embedding_near_pairs_lsh_is_bucket_keyed(spark):
     """The queries() entry point for embedding near-dup must be the
     LSH-bucketed plan (VERDICT r1 #3): keyed joins only — the O(n²)
