@@ -3,15 +3,15 @@
 Re-expresses the dataflow of the reference (pierotech/pdf-to-text, a
 Cloudflare-Worker per-request PDF→text→blocks→records→CSV pipeline; see
 /root/reference/src/main.ts) as a batch DataFrame job over Common-Crawl-style
-``pages`` tables, plus the relational / dedup / similarity / text-analysis
-operators a 100 TB training-data pipeline needs.
+``pages`` tables, plus the dedup / similarity / text-analysis operators a
+100 TB training-data pipeline needs.
 
 Layout:
   kernels/    pure-Python extraction kernels (no Spark imports) — the byte
               contract; also used by tools/oracle_extract.py to pin goldens
   functions/  Arrow-batched Spark UDF wrappers around the kernels
   operators/  DataFrame-level operators (extraction, records, dedup,
-              similarity, text analysis, relational)
+              similarity, text analysis)
   sources/    synthetic pages-table generator + testdata catalog
   plans/      layout (bucketing/salting) + checkpoint/resume (Iceberg-style
               manifest emulation)

@@ -141,12 +141,8 @@ def ensure_shipped(spark) -> None:
     single ship registry. getOrCreate can return an existing session,
     and re-adding a freshly-zipped engine.zip with different bytes under
     the same name makes executors fail the fetch ('file exists and does
-    not match contents') (r5 review). r6 review: build_spark and
-    __spark_entry__._ensure_shipped each kept their OWN registry keyed
-    on the same applicationId, so one app shipped two independently
-    zipped copies — the exact double-add hazard the guard exists to
-    prevent; the entry shim now delegates here. Marked shipped only on
-    SUCCESS so a failed addPyFile is retried on the next call."""
+    not match contents') (r5 review). Marked shipped only on SUCCESS so
+    a failed addPyFile is retried on the next call."""
     try:
         key = spark.sparkContext.applicationId
     except Exception:

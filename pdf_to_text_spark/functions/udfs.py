@@ -73,8 +73,8 @@ def _extract_one(html, text, is_pdf: bool) -> tuple[str, int, str, int]:
             return text, 1, "passthrough", 0
         return "", 0, "empty", 0
     try:
-        # avoid re-copying: Arrow hands us bytes already (memory-bandwidth
-        # is the scaling ceiling for this kernel — see bench/scaling.py)
+        # avoid re-copying: Arrow hands us bytes already (memory bandwidth
+        # is the scaling ceiling for this kernel)
         if not isinstance(html, bytes):
             html = bytes(html)
         if is_pdf:

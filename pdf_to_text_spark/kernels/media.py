@@ -3,10 +3,10 @@
 PNG, TIFF, BMP, GIF, baseline JPEG, WAV-PCM (incl. G.711 telephony),
 Y4M raw video and MJPEG AVI decode with
 zero external dependencies (JPEG leans on numpy — baked into the
-runtime — for the IDCT), so `media_features` / `image_resize` /
-`frame_sample` compute over REAL pixels, samples and frames instead of the
-contract-sanctioned stub (which remains the fallback for formats that
-genuinely need external libraries — MP3, MP4/MKV compressed video —
+runtime — for the IDCT), so features are computed over REAL pixels,
+samples and frames instead of the contract-sanctioned stub (which
+remains the fallback for formats that genuinely need external
+libraries — MP3, MP4/MKV compressed video —
 and is reported distinctly as decode_status='stub';
 progressive/arithmetic JPEG is RECOGNIZED and surfaces the countable
 decode_failed class instead).
@@ -58,8 +58,11 @@ scanlines, one IDAT, CRC32 per chunk.
 
 Features are 16-dim, computed from decoded content with
 order-independent integer/streaming math and rounded to 6 decimals so
-the driver's VALUES oracle reproduces them bit-identically after the
-float32 cast.
+they survive the float32 cast bit-identically.
+
+No engine path imports this module; it is exercised by its own tests
+(tests/test_media_kernel.py, tests/test_fuzz_media.py) against the
+writers in tools/make_media.py.
 """
 
 from __future__ import annotations
@@ -352,8 +355,7 @@ def _gif_lzw_decode(min_code_size: int, data: bytes, max_out: int) -> bytearray:
 
 def decode_gif(data: bytes) -> tuple[int, int, int, bytes]:
     """GIF bytes → (width, height, 3, RGB pixels) of the FIRST image
-    (animation frames beyond the first are a documented scope cut —
-    frame_sample_plan operates on declared metadata, not re-decode).
+    (animation frames beyond the first are a documented scope cut).
     Interlaced images are de-interlaced; local palettes override the
     global one. Raises MediaDecodeError outside the profile."""
     if data[:6] not in GIF_MAGICS or len(data) < 13:
@@ -1418,9 +1420,9 @@ def decode_wav_ex(data: bytes) -> tuple[int, int, int, list[int]]:
     if fmt_tag in (6, 7):  # G.711: codes expand to 16-bit linear
         table = _ALAW if fmt_tag == 6 else _ULAW
         # bits reports the DECODED sample domain (16), not the 8-bit
-        # code width: _resample_real's bits==8 branch rescales plain
-        # PCM by <<8, which would overflow the already-16-bit-linear
-        # G.711 samples into encode_wav failures (r6)
+        # code width: a caller that rescales 8-bit PCM by <<8 would
+        # overflow the already-16-bit-linear G.711 samples into
+        # encode_wav failures (r6)
         return rate, nch, 16, [table[b] for b in frames]
     if bits == 16:
         n = len(frames) // 2
@@ -1495,8 +1497,7 @@ def _r6(x: float) -> float:
     return round(x, 6)
 
 
-# FLOAT32-RECOVERY CONTRACT (shared with __spark_entry__'s feature_k
-# projection and the VALUES oracle): every feature is rounded to the
+# FLOAT32-RECOVERY CONTRACT: every feature is rounded to the
 # 1e-6 lattice AND bounded to |x| <= 2, so after the Arrow float32 cast
 # the absolute error (<= 2 * 2^-23 ≈ 2.4e-7) stays under half a lattice
 # step and round(x * 1e6) recovers the exact integer. Logs are divided

@@ -268,11 +268,7 @@ def minhash_candidate_pairs(
 
 def _verify_candidate_pairs(sigs: DataFrame, threshold: float,
                             max_bucket: int) -> DataFrame:
-    """LSH band-join candidates + signature-Jaccard-estimate verify —
-    ONE definition for both signature variants (Arrow-kernel and
-    pure-JVM), which are pinned to agree by
-    test_minhash_sql_estimates_track_exact_jaccard (r5 review: the two
-    verbatim copies could drift independently)."""
+    """LSH band-join candidates + signature-Jaccard-estimate verify."""
     pairs = minhash_candidate_pairs(sigs, max_bucket)
     sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
@@ -542,124 +538,6 @@ def near_dup_clusters(
             "(component diameter exceeds max_iter — raise it)"
         )
     return labels.select("doc_id", F.col("rep").alias("cluster_rep"))
-
-
-# ── MinHash, pure-JVM variant (no Python in the hot path) ───────────────────
-
-# 31-bit Mersenne prime: products a*h stay under 2^62, so the universal
-# hash runs in native long arithmetic inside WholeStageCodegen (the
-# Python kernel uses 2^61-1; same construction, different modulus —
-# the two variants' signatures differ but their Jaccard estimates agree,
-# pinned by test_minhash_sql_estimates_track_exact_jaccard).
-_SQL_MERSENNE = (1 << 31) - 1
-
-
-def _sql_perm_params(n_perm: int):
-    import numpy as np
-
-    rng = np.random.RandomState(0x5EED0)
-    a = rng.randint(1, _SQL_MERSENNE, size=n_perm).astype("int64")
-    b = rng.randint(0, _SQL_MERSENNE, size=n_perm).astype("int64")
-    return a, b
-
-
-def minhash_signatures_sql(
-    documents: DataFrame, n_perm: int = 64, n_bands: int = 16, k: int = 5
-) -> DataFrame:
-    """MinHash signatures computed ENTIRELY with built-in expressions:
-    word shingles (sequence+transform), xxhash64 base hash, n_perm
-    universal-hash mins as array_min over per-document gram ARRAYS —
-    fully map-side, ZERO shuffle (round 5; the previous formulation
-    exploded grams into a relation and ran 64 min-aggregates through a
-    hash-aggregate exchange — measured ~10-15% slower at sf0.1, and one
-    whole exchange worse at scale). One-permutation hashing was
-    prototyped (~2.4× faster signatures) and rejected: this corpus
-    averages ~50 shingles/doc against 64 bins, so densified-OPH
-    estimates would be mostly densification noise.
-
-    Zero Python workers — useful where a deployment forbids or lacks
-    Python on executors. MEASURED TRADE-OFF (bench.py, sf0.1): still
-    slower than the Arrow-batched numpy kernel (minhash_signatures) —
-    per-element lambda evaluation loses to vectorized numpy. The kernel
-    variant is the default recommendation at scale; this one is the
-    dependency-free alternative, same LSH downstream.
-
-    Output: (doc_id, sig array<long>, bands array<long>); docs whose
-    normalized text is empty produce no row (no shingles to hash)."""
-    words = F.filter(
-        F.split(
-            F.trim(F.regexp_replace(F.lower(F.col("text")), r"[^0-9a-z]+", " ")), " "
-        ),
-        lambda w: F.length(w) > 0,
-    )
-    # Round 4: hash word-hash WINDOWS instead of building k-gram STRINGS.
-    # The previous slice+array_join formulation materialized ~n_words
-    # 30-char gram strings per doc before hashing (measured 5-6.5 s of
-    # the 12.7 s signature time at sf0.1); hashing k word-hashes with
-    # xxhash64 is arithmetic-only and keeps identical LSH semantics (a
-    # gram's identity is its k words; F.get pads the tail grams with
-    # NULLs, which xxhash64 skips — mirroring the old shortened tail
-    # slices). Estimates still track exact shingle Jaccard
-    # (test_minhash_sql_estimates_track_exact_jaccard).
-    wh = F.transform(words, lambda w: F.xxhash64(w))
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(F.col("_wh")) - k, F.lit(0))),
-        lambda i: F.xxhash64(*[F.get(F.col("_wh"), i + F.lit(j)) for j in range(k)]),
-    )
-    a, b = _sql_perm_params(n_perm)
-    # distinct gram hashes as ONE array column per doc — the n_perm mins
-    # are then array_min(transform(...)) projections over it: map-only,
-    # whole-stage-codegen, no explode/exchange/hash-aggregate machinery
-    from ..plans.layout import spread_small_scan
-
-    base = spread_small_scan(documents.select("doc_id", "text"))
-    hashed = (
-        base.select("doc_id", wh.alias("_wh"))
-        .where(F.size("_wh") > 0)  # empty normalized text -> no row
-        .select(
-            "doc_id",
-            F.transform(
-                F.array_distinct(grams),
-                lambda g: F.pmod(g, F.lit(_SQL_MERSENNE)),
-            ).alias("_h"),
-        )
-    )
-    def _perm_min(ai: int, bi: int):
-        # single-arg lambda: a 2-arg lambda (even via default-arg
-        # binding) is treated by F.transform as (element, index)
-        return F.array_min(
-            F.transform(
-                F.col("_h"),
-                lambda h: F.pmod(
-                    F.lit(ai) * h + F.lit(bi), F.lit(_SQL_MERSENNE)
-                ),
-            )
-        )
-
-    mins = [
-        _perm_min(int(a[i]), int(b[i])).alias(f"_s{i}") for i in range(n_perm)
-    ]
-    agg = hashed.select("doc_id", *mins)
-    sig = F.array(*[F.col(f"_s{i}") for i in range(n_perm)])
-    r = n_perm // n_bands
-    bands = F.array(
-        *[
-            F.xxhash64(*[F.col(f"_s{bi * r + j}") for j in range(r)], F.lit(bi))
-            for bi in range(n_bands)
-        ]
-    )
-    return agg.select("doc_id", sig.alias("sig"), bands.alias("bands"))
-
-
-def minhash_dedup_pairs_sql(
-    documents: DataFrame, threshold: float = 0.5, n_perm: int = 64,
-    n_bands: int = 16, max_bucket: int = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """LSH candidates + signature-estimate verify over the pure-JVM
-    signatures — same banding join shape (and hot-bucket cap knob) as
-    minhash_dedup_pairs."""
-    sigs = minhash_signatures_sql(documents, n_perm, n_bands).persist()
-    return _verify_candidate_pairs(sigs, threshold, max_bucket)
 
 
 # ── SimHash ──────────────────────────────────────────────────────────────────

@@ -61,8 +61,7 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     """Shared exact-rerank tail for the three top-k surfaces: rank by
     cosine desc with vec_id asc tie-break (total-order deterministic,
     oracle-comparable). One definition so brute-force/IVF/LSH cannot
-    silently diverge on rounding or tie-break (r6 review — the same
-    one-sided-edit hazard sketches._moment_exprs closed in r5)."""
+    silently diverge on rounding or tie-break (r6 review)."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id").asc()
     )
@@ -200,8 +199,7 @@ def ivf_train(embeddings: DataFrame, dim: int, n_cells: int = 16,
     The per-cell sums are DECIMAL, not double: decimal addition is exact
     and shuffle-order-independent, so the trained centroids are
     bit-identical run to run (double sums pick up partition-order last-bit
-    noise, which flips cell assignments and breaks the VALUES oracle that
-    replays this exact recursion — tools/oracle_values.py)."""
+    noise, which flips cell assignments)."""
 
     from .text_analysis import md5_bucket
 

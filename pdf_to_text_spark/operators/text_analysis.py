@@ -5,8 +5,6 @@ ID, document fingerprinting. Everything here is expressed with BUILT-IN
 pyspark.sql.functions (JVM-side, codegen-friendly, no Python in the hot
 path); the winnowing fingerprint is the only pandas-UDF operator because
 rolling-window minima over char k-grams aren't SQL-expressible.
-
-Each operator has a DuckDB-equivalent oracle in __spark_entry__.py.
 """
 
 from __future__ import annotations
@@ -35,11 +33,11 @@ BPE_TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\f\r]"
 
 # Stopword profiles for language ID (pinned; ties broken in dict order).
 # The pinned whitespace class for every word-split / punct regex in this
-# module AND its DuckDB oracles (__spark_entry__.py): spelled out, not
-# \s, because the engines disagree on vertical tab — Java regex \s is
-# [ \t\n\x0B\f\r] while DuckDB's RE2 \s is [ \t\n\f\r], so a
-# document containing \x0B would split words differently per engine
-# (r5 review; the module rule is the RE2 ∩ Java common subset).
+# module: spelled out, not \s, because the engines disagree on vertical
+# tab — Java regex \s is [ \t\n\x0B\f\r] while RE2's \s is
+# [ \t\n\f\r], so a document containing \x0B would split words
+# differently per engine (r5 review; the module rule is the RE2 ∩ Java
+# common subset).
 _WS_RE = "[ \t\n\f\r]+"
 _PUNCT_RE = "[^A-Za-z0-9 \t\n\f\r]"
 
@@ -298,9 +296,8 @@ def text_profile(documents: DataFrame) -> DataFrame:
     )
 
 
-# PII patterns pinned to the RE2 ∩ Java-regex common subset so the Spark
-# expression and the DuckDB oracle compile the same automaton: no
-# backreferences, no lookaround.
+# PII patterns pinned to the RE2 ∩ Java-regex common subset, so the same
+# patterns compile in either engine: no backreferences, no lookaround.
 PII_PATTERNS = {
     "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
     "phone": r"\+?[0-9]{1,3}[-. (]{1,2}[0-9]{3}[-. )]{1,2}[0-9]{3}[-. ]{0,2}[0-9]{4}",
@@ -313,9 +310,9 @@ def redact_pii(documents: DataFrame) -> DataFrame:
     placeholder tokens, with per-kind hit counts for audit rollups.
 
     Pure JVM regexp passes (one per pattern, chained) — no Python in the
-    path; patterns live in the RE2∩Java subset so the DuckDB oracle runs
-    the identical regexes. At 100 TB this is a map-only stage: no
-    shuffle, pushdown-friendly, linear scans.
+    path; patterns live in the RE2∩Java subset (see PII_PATTERNS). At
+    100 TB this is a map-only stage: no shuffle, pushdown-friendly,
+    linear scans.
 
     Each kind is COUNTED on the text as it stands after the previous
     kinds' replacements (the same progression the redaction applies), so

@@ -1,4 +1,4 @@
-"""Testdata catalog: parquet readers for the driver-provided tables."""
+"""Testdata catalog: parquet readers for the sf-scaled testdata tables."""
 
 from __future__ import annotations
 

@@ -399,17 +399,16 @@ def _gate_shard_dir(n_rows: int, n_files: int, with_payload: list) -> str:
 
 
 def synthetic_warc_pages(spark, n_rows: int, n_files: int = 4):
-    """The driver-gate WARC path (VERDICT r3 #5): the deterministic
-    ``build_pages_pdf`` corpus re-ingested THROUGH the WARC walker.
+    """The deterministic ``build_pages_pdf`` corpus re-ingested THROUGH
+    the WARC walker.
 
     Rows with a payload are written as `n_files` .warc.gz shards (one
     gzip member per record, the Common Crawl layout) and read back via
-    ``warc_pages`` — so every driver run of the extraction e2e queries
-    exercises iter_warc_records/_gunzip_members/_http_payload inside a
-    CORRECTNESS-checked path. Payload-less rows (passthrough text /
-    empty) have no WARC representation by definition — they join back as
-    a unioned literal relation. Byte-identity of the WARC round trip is
-    separately pinned by tests/test_warc_source.py."""
+    ``warc_pages``, so the extraction path exercises
+    iter_warc_records/_gunzip_members/_http_payload. Payload-less rows
+    (passthrough text / empty) have no WARC representation by definition
+    — they join back as a unioned literal relation. Byte-identity of the
+    WARC round trip is separately pinned by tests/test_warc_source.py."""
     from .pages import build_pages_pdf
 
     pdf = build_pages_pdf(list(range(n_rows)))

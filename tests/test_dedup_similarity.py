@@ -113,29 +113,6 @@ def test_near_dup_clusters_transitive_closure(spark):
     assert len(out) == 4
 
 
-def test_minhash_sql_estimates_track_exact_jaccard(docs):
-    """The pure-JVM minhash (xxhash64 + 2^31-1 universal hashes, zero
-    Python workers) must find the same near-dup pairs as the kernel
-    variant and estimate k=5-shingle Jaccard within MinHash noise
-    (64 perms → σ ≈ 0.06)."""
-    from pdf_to_text_spark.kernels.textstats import jaccard, word_shingles
-
-    sql_pairs = {
-        (r["doc_a"], r["doc_b"]): r["est_jaccard"]
-        for r in dedup.minhash_dedup_pairs_sql(docs, threshold=0.5).collect()
-    }
-    assert (0, 1) in sql_pairs and (0, 4) in sql_pairs
-    assert not any(3 in p for p in sql_pairs)
-    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-    for (a, b), est in sql_pairs.items():
-        exact = jaccard(word_shingles(texts[a]), word_shingles(texts[b]))
-        assert abs(est - exact) <= 0.2, (a, b, est, exact)
-    # plan: no Python workers anywhere (fully WholeStageCodegen-able)
-    plan = dedup.minhash_signatures_sql(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan
-
-
 def test_lsh_candidates_then_exact_jaccard_composition(docs):
     """The documented 100 TB composition: minhash LSH candidate pairs →
     exact n-gram Jaccard verify (ngram_jaccard_pairs(candidates=...)).

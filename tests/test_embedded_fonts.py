@@ -454,26 +454,6 @@ def test_complete_tounicode_never_parses_program(monkeypatch):
     assert P.extract_pdf_text(pdf) == (EXPECT, 1)
 
 
-def test_seam_accepts_tuple_of_floats(spark):
-    """r6 review #4: a legacy codec returning a TUPLE of 16 floats must
-    not be mistaken for a (features, status) pair — pre-fix, every row
-    silently became decode_failed."""
-    from pdf_to_text_spark.operators.multimodal import (
-        media_features,
-        synth_media_df,
-    )
-
-    def tuple_codec(payload: bytes, kind: str):
-        return tuple(float(i) / 16 for i in range(16))
-
-    rows = media_features(
-        synth_media_df(spark, 12), decode=tuple_codec
-    ).collect()
-    ok = [r for r in rows if r.decode_status == "ok"]
-    assert len(ok) >= 10  # every non-null row
-    assert all(len(r.feature) == 16 for r in ok)
-
-
 def test_post_v1_nonbreakingspace_at_index_172():
     """Standard Mac glyph index 172 is 'nonbreakingspace' (U+00A0), not a
     second 'space' — the table used to carry the duplicate and nbsp

@@ -1,5 +1,5 @@
-"""kernels/media.py unit surface (round 6): PNG/WAV codec edges the
-round-trip tests in test_multimodal_independent.py don't reach."""
+"""kernels/media.py unit surface (round 6): codec round trips, bomb caps
+and failure classes against the independent writers in tools/make_media.py."""
 
 from __future__ import annotations
 
@@ -307,17 +307,6 @@ def test_wav_implausible_rate_rejected():
         forged = wav[:at] + struct.pack("<I", rate) + wav[at + 4 :]
         with pytest.raises(MediaDecodeError):
             decode_wav(forged)
-
-
-def test_resample_real_scales_8bit_to_full_range():
-    """r6 review #3: 8-bit input re-encoded as 16-bit must be rescaled
-    (<<8), not emitted at 1/256 amplitude."""
-    from pdf_to_text_spark.operators.multimodal import _resample_real
-
-    wav8 = make_wav(16000, 1, [-128, 0, 127], bits=8)
-    out, src_rate, n, status = _resample_real(wav8, 16000)
-    assert (src_rate, status) == (16000, "ok")
-    assert decode_wav(out)[2] == [-32768, 0, 32512] and n == 3
 
 
 def test_make_wav_8bit_out_of_range_is_loud():

@@ -226,46 +226,6 @@ def test_csv_kernel_jvm_parity_at_boundaries(spark):
     assert got == want
 
 
-def test_as_of_join_semantics(spark):
-    """as_of_join contract: most recent right row with ts ≤ left ts per
-    key; same-timestamp right rows ARE visible; no prior right row →
-    null (sentinel in the demo); later rows never leak backward."""
-    import datetime as dt
-
-    from pdf_to_text_spark.operators.relational import as_of_join
-
-    t = lambda m: dt.datetime(2024, 1, 1, 0, m)
-    left = spark.createDataFrame(
-        [(1, 100, t(5)), (1, 101, t(10)), (1, 102, t(20)), (2, 200, t(1))],
-        "user_id long, event_id long, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [(1, 900, t(10), 11.0), (1, 901, t(15), 22.0), (2, 902, t(2), 33.0)],
-        "user_id long, event_id long, ts timestamp, pv double",
-    )
-    out = {r["event_id"]: r["asof_pv"] for r in as_of_join(
-        left, right, keys=["user_id"], ts_col="ts", value_cols=["pv"],
-        order_tiebreak="event_id",
-    ).collect()}
-    assert out[100] is None      # nothing at or before 0:05
-    assert out[101] == 11.0      # same-ts right row visible (≤)
-    assert out[102] == 22.0      # latest prior wins
-    assert out[200] is None      # user 2's purchase is later
-    # the determinism contract is enforced: a tiebreak missing from
-    # either side is a loud error, not a partitioning-dependent result
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="order_tiebreak"):
-        as_of_join(left, right.drop("event_id"), keys=["user_id"],
-                   ts_col="ts", value_cols=["pv"], order_tiebreak="event_id")
-    # a left column named like an internal scratch column would be
-    # silently overwritten — loud error instead (r3 review)
-    with _pytest.raises(ValueError, match="_side"):
-        as_of_join(left.withColumn("_side", F.lit(9)), right,
-                   keys=["user_id"], ts_col="ts", value_cols=["pv"],
-                   order_tiebreak="event_id")
-
-
 def test_local1_equals_local4(spark, pages):
     """Layout independence: the result must not depend on how the input
     is split into kernel tasks."""
@@ -276,30 +236,6 @@ def test_local1_equals_local4(spark, pages):
     )
     assert ha.count() == 0
     assert a.count() == b.count()
-
-
-def test_as_of_join_null_contract(spark):
-    """ADVICE r2 #3: a right row whose VALUE is genuinely NULL must win
-    as 'the most recent right row' (attach NULL, not an older value);
-    right rows with NULL ts are dropped from the axis; left rows with
-    NULL ts get NULL asof values."""
-    from pdf_to_text_spark.operators.relational import as_of_join
-
-    left = spark.createDataFrame(
-        [(1, 10, 100), (1, 20, 101), (1, None, 102)],
-        "user_id int, ts int, event_id int",
-    )
-    right = spark.createDataFrame(
-        [(1, 5, 900, 7.0), (1, 15, 901, None), (1, None, 902, 99.0)],
-        "user_id int, ts int, event_id int, pv double",
-    )
-    out = {r["event_id"]: r["asof_pv"] for r in as_of_join(
-        left, right, keys=["user_id"], ts_col="ts", value_cols=["pv"],
-        order_tiebreak="event_id",
-    ).collect()}
-    assert out[100] == 7.0      # most recent at ts<=10 is ts=5
-    assert out[101] is None     # ts=15 row IS most recent; its NULL attaches
-    assert out[102] is None     # NULL-ts left row: nothing precedes it
 
 
 def test_json_documents_renders_null_fields(spark):

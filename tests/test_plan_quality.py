@@ -64,20 +64,6 @@ def test_no_payload_shuffle_before_kernel(pages):
         assert "html" not in cols, plan
 
 
-def test_broadcast_join_for_small_dims(spark):
-    from pdf_to_text_spark.operators.relational import top_nation_revenue
-    from pdf_to_text_spark.sources.catalog import load
-
-    sf = "/root/testdata/sf0.001"
-    plan = _plan(
-        top_nation_revenue(
-            load(spark, "orders", sf), load(spark, "customer", sf), load(spark, "nation", sf)
-        )
-    )
-    assert "BroadcastHashJoin" in plan
-    assert plan.count("BroadcastHashJoin") >= 2  # both dims broadcast
-
-
 def test_filter_pushdown_reaches_scan(spark):
     from pdf_to_text_spark.sources.catalog import load
 
@@ -177,19 +163,6 @@ def test_ngram_jaccard_candidates_path_is_keyed(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_relational_agg_plan_shape(spark):
-    """Q1 shape: filter pushed to parquet, map-side partial aggregation,
-    shuffle carries only the grouped partials (AQE wraps codegen, so we
-    assert the load-bearing plan features rather than the codegen label)."""
-    from pdf_to_text_spark.operators.relational import pricing_summary
-    from pdf_to_text_spark.sources.catalog import load
-
-    plan = _plan(pricing_summary(load(spark, "lineitem", "/root/testdata/sf0.001")))
-    assert re.search(r"PushedFilters: \[.*LessThanOrEqual\(l_shipdate", plan)
-    assert "partial_sum" in plan  # map-side combine before the exchange
-    assert plan.index("partial_sum") < plan.index("hashpartitioning")
-
-
 def test_spread_small_scan_is_adaptive(spark, monkeypatch, tmp_path):
     """spread_small_scan (r7): repartitions ONLY mid-size relations with
     KNOWN size — tiny inputs keep their plan (scheduling-bound, r6
@@ -268,19 +241,13 @@ def test_spread_small_scan_preserves_results(spark, monkeypatch, tmp_path):
 
 
 def test_merged_profile_queries_stay_single_pass(spark):
-    """The round-3 merged driver queries must keep the one-pass shapes
-    they were merged FOR: corpus_stats = one scan + one keyed Exchange
-    (the groupBy), quality_stats(+score) = map-only, zero Exchange."""
-    import __spark_entry__ as entry
-
+    """The merged quality profile must keep the one-pass shape it was
+    merged FOR: quality_stats(+score) = map-only, zero Exchange."""
     docs = spark.createDataFrame(
         [(1, "some text here", "en", "s0", 14)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    from pdf_to_text_spark.operators.sketches import corpus_stats
     from pdf_to_text_spark.operators.text_analysis import quality_profile
 
-    cs = corpus_stats(docs)._jdf.queryExecution().executedPlan().toString()
-    assert cs.count("Exchange") == 1 and "Join" not in cs
     qp = quality_profile(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in qp and "Join" not in qp

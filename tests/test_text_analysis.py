@@ -1,9 +1,9 @@
-"""Text-analysis operator semantics + multimodal plumbing + streaming."""
+"""Text-analysis operator semantics + streaming."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from pdf_to_text_spark.operators import multimodal, text_analysis
+from pdf_to_text_spark.operators import text_analysis
 
 
 @pytest.fixture(scope="module")
@@ -35,29 +35,6 @@ def test_quality_stats_and_score(docs):
     assert stats[0]["stop_hits"] >= 4
     scores = {r["doc_id"]: r["quality"] for r in text_analysis.quality_score(docs).collect()}
     assert 0 <= scores[4] < scores[0] <= 1  # stopword-less gibberish scores lower
-
-
-def test_image_resize_and_audio_resample_plumbing(spark):
-    """Resize: aspect-preserving fit into the target box, per-row status
-    for null payloads; resample plan: copy/down/up classification."""
-    media = multimodal.synth_media_df(spark, 60)
-    rs = {r["media_id"]: r.asDict() for r in
-          multimodal.image_resize(media, 224, 224).collect()}
-    assert len(rs) == 20  # every third row is an image
-    ok = [r for r in rs.values() if r["resize_status"] == "ok"]
-    assert ok and all(r["out_width"] <= 224 and r["out_height"] <= 224 for r in ok)
-    assert all(r["out_bytes"] > 0 and len(r["out_hash"]) == 32 for r in ok)
-    nulls = [r for r in rs.values() if r["resize_status"] == "null_payload"]
-    assert nulls and all(r["out_bytes"] == 0 for r in nulls)
-    # aspect ratio preserved within integer truncation
-    for r in ok:
-        assert max(r["out_width"], r["out_height"]) >= 180
-    rp = multimodal.audio_resample_plan(media, 16000).collect()
-    # synth rates cycle 8000/16000/44100 (i//3-keyed, r6 fix — the old
-    # i%3 keying pinned every row to 16000 and this asserted {"copy"}),
-    # so all three executable modes must appear
-    assert len(rp) == 20
-    assert {r["mode"] for r in rp} == {"copy", "downsample", "upsample"}
 
 
 def test_stratified_sample_per_stratum_rates(spark):
@@ -181,45 +158,6 @@ def test_winnow_fingerprints(docs):
     assert all(r["n_grams"] > 0 for r in out)
 
 
-# ── multimodal plumbing ──────────────────────────────────────────────────────
-
-
-def test_media_features_plumbing(spark):
-    media = multimodal.synth_media_df(spark, 60)
-    feats = multimodal.media_features(media)
-    rows = feats.collect()
-    assert len(rows) == 60
-    by_status = {}
-    for r in rows:
-        by_status.setdefault(r["decode_status"], 0)
-        by_status[r["decode_status"]] += 1
-    assert by_status["null_payload"] >= 1
-    # r6: real codecs — all four statuses must be present in the synth mix
-    assert by_status["stub"] >= 1 and by_status["decode_failed"] >= 1
-    ok = [r for r in rows if r["decode_status"] in ("ok", "stub")]
-    assert all(len(r["feature"]) == multimodal.FEATURE_DIM for r in ok)
-    # the float32-recovery contract (kernels/media.py): |x| <= 2
-    assert all(-2.0 <= x <= 2.0 for r in ok for x in r["feature"])
-    # determinism: same payload → same hash/feature
-    feats2 = {r["media_id"]: (r["content_hash"], r["feature"]) for r in
-              multimodal.media_features(media).collect()}
-    for r in ok:
-        assert feats2[r["media_id"]] == (r["content_hash"], r["feature"])
-
-
-def test_frame_sample_plan(spark):
-    media = multimodal.synth_media_df(spark, 30)
-    plan = multimodal.frame_sample_plan(media, every_n=10)
-    rows = plan.groupBy("media_id").agg(F.count("*").alias("n"),
-                                        F.max("frame_idx").alias("mx")).collect()
-    metas = {r["media_id"]: r["meta"]["n_frames"] for r in
-             media.where(F.col("kind") == "video").collect()}
-    for r in rows:
-        n_frames = metas[r["media_id"]]
-        assert r["n"] == (n_frames - 1) // 10 + 1
-        assert r["mx"] <= n_frames - 1
-
-
 # ── streaming ────────────────────────────────────────────────────────────────
 
 
@@ -253,62 +191,6 @@ def test_repetition_stats_keeps_null_text_docs(spark):
     got = {r["doc_id"]: r for r in repetition_stats(df).collect()}
     assert set(got) == {1, 2}
     assert got[1]["top_word_count"] == 2
-
-
-def test_media_codec_injection_seam(spark):
-    """VERDICT r3 #7: a 'real' codec injected through the seam flows
-    through the SAME batching/schema/error plumbing as the stub — decode
-    failures become per-row status, never task failures."""
-    import pandas as pd
-
-    # PIL-shaped injected codec, defined LOCALLY so cloudpickle ships it
-    # by value (a module-level def pickles as a reference to the test
-    # module, which executors cannot import) — the same constraint a real
-    # PIL wrapper closure would satisfy
-    def _fake_pil_decode(payload: bytes, kind: str) -> list:
-        if payload[:1] == b"\xff":
-            raise ValueError("corrupt image")
-        return [float(payload[i % len(payload)]) / 255.0 for i in range(16)]
-
-    def _fake_pil_resize(payload: bytes, w: int, h: int, tw: int, th: int) -> bytes:
-        return bytes([tw % 251, th % 251]) + payload[:6]
-
-    from pdf_to_text_spark.operators.multimodal import (
-        image_resize,
-        media_features,
-        synth_media_df,
-    )
-
-    media = synth_media_df(spark, 24)
-    # splice one 'corrupt' payload the fake codec refuses
-    corrupt = spark.createDataFrame(
-        [(999, "image", b"\xffcorrupt", (8, 8, None, None))],
-        schema=media.schema,
-    )
-    media = media.unionByName(corrupt)
-
-    feats = media_features(media, decode=_fake_pil_decode).toPandas()
-    ok = feats[feats["decode_status"] == "ok"]
-    assert len(ok) > 10 and all(len(f) == 16 for f in ok["feature"])
-    # injected semantics actually used (first byte / 255)
-    row = ok[ok["media_id"] == 0].iloc[0]
-    src = {r["media_id"]: bytes(r["payload"]) for r in media.collect()
-           if r["payload"] is not None}
-    assert abs(row["feature"][0] - src[0][0] / 255.0) < 1e-6
-    assert (feats[feats["media_id"] == 999]["decode_status"] == "decode_failed").all()
-    # null payloads keep their distinct status through the injected path
-    assert (feats[feats["payload_bytes"] == 0]["decode_status"] == "null_payload").all()
-
-    rs = image_resize(media, resize=_fake_pil_resize).toPandas()
-    ok_rs = rs[rs["resize_status"] == "ok"]
-    assert len(ok_rs) > 3
-    r0 = ok_rs.iloc[0]
-    assert r0["out_bytes"] == 8  # 2 marker bytes + 6 payload bytes
-    # stub path untouched by the seam (default arg)
-    stub = media_features(media).toPandas()
-    # r6: the default path now declares non-PNG/WAV payloads as 'stub'
-    # (the 0xff-leading splice is not a recognized container)
-    assert (stub[stub["media_id"] == 999]["decode_status"] == "stub").all()
 
 
 def test_null_key_rows_stay_sampleable(spark):
