@@ -116,7 +116,7 @@ def build_spark(app_name: str = "pdf_to_text_spark", master: str | None = None,
         # non-monotonic across fall-back, so the stateful dedup's
         # newer-than compare (streaming/stateful.py) could drop a strictly
         # newer crawl. Pin the session to UTC — instants stay monotonic
-        # everywhere and parquet/DuckDB comparisons are machine-independent
+        # everywhere and parquet comparisons are machine-independent
         # (r6 review)
         .config("spark.sql.session.timeZone", "UTC")
         # megabyte-scale binary rows: keep Arrow batches small (SURVEY.md §4)

@@ -150,9 +150,9 @@ def wrap_documents_as_pages(documents: DataFrame) -> DataFrame:
     """documents(doc_id, text, lang) → pages rows whose html wraps the text
     in realistic boilerplate (nav/header/footer link farms + one article).
 
-    Used by the flagship round-trip check: the extraction pipeline must
-    strip the boilerplate and recover `text` byte-identically, which gives
-    the extractor a DuckDB-checkable oracle (SELECT doc_id, text)."""
+    Used by the round-trip check: the extraction pipeline must strip the
+    boilerplate and recover `text` byte-identically, so the input
+    documents themselves are the extractor's oracle."""
     import datetime as _dt
 
     import pandas as pd

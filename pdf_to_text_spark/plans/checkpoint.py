@@ -199,7 +199,7 @@ def run_resumable_extraction(
     it is not pushed into the scan (`PushedFilters: []`): every wave
     lists and reads every input file, and the filter drops the other
     buckets' rows after the scan. Pruning at the scan needs the input
-    laid out by bucket (ROADMAP item 3).
+    laid out by bucket (ROADMAP item 5).
     """
     mt = ManifestTable(table_path)
     # A resume with a different modulus reinterprets old bucket ids under

@@ -1,9 +1,13 @@
 """PDF kernel unit tests — golden parity + structural edge cases."""
 
+import codecs
 import pathlib
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
+from pdf_to_text_spark.kernels import pdf as _pdf
 from pdf_to_text_spark.kernels.pdf import (
     PDFEncryptedError,
     PDFParseError,
@@ -1296,3 +1300,194 @@ def test_hash_2b_cache_is_lru_not_fifo():
     c.hash_2b(b"overflow", b"saltsalt", b"", 5)
     assert hot_key in c._HASH2B_CACHE
     c._HASH2B_CACHE.clear()
+
+
+# ── content-stream fast paths: fused text line, charmap decode ──────────────
+
+_NUMS = [b"0", b"-0", b"-0.0", b".5", b"3.", b"+2", b"-14", b"12", b"-1.5", b"72"]
+_OPS = [b"Td", b"TD", b"T*", b"Tj", b"TJ", b"'", b'"', b"BT", b"ET", b"/F1 12 Tf"]
+_STRS = [
+    b"(a)", b"()", b"(a b)", b"(\\()", b"(\\))", b"(\\\\)", b"(\\101\\7x)",
+    b"(a\\\nb)", b"(a\\\r\nb)", b"(x(y)z)", b"(\\n\\t)",
+]
+_OTHER = [b"<41 42>", b"<4>", b"[", b"]", b"[(a) -20 (b)]"]
+_WS = [b" ", b"\n", b"\r\n", b"\t", b"  ", b"\x0c", b"\r"]
+# a token boundary that needs no whitespace: a delimiter on either side
+_OPENS, _CLOSES = b"(<[]/", b")>]["
+
+
+def _with_comments(tokens: list[bytes], seps: list[bytes]) -> bytes:
+    """The same stream with `%c\\n` after every token: the tokenizer folds
+    comments into whitespace, but the fused line match allows whitespace
+    only, so this stream takes the per-token branches."""
+    return b"".join(t + b"%c\n" + s for t, s in zip(tokens, seps))
+
+
+def _stream(tokens: list[bytes], seps: list[bytes]) -> bytes:
+    return b"".join(t + s for t, s in zip(tokens, seps))
+
+
+@st.composite
+def _token_streams(draw):
+    tokens = draw(st.lists(
+        st.sampled_from(_NUMS + _OPS + _STRS + _OTHER)
+        | st.sampled_from([b"0 -14 Td", b"0 -14 Td (line) Tj"]),
+        max_size=40,
+    ))
+    seps = []
+    for i, t in enumerate(tokens):
+        nxt = tokens[i + 1] if i + 1 < len(tokens) else b""
+        glue_ok = t[-1:] in (b")", b">", b"]", b"[") or nxt[:1] in (
+            b"(", b"<", b"[", b"]", b"/")
+        seps.append(draw(st.sampled_from(_WS + ([b""] if glue_ok else []))))
+    return tokens, seps
+
+
+@settings(max_examples=400, deadline=2000)
+@given(_token_streams())
+def test_fused_line_match_is_token_equivalent(ts):
+    tokens, seps = ts
+    assert _pdf._extract_page_text(_stream(tokens, seps)) == (
+        _pdf._extract_page_text(_with_comments(tokens, seps))
+    )
+
+
+@pytest.mark.parametrize("stream, want", [
+    (b"BT (a) Tj 0 -14 Td(x)Tj ET", "a\nx"),
+    (b"BT (a) Tj 0 -14 Td (x) Tjx ET", "a"),
+    (b"BT (a) Tj 0 -14 TdX (x) Tj ET", "ax"),
+    (b"BT (a) Tj 0 -14 Td", "a"),
+    (b"BT (a) Tj 0 -14 Td (x) Tj", "a\nx"),
+    (b"BT (a) Tj [ 0 -14 Td (x) Tj ] TJ ET", "a\nx"),
+    (b"BT (a) Tj [ 0 -14 Td (x) Tj (y) TJ ET", "a\nx"),  # Td closed the [
+    (b"BT (a) Tj 0 -0.0 Td (x) Tj 0 -0 Td (y) Tj ET", "axy"),
+    (b"BT (a) Tj 0 -.5 Td (\\(x\\)\\101) Tj ET", "a\n(x)A"),
+    (b"BT (a) Tj 1 0 Td (x)\nTj ET", "ax"),
+])
+def test_fused_line_fixed_cases(stream, want):
+    tokens = stream.split(b" ")
+    assert _pdf._extract_page_text(stream) == want
+    assert _pdf._extract_page_text(
+        _with_comments(tokens, [b" "] * len(tokens))
+    ) == want
+
+
+def test_fused_line_under_unsupported_cmap_raises():
+    fonts = {"F1": _pdf._UnsupportedCMap("Hojo-EUC-H")}
+    with pytest.raises(_pdf.PDFUnsupportedCMapError):
+        _pdf._extract_page_text(b"BT /F1 12 Tf 0 -14 Td (x) Tj ET", fonts)
+
+
+def test_fused_line_is_one_match_per_shown_line(monkeypatch):
+    """A 100-line `0 -14 Td (…) Tj` page takes one tokenizer match per
+    shown line, not one per token (~500)."""
+    from tools.make_pdf import content_stream_for_lines
+
+    calls = []
+    real = _pdf._CTOK_RE
+
+    class Counting:
+        def match(self, s, pos):
+            calls.append(pos)
+            return real.match(s, pos)
+
+    page = content_stream_for_lines([f"line {i} (x)" for i in range(100)])
+    want = "\n".join(f"line {i} (x)" for i in range(100))
+    monkeypatch.setattr(_pdf, "_CTOK_RE", Counting())
+    assert _pdf._extract_page_text(page) == want
+    assert len(calls) <= 110
+
+
+@pytest.mark.parametrize("name", [
+    "WinAnsiEncoding", "MacRomanEncoding", "StandardEncoding", "Symbol",
+    "ZapfDingbats",
+])
+def test_base_encoding_charmap_decode_equals_translate(name):
+    tr = _pdf._base_encoding_trans(name)
+    codes = bytes(range(256))
+    want = codes.decode("latin-1").translate(tr.table)
+    # Symbol blanks its extender codes to '': no one-char-per-code table
+    assert (tr.chars is None) == (name == "Symbol")
+    if tr.chars is not None:
+        assert codecs.charmap_decode(codes, None, tr.chars)[0] == want
+    shown = b"BT /F1 1 Tf <" + codes.hex().encode() + b"> Tj ET"
+    assert _pdf._extract_page_text(shown, {"F1": tr}) == want
+
+
+# ── object lexer: outputs pinned from the per-byte lexer it replaced ─────────
+
+def _plain(obj):
+    if isinstance(obj, _pdf._Ref):
+        return ("R", obj.num, obj.gen)
+    if isinstance(obj, _pdf._Name):
+        return ("/", str(obj))
+    if isinstance(obj, dict):
+        return {k: _plain(v) for k, v in obj.items()}
+    if isinstance(obj, list):
+        return [_plain(v) for v in obj]
+    return obj
+
+
+@pytest.mark.parametrize("data, name, pos", [
+    (b"/A#41", "AA", 5),
+    (b"/A#4", "A#4", 4),
+    (b"/A#zz", "A#zz", 5),
+    (b"/A#", "A#", 3),
+    (b"/A#1 ", "A\x01", 5),  # the '#xx' slice takes in the trailing space
+    (b"/A#1 /B", "A\x01", 5),
+    (b"/A#4 1", "A\x041", 6),
+    (b"/A#-1 ", "A#-1", 5),
+    (b"/#20x", " x", 5),
+    (b"/Plain(", "Plain", 6),
+])
+def test_lexer_parse_name_parity(data, name, pos):
+    lx = _pdf._Lexer(data)
+    got = lx._parse_name()
+    assert (type(got), got, lx.pos) == (_pdf._Name, name, pos)
+
+
+@pytest.mark.parametrize("data, obj, pos", [
+    (b"<</A 1 %c\n/B [1 %c\n 2]>>", {"A": 1, "B": [1, 2]}, 24),
+    (b"[1 %comment ] 2\n 3 %x\r 4]", [1, 3, 4], 25),
+    (b"[/A%x\n/B]", [("/", "A"), ("/", "B")], 9),
+    (b"<< /A 1 >> %tail", {"A": 1}, 10),
+    (b"12 %c", 12, 2),
+    (b"12 0 %c", 12, 2),
+    (b"true%x", True, 4),
+    (b"1 %g\n0 %r\nR", ("R", 1, 0), 11),
+    (b"1%g\n0%r\nR ", ("R", 1, 0), 9),
+    (b"5 0 %x\nR]", ("R", 5, 0), 8),
+    (b"[5 %a\n 0 %b\n R 7]", [("R", 5, 0), 7], 17),
+    (b"<</P 3 0 %c\nR>>", {"P": ("R", 3, 0)}, 15),
+    (b"7 %c\n8 %c\nobj", 7, 1),
+])
+def test_lexer_comments_and_refs_parity(data, obj, pos):
+    lx = _pdf._Lexer(data)
+    assert (_plain(lx.parse_object()), lx.pos) == (obj, pos)
+
+
+@pytest.mark.parametrize("data, msg, pos", [
+    (b"[1 2 %c", "unterminated array", 7),
+    (b"%only", "unexpected EOF while parsing object", 5),
+    (b"<</K %a\r\n/V%b\n(s)>>", "dict key is not a name at 17", 17),
+])
+def test_lexer_comment_at_eof_parity(data, msg, pos):
+    lx = _pdf._Lexer(data)
+    with pytest.raises(PDFParseError, match=msg):
+        lx.parse_object()
+    assert lx.pos == pos
+
+
+def test_lexer_tokens_and_past_end_cursor_parity():
+    lx = _pdf._Lexer(b"abc", 5)
+    lx._skip_ws()
+    assert lx.pos == 5  # a past-the-end cursor is left where it is
+    lx = _pdf._Lexer(b"  %c\n foo bar")
+    assert (lx.read_token(), lx.pos) == (b"foo", 9)
+    for data, msg, pos in [(b"%c", "unexpected EOF", 2),
+                           (b"  ", "unexpected EOF", 2),
+                           (b"  /x", "unexpected delimiter at 2", 2)]:
+        lx = _pdf._Lexer(data)
+        with pytest.raises(PDFParseError, match=msg):
+            lx.read_token()
+        assert lx.pos == pos
