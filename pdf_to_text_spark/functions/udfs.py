@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import ARROW_MAX_BATCH_BYTES
-from ..kernels.blocks import parse_records, records_to_pretty_json, segment_blocks
+from ..kernels.blocks import doc_artifacts, segment_blocks
 from ..kernels.html import HTMLParseFailed, extract_html_text
 from ..kernels.pdf import (
     PDFEncryptedError,
@@ -143,7 +143,7 @@ def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield drain()
 
 
-# ── segmentation / record parsing (pandas UDFs) ─────────────────────────────
+# ── segmentation / per-document artifacts ───────────────────────────────────
 
 
 @F.pandas_udf(T.ArrayType(T.StringType()))
@@ -152,36 +152,23 @@ def segment_blocks_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: segment_blocks(t) if t else [])
 
 
-RECORD_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("SucursalName", T.StringType()),
-            T.StructField("EAN", T.StringType()),
-            T.StructField("CantidadVendida", T.StringType()),
-            T.StructField("Importe", T.StringType()),
-        ]
-    )
+DOC_ARTIFACTS_SCHEMA = (
+    "url string, records array<struct<chunk_id int, block_pos int, record_pos int, "
+    "SucursalName string, EAN string, CantidadVendida string, Importe string>>, "
+    "csv string, json string"
 )
 
 
-@F.pandas_udf(RECORD_SCHEMA)
-def parse_records_udf(blocks: pd.Series) -> pd.Series:
-    """block text → sale records (deterministic LLM stand-in, SURVEY §2 #9)."""
-    return blocks.map(lambda b: parse_records(b) if b else [])
-
-
-@F.pandas_udf(T.StringType())
-def pretty_json_udf(records_json: pd.Series) -> pd.Series:
-    """Compact JSON array string → JSON.stringify(…, null, 2) format
-    (src/main.ts:242). Runs per url, not per record. Delegates to the
-    kernel's records_to_pretty_json so the pinned byte format lives in
-    ONE place — a second copy of the indent/separator constants could be
-    'fixed' alone and silently diverge (r6 review)."""
-    import json
-
-    def pretty(s):
-        if s is None:
-            return "[]"
-        return records_to_pretty_json(json.loads(s))
-
-    return records_json.map(pretty)
+def doc_artifacts_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: (url, extracted_text) rows → one
+    (url, records, csv, json) row each (kernels.blocks.doc_artifacts)."""
+    for b in batches:
+        out = [doc_artifacts(t) for t in b["extracted_text"].tolist()]
+        yield pd.DataFrame(
+            {
+                "url": b["url"],
+                "records": [o[0] for o in out],
+                "csv": [o[1] for o in out],
+                "json": [o[2] for o in out],
+            }
+        )

@@ -16,6 +16,9 @@ Pure-Python re-statements of the reference's downstream dataflow:
                        `.toFixed(2)`, quotes NOT escaped, no trailing newline
   * records_to_pretty_json — JSON.stringify(data, null, 2) equivalent
                        (src/main.ts:242)
+  * doc_artifacts    — one upload's records, CSV and JSON in one pass
+                       (src/main.ts:133-263); the only CSV/JSON serializer
+                       the Spark artifacts use
 """
 
 from __future__ import annotations
@@ -40,6 +43,7 @@ __all__ = [
     "extract_json_fenced",
     "records_to_csv",
     "records_to_pretty_json",
+    "doc_artifacts",
 ]
 
 _END_RE = re.compile(BLOCK_END_REGEX, re.IGNORECASE)
@@ -141,9 +145,8 @@ def _js_parse_int(v) -> int:
     """
     s = str(v).strip() if v is not None else ""
     # [0-9], not \d: Python \d matches Unicode digits (U+0660 ...) that
-    # int() would happily parse, while the JVM CSV path's Java \d and JS
-    # parseInt are ASCII-only — the documented bit-for-bit parity
-    # requires the ASCII set (r5 review)
+    # int() would happily parse, while JS parseInt reads ASCII digits
+    # only ('\u0663' → NaN → 0)
     m = re.match(r"^[+-]?[0-9]+", s)
     return int(m.group(0)) if m else 0
 
@@ -157,7 +160,7 @@ def _js_parse_float(v) -> float:
     m = re.match(r"^[+-]?Infinity", s)
     if m:
         return float(m.group(0).replace("Infinity", "inf"))
-    # ASCII digits only — same parity rationale as _js_parse_int
+    # ASCII digits only — JS parseFloat, like parseInt, reads no others
     m = re.match(r"^[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?", s)
     if not m:
         return 0.0
@@ -172,16 +175,13 @@ def _to_fixed_2(f: float) -> str:
     the double (decimal.Decimal(repr(f)) scaling — never the double-
     rounding f*100+0.5 of r1, which flipped at .xx5-adjacent values).
 
-    This is bit-for-bit what the JVM CSV path produces (Java
-    format_string('%.2f') also rounds the shortest-repr digits HALF_UP),
-    keeping the kernel and Spark outputs identical. It deviates from
-    spec-exact JS toFixed only where the shortest repr sits on a .xx5
-    boundary the exact binary expansion doesn't (e.g. 1.005 stored as
-    1.00499…): pinned out-of-contract, same as the r1 test note.
-    Non-finite: Infinity/-Infinity/NaN render like JS toFixed.
+    It deviates from spec-exact JS toFixed only where the shortest repr
+    sits on a .xx5 boundary the exact binary expansion doesn't (e.g.
+    1.005 stored as 1.00499…): pinned out-of-contract, same as the r1
+    test note. Non-finite: Infinity/-Infinity/NaN render like JS toFixed.
     Magnitudes ≥ 1e21 are OUT OF CONTRACT: spec toFixed falls back to
-    exponent-notation ToString there, while this (and the JVM %.2f path)
-    print full digits — no realistic Importe field reaches 1e21."""
+    exponent-notation ToString there, while this prints full digits — no
+    realistic Importe field reaches 1e21."""
     if f != f:
         return "NaN"
     if math.isinf(f):
@@ -203,10 +203,9 @@ def records_to_csv(records: list[dict]) -> str:
     for r in records:
         cantidad = _js_parse_int(r.get("CantidadVendida"))
         importe = _js_parse_float(r.get("Importe"))
-        # a present-but-null field renders "" — same as a missing key and
-        # as the JVM path's coalesce (records.py csv_line_col); r.get's
-        # default only covers ABSENT keys, so an explicit null used to
-        # print the Python repr 'None' (r6 review). Deliberate deviation
+        # a present-but-null field renders "" — same as a missing key;
+        # r.get's default only covers ABSENT keys, so an explicit null used
+        # to print the Python repr 'None' (r6 review). Deliberate deviation
         # from the reference's template literal, which prints the JS
         # artifacts 'null'/'undefined' (src/main.ts:48-49).
         sucursal = r.get("SucursalName")
@@ -231,3 +230,28 @@ def records_to_pretty_json(records: list[dict]) -> str:
     given separators pinned to (",", ": ") and ensure_ascii=False.
     """
     return json.dumps(records, indent=2, ensure_ascii=False, separators=(",", ": "))
+
+
+def doc_artifacts(text: str | None) -> tuple[list[dict], str, str]:
+    """One extracted document → (records, csv, json), the reference's
+    per-upload artifacts in one pass (src/main.ts:133-263).
+
+    records: parse_records over segment_blocks, each record tagged with
+    its chunk_id (block_pos // 10, src/main.ts:166), block_pos and
+    record_pos. csv/json serialize the untagged records in that order,
+    so a document without records gets the header-only CSV and '[]'.
+    """
+    tagged: list[dict] = []
+    plain: list[dict] = []
+    for block_pos, block in enumerate(segment_blocks(text) if text else []):
+        for record_pos, rec in enumerate(parse_records(block)):
+            plain.append(rec)
+            tagged.append(
+                {
+                    "chunk_id": block_pos // MAX_BLOCKS_PER_CHUNK,
+                    "block_pos": block_pos,
+                    "record_pos": record_pos,
+                    **rec,
+                }
+            )
+    return tagged, records_to_csv(plain), records_to_pretty_json(plain)

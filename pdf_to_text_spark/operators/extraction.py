@@ -9,8 +9,6 @@ Catalyst expressions (pushdown/pruning-friendly).
 
 from __future__ import annotations
 
-import html as _html
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -123,94 +121,6 @@ def metrics_rollup(extracted: DataFrame) -> DataFrame:
         F.sum(F.when(F.col("parse_status") == "empty", 1).otherwise(0)).alias("empty_docs"),
         F.countDistinct("partition_id").alias("n_tasks"),
     )
-
-
-_ROUNDTRIP_NAV = "".join(f'<a href="/s/{i}">section link {i}</a> | ' for i in range(8))
-
-
-def _roundtrip_wrap_one(text: str | None) -> bytes:
-    """THE single definition of the round-trip boilerplate wrap, shared by
-    wrap_documents_as_pages and the fused html_roundtrip_extract so the
-    two paths can never drift byte-wise. Escapes markup chars (the kernel
-    decodes entities, so the round-trip inverts); a raw '<' in text would
-    otherwise open a bogus tag the extractor cannot recover
-    byte-identically, and a NULL text would render as the literal
-    'None'."""
-    return (
-        "<!DOCTYPE html><html><head><title>d</title>"
-        "<style>p{margin:0}</style><script>var x=1;</script></head>"
-        f"<body><nav><div>{_ROUNDTRIP_NAV}</div></nav>"
-        f"<article><p>{_html.escape(text or '', quote=False)}</p></article>"
-        '<footer><div><a href="/a">about</a> <a href="/b">legal</a>'
-        " &copy; 2024</div></footer></body></html>"
-    ).encode()
-
-
-def wrap_documents_as_pages(documents: DataFrame) -> DataFrame:
-    """documents(doc_id, text, lang) → pages rows whose html wraps the text
-    in realistic boilerplate (nav/header/footer link farms + one article).
-
-    Used by the round-trip check: the extraction pipeline must strip the
-    boilerplate and recover `text` byte-identically, so the input
-    documents themselves are the extractor's oracle."""
-    import datetime as _dt
-
-    import pandas as pd
-
-    def gen(batches):
-        for b in batches:
-            htmls = [_roundtrip_wrap_one(t) for t in b["text"]]
-            yield pd.DataFrame(
-                {
-                    "url": [f"https://corpus/{d:012d}.html" for d in b["doc_id"]],
-                    "warc_ts": _dt.datetime(2024, 1, 1),
-                    "html": htmls,
-                    "text": None,
-                    "lang": b["lang"],
-                }
-            )
-
-    from ..plans.layout import spread_small_scan
-
-    base = spread_small_scan(documents.select("doc_id", "text", "lang"))
-    return base.mapInPandas(
-        gen, schema="url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-
-
-def html_roundtrip_extract(documents: DataFrame) -> DataFrame:
-    """Flagship: wrap corpus text in boilerplate HTML, extract, return
-    (doc_id, extracted_text). Oracle: SELECT doc_id, text FROM documents.
-
-    r7 (guide §4.1/§8): wrap + extract are FUSED into one mapInPandas so
-    the multi-KB html bytes are built and consumed inside the same Python
-    worker — the previous two-stage form shipped every wrapped page
-    Python→JVM→Python through two Arrow boundaries for no reason (the
-    bytes decide nothing in between). Same kernels, same per-row error
-    routing (_extract_one), byte-identical wrap (_roundtrip_wrap_one);
-    equality with the unfused wrap_documents_as_pages → run_extraction
-    composition is pinned by test_pipeline_spark. The unfused operators
-    remain the general-purpose surface."""
-    import pandas as pd
-
-    from ..functions.udfs import _extract_one
-    from ..plans.layout import spread_small_scan
-
-    def gen(batches):
-        for b in batches:
-            ids, outs = [], []
-            for d, t in zip(b["doc_id"].tolist(), b["text"].tolist()):
-                out, _, _, _ = _extract_one(_roundtrip_wrap_one(t), None, False)
-                # the unfused path recovers doc_id from the generated url
-                # via regexp_extract(r"/(\d+)\.html$") + try_cast — a
-                # negative doc_id renders with '-' and yields NULL there;
-                # mirror that exactly
-                ids.append(d if d is None or d >= 0 else None)
-                outs.append(out)
-            yield pd.DataFrame({"doc_id": ids, "extracted_text": outs})
-
-    base = spread_small_scan(documents.select("doc_id", "text"))
-    return base.mapInPandas(gen, schema="doc_id long, extracted_text string")
 
 
 def content_type_dispatch(pages: DataFrame) -> DataFrame:

@@ -1,18 +1,20 @@
 """Downstream record dataflow: extracted text → blocks → chunks → records
 → CSV/JSON documents.
 
-Spark-first restatement of src/main.ts:70-124,169-250. Key idiom choices:
+Spark-first restatement of src/main.ts:70-124,133-263. Key idiom choices:
 
   * ``posexplode`` gives the per-url block ordinal for free (array
     position) — no window shuffle needed for chunk assignment
     (chunk_id = floor(block_pos / 10), src/main.ts:166);
-  * ordered reassembly uses ``sort_array(collect_list(struct(pos, …)))``
+  * chunk reassembly uses ``sort_array(collect_list(struct(pos, …)))``
     — a single hash aggregation, order restored inside the array, no
     global sort;
-  * the CSV coercion quirks (`parseInt||0`, `parseFloat||0`, toFixed(2),
-    unescaped quotes, no trailing newline — src/main.ts:39-56) are
-    expressed with BUILT-IN functions (regexp_extract / format_string) so
-    the serialization hot path never leaves the JVM.
+  * records, CSV and JSON come from ONE Python pass per document
+    (``doc_artifacts_df``, kernels/blocks.doc_artifacts), like the
+    reference's per-upload handler: no per-url regroup, no join, and the
+    CSV coercion quirks (`parseInt||0`, `parseFloat||0`, toFixed(2),
+    unescaped quotes, no trailing newline — src/main.ts:39-56) live in
+    the kernel serializer only.
 """
 
 from __future__ import annotations
@@ -20,8 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import CHUNK_BLOCK_DELIM, CSV_HEADER, MAX_BLOCKS_PER_CHUNK
-from ..functions.udfs import parse_records_udf, pretty_json_udf, segment_blocks_udf
+from ..config import CHUNK_BLOCK_DELIM, MAX_BLOCKS_PER_CHUNK
+from ..functions.udfs import DOC_ARTIFACTS_SCHEMA, doc_artifacts_batches, segment_blocks_udf
 
 
 def blocks_df(extracted: DataFrame) -> DataFrame:
@@ -56,200 +58,15 @@ def chunks_df(blocks_with_chunk: DataFrame) -> DataFrame:
     )
 
 
-def records_df(blocks_with_chunk: DataFrame) -> DataFrame:
-    """blocks → exploded sale records with stable (chunk_id, block_pos,
-    record_pos) ordering, schema = reference prompt schema
-    (src/main.ts:186-191) with CSV-stage string types."""
-    recs = blocks_with_chunk.select(
-        "url",
-        "chunk_id",
-        "block_pos",
-        F.posexplode(parse_records_udf(F.col("block"))).alias("record_pos", "rec"),
+def doc_artifacts_df(extracted: DataFrame) -> DataFrame:
+    """extracted → one (url, records, csv, json) row per extracted row.
+
+    records is array<struct<chunk_id, block_pos, record_pos, SucursalName,
+    EAN, CantidadVendida, Importe>> in (chunk_id, block_pos, record_pos)
+    order; csv/json serialize the same records (header-only CSV and '[]'
+    for a document without any). One mapInPandas: the Python worker runs
+    segment → parse → serialize per document, so a sink projected from
+    this frame crosses into Python once."""
+    return extracted.select("url", "extracted_text").mapInPandas(
+        doc_artifacts_batches, schema=DOC_ARTIFACTS_SCHEMA
     )
-    return recs.select(
-        "url",
-        "chunk_id",
-        "block_pos",
-        "record_pos",
-        F.col("rec.SucursalName").alias("SucursalName"),
-        F.col("rec.EAN").alias("EAN"),
-        F.col("rec.CantidadVendida").alias("CantidadVendida"),
-        F.col("rec.Importe").alias("Importe"),
-    )
-
-
-# ── CSV serialization (JVM-side, quirks preserved) ──────────────────────────
-
-
-# Java's \s is ASCII-only; the kernel strips via Python str.strip(), whose
-# whitespace set adds NBSP & friends (and JS parseFloat skips NBSP too) —
-# spell the full set out so " 42" parses as 42 on both paths.
-_WS = (
-    "[\\s\u001c-\u001f\u0085\u00a0\u1680\u2000-\u200a"
-    "\u2028\u2029\u202f\u205f\u3000]*"
-)
-
-
-def _js_int_col(c):
-    """`parseInt(x, 10) || 0` as a built-in expression.
-
-    try_cast, not cast: Spark 4 runs ANSI mode by default, where a plain
-    cast on a non-numeric string aborts the job instead of yielding null.
-    Returns a STRING column: decimal(38,0) keeps digit-for-digit parity
-    with the kernel's unbounded Python int beyond Long range (a long
-    try_cast would silently fold 2^63 to the 0 fallback). Parity bound
-    (ADVICE r3): decimal(38,0) caps at 38 digits — a >38-digit integer
-    folds to the '0' fallback here while the kernel keeps every digit.
-    Out of contract alongside the 1e21 toFixed note: no real
-    CantidadVendida reaches 10^38, and JS Number itself lost exact
-    integers 2^53 ago."""
-    lead = F.regexp_extract(
-        F.coalesce(F.col(c), F.lit("")), r"^" + _WS + r"([+-]?\d+)", 1
-    )
-    return F.coalesce(lead.try_cast("decimal(38,0)").cast("string"), F.lit("0"))
-
-
-def _js_float_col(c):
-    """`parseFloat(x) || 0` as a built-in expression (ANSI-safe try_cast).
-
-    parseFloat accepts leading Infinity literals too (truthy, so they
-    survive ||0); format_string('%.2f') then renders Java's 'Infinity' /
-    '-Infinity', same as the kernel's pinned toFixed behavior. The `|| 0`
-    also swallows -0 (falsy in JS), so a parsed negative zero ("-0",
-    "-0e9") is normalized to +0.0 exactly as the kernel does."""
-    s = F.coalesce(F.col(c), F.lit(""))
-    lead = F.regexp_extract(
-        s, r"^" + _WS + r"([+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?)", 1
-    )
-    v = F.coalesce(lead.try_cast("double"), F.lit(0.0))
-    return (
-        F.when(s.rlike(r"^" + _WS + r"[+]?Infinity"), F.lit(float("inf")))
-        .when(s.rlike(r"^" + _WS + r"-Infinity"), F.lit(float("-inf")))
-        .otherwise(F.when(v == 0, F.lit(0.0)).otherwise(v))
-    )
-
-
-def csv_line_col():
-    """One record → one CSV line; format_string('%.2f') = Java HALF_UP,
-    matching the pinned toFixed(2) round-half-away-from-zero contract."""
-    return F.format_string(
-        '"%s","%s",%s,%.2f',
-        F.coalesce(F.col("SucursalName"), F.lit("")),
-        F.coalesce(F.col("EAN"), F.lit("")),
-        _js_int_col("CantidadVendida"),
-        _js_float_col("Importe"),
-    )
-
-
-def csv_documents(records: DataFrame, urls: DataFrame | None = None) -> DataFrame:
-    """Per-url CSV document: header + ordered rows, no trailing newline.
-
-    `urls` (a one-column url relation, e.g. the extracted url universe)
-    restores the reference's always-emit contract: a url whose upload
-    parsed to ZERO records still gets a header-only CSV (main.ts:55 emits
-    the header when allJsonData is empty — ADVICE r1). Without it, the
-    groupBy can only see urls that produced records."""
-    lines = records.select(
-        "url",
-        F.struct("chunk_id", "block_pos", "record_pos").alias("ord"),
-        csv_line_col().alias("line"),
-    )
-    assembled = lines.groupBy("url").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("ord", "line"))),
-                lambda s: s["line"],
-            ),
-            "\n",
-        ).alias("body")
-    )
-    if urls is not None:
-        assembled = urls.select("url").distinct().join(assembled, "url", "left")
-    return assembled.select(
-        "url",
-        F.when(
-            F.col("body").isNull() | (F.col("body") == ""), F.lit(CSV_HEADER + "\n")
-        )
-        .otherwise(F.concat(F.lit(CSV_HEADER + "\n"), F.col("body")))
-        .alias("csv"),
-    )
-
-
-RECORD_STRUCT = (
-    "array<struct<SucursalName:string,EAN:string,CantidadVendida:string,Importe:string>>"
-)
-
-
-def records_from_llm_responses(responses: DataFrame) -> DataFrame:
-    """LLM-response ingestion (SURVEY §2 #10, src/main.ts:25-36): extract
-    the ```json fenced``` body (whole-text fallback), parse against the
-    record schema, explode to rows. Invalid JSON → parse_ok=0 row instead
-    of the reference's request-aborting throw (#18 softening).
-
-    Input: (url string, chunk_id int, response string). All JVM built-ins
-    (regexp_extract + from_json) — the enrichment responses never touch
-    Python."""
-    fenced = F.regexp_extract(F.col("response"), r"```json([\s\S]+?)```", 1)
-    candidate = F.trim(F.when(fenced != "", fenced).otherwise(F.col("response")))
-    # from_json(array<struct>) silently accepts a BARE JSON OBJECT as a
-    # one-record array — but the contract (and HTTPEnricher's validation,
-    # enrichment.py: "response is not a list of records") requires an
-    # actual array, so a non-'['-leading candidate is parse_ok=0 like any
-    # other malformed response. Arrays with non-object elements already
-    # come back NULL from from_json (probed: '["a","b"]' and mixed both
-    # reject), so this guard is the only divergence to close (r6 review).
-    parsed = F.when(
-        candidate.startswith("["), F.from_json(candidate, RECORD_STRUCT)
-    )
-    base = responses.select(
-        "url",
-        "chunk_id",
-        parsed.alias("recs"),
-        F.when(parsed.isNotNull(), 1).otherwise(0).alias("parse_ok"),
-    )
-    # ONE pass: posexplode_outer on a NULL array (parse_ok=0) emits exactly
-    # the (record_pos=null, all-null-fields) marker row the old
-    # filter-split union built — same rows, half the scans/parses, no
-    # union exchange.
-    exploded = base.select(
-        "url",
-        "chunk_id",
-        "parse_ok",
-        F.posexplode_outer("recs").alias("record_pos", "rec"),
-    )
-    return exploded.select(
-        "url",
-        "chunk_id",
-        "record_pos",
-        "parse_ok",
-        F.col("rec.SucursalName").alias("SucursalName"),
-        F.col("rec.EAN").alias("EAN"),
-        F.col("rec.CantidadVendida").alias("CantidadVendida"),
-        F.col("rec.Importe").alias("Importe"),
-    )
-
-
-def json_documents(records: DataFrame) -> DataFrame:
-    """Per-url pretty JSON document (JSON.stringify(…, null, 2) format).
-
-    Record order matches the reference's chunk-sequential accumulation
-    (src/main.ts:170,233). Only the final indent step is a pandas UDF —
-    one call per url, not per record.
-    """
-    recs = records.select(
-        "url",
-        F.struct("chunk_id", "block_pos", "record_pos").alias("ord"),
-        F.struct("SucursalName", "EAN", "CantidadVendida", "Importe").alias("rec"),
-    )
-    assembled = recs.groupBy("url").agg(
-        F.to_json(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("ord", "rec"))),
-                lambda s: s["rec"],
-            ),
-            # JSON.stringify renders null fields as "key": null; Spark's
-            # to_json default DROPS them — pin the stringify behavior
-            {"ignoreNullFields": "false"},
-        ).alias("compact_json")
-    )
-    return assembled.select("url", pretty_json_udf(F.col("compact_json")).alias("json"))

@@ -19,63 +19,42 @@ json_docs/, metrics/.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .operators.extraction import metrics_rollup, run_extraction
-from .operators.records import (
-    blocks_df,
-    csv_documents,
-    json_documents,
-    records_df,
-    with_chunk_id,
-)
+from .operators.records import blocks_df, doc_artifacts_df, with_chunk_id
 
 
-def run_reference_pipeline(
-    pages: DataFrame, *, dedup: bool = True, enricher=None,
-) -> dict[str, DataFrame]:
+def run_reference_pipeline(pages: DataFrame, *, dedup: bool = True) -> dict[str, DataFrame]:
     """pages → every artifact the reference produces per document.
 
-    `enricher=None` uses the deterministic regex field parser on blocks
-    (records_df); pass an operators.enrichment.HTTPEnricher to run the
-    reference's LLM stage instead (then records come from enrich_chunks).
-    `dedup` passes through to run_extraction (keep the newest crawl per
-    url).
+    Records come from the deterministic regex field parser
+    (kernels/blocks.parse_records). `dedup` passes through to
+    run_extraction (keep the newest crawl per url).
 
     NOTE for materializing callers: every returned frame shares the
     extraction lineage lazily — writing all of them re-runs the kernel
     per sink. Write extracted/ first, re-read it, and feed
     artifacts_from_extracted() instead (what run.py does; r5 review)."""
     extracted = run_extraction(pages, dedup=dedup)
-    return {
-        "extracted": extracted,
-        **artifacts_from_extracted(extracted, enricher=enricher),
-    }
+    return {"extracted": extracted, **artifacts_from_extracted(extracted)}
 
 
-def artifacts_from_extracted(
-    extracted: DataFrame, *, enricher=None
-) -> dict[str, DataFrame]:
+def artifacts_from_extracted(extracted: DataFrame) -> dict[str, DataFrame]:
     """The downstream reference artifacts from an ALREADY-extracted
-    frame — pass a re-read of a written extracted/ table so the kernel
-    runs once, not once per sink (the csv_docs url-universe side alone
-    would re-run it twice)."""
-    blocks = with_chunk_id(blocks_df(extracted))
-    if enricher is None:
-        records = records_df(blocks)
-    else:
-        from .operators.enrichment import enrich_chunks
-        from .operators.records import chunks_df
+    frame — pass a re-read of a written extracted/ table so the PDF/HTML
+    kernel runs once, not once per sink.
 
-        enriched = enrich_chunks(chunks_df(blocks), enricher)
-        records = enriched.where(enriched.record_pos.isNotNull()).withColumn(
-            "block_pos", enriched.record_pos * 0
-        )
+    records, csv_docs and json_docs are projections of one per-document
+    pass (doc_artifacts_df): each sink re-runs that one Python pass over
+    the text — no shuffle, join or cache. csv_docs has one row per
+    extracted row (header-only when it parsed no records, main.ts:55);
+    json_docs only rows with at least one record."""
+    docs = doc_artifacts_df(extracted)
     return {
-        "blocks": blocks,
-        "records": records,
-        # pass the extracted url universe: uploads with zero parsed records
-        # still emit a header-only CSV (reference main.ts:55)
-        "csv_docs": csv_documents(records, urls=extracted.select("url")),
-        "json_docs": json_documents(records),
+        "blocks": with_chunk_id(blocks_df(extracted)),
+        "records": docs.select("url", F.inline("records")),
+        "csv_docs": docs.select("url", "csv"),
+        "json_docs": docs.where(F.size("records") > 0).select("url", "json"),
         "metrics": metrics_rollup(extracted),
     }

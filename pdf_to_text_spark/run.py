@@ -58,11 +58,10 @@ def main(argv: list[str] | None = None) -> int:
                   f"under {args.output}", file=sys.stderr)
         else:
             # write extracted/ FIRST and re-read it: every downstream
-            # artifact shares the extraction lineage, and five lazy
+            # artifact shares the extraction lineage, and the four lazy
             # sinks would re-run the PDF/HTML kernel — the dominant
-            # cost — once per write (~6x total; the csv_docs
-            # url-universe side carries it twice). One kernel pass,
-            # then cheap derivations from columnar parquet (r5 review).
+            # cost — once per write. One kernel pass, then cheap
+            # derivations from columnar parquet (r5 review).
             from .operators.extraction import run_extraction
             from .pipeline import artifacts_from_extracted
 

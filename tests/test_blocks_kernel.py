@@ -224,12 +224,33 @@ def test_pretty_json_matches_js_stringify():
 
 
 def test_csv_null_field_renders_empty_not_none():
-    """r6 review: a present-but-null field must render "" like the JVM
-    path's coalesce (records.py csv_line_col), not the Python repr
-    'None' (r.get's default only covers ABSENT keys)."""
+    """r6 review: a present-but-null field must render "" like a missing
+    key, not the Python repr 'None' (r.get's default only covers ABSENT
+    keys)."""
     from pdf_to_text_spark.kernels.blocks import records_to_csv
 
     csv = records_to_csv(
         [{"SucursalName": None, "EAN": "E1", "CantidadVendida": "1", "Importe": "2"}]
     )
     assert csv.splitlines()[1] == '"","E1",1,2.00'
+
+
+def test_doc_artifacts_tags_records_and_serializes_once():
+    """doc_artifacts: records carry (chunk_id, block_pos, record_pos) in
+    document order; csv/json serialize the untagged records; a document
+    without records (or without text) gets the header-only CSV and '[]'."""
+    from pdf_to_text_spark.kernels.blocks import doc_artifacts
+
+    text = "\n".join(
+        f"Sucursal {i}\nEAN {i} cantidad {i} importe 1\nEAN 0 cantidad 0 importe 0"
+        for i in range(12)
+    )
+    recs, csv, js = doc_artifacts(text)
+    plain = [r for b in segment_blocks(text) for r in parse_records(b)]
+    assert [(r["chunk_id"], r["block_pos"], r["record_pos"]) for r in recs] == [
+        (b // 10, b, p) for b in range(12) for p in range(2)
+    ]
+    assert [{k: r[k] for k in plain[0]} for r in recs] == plain
+    assert csv == records_to_csv(plain) and js == records_to_pretty_json(plain)
+    for empty in (None, "", "no sucursal here"):
+        assert doc_artifacts(empty) == ([], records_to_csv([]), "[]")

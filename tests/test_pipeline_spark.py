@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from pdf_to_text_spark.kernels.blocks import (
     chunk_blocks,
+    doc_artifacts,
     parse_records,
     records_to_csv,
     records_to_pretty_json,
@@ -24,14 +25,8 @@ from pdf_to_text_spark.operators.extraction import (
     metrics_rollup,
     run_extraction,
 )
-from pdf_to_text_spark.operators.records import (
-    blocks_df,
-    chunks_df,
-    csv_documents,
-    json_documents,
-    records_df,
-    with_chunk_id,
-)
+from pdf_to_text_spark.operators.records import blocks_df, chunks_df, with_chunk_id
+from pdf_to_text_spark.pipeline import artifacts_from_extracted
 from pdf_to_text_spark.sources.pages import PAGES_SCHEMA, build_pages_pdf, pages_df
 from tools.oracle_extract import extract_any
 
@@ -159,71 +154,117 @@ def test_blocks_chunks_records_csv_match_kernel(spark):
     for i, wc in enumerate(want_chunks):
         assert chunks[i]["chunk_text"] == "\n\n".join(wc)
 
-    # records
-    recs = records_df(bc)
+    # records, csv and json through the per-document pass
+    art = artifacts_from_extracted(extracted)
     want_recs = [r for b in want_blocks for r in parse_records(b)]
-    got_recs = [
+    got = art["records"].orderBy("chunk_id", "block_pos", "record_pos").collect()
+    assert [
         {k: r[k] for k in ("SucursalName", "EAN", "CantidadVendida", "Importe")}
-        for r in recs.orderBy("chunk_id", "block_pos", "record_pos").collect()
-    ]
-    assert got_recs == want_recs
+        for r in got
+    ] == want_recs
     assert len(want_recs) > 25
+    # the ordinals are the reference's chunk-sequential order (main.ts:166)
+    assert [(r["chunk_id"], r["block_pos"]) for r in got] == [
+        (i // 10, i) for i, b in enumerate(want_blocks) for _ in parse_records(b)
+    ]
 
     # csv document — byte-identical to the kernel serializer
-    got_csv = csv_documents(recs).collect()[0]["csv"]
+    got_csv = art["csv_docs"].collect()[0]["csv"]
     assert got_csv == records_to_csv(want_recs)
     assert not got_csv.endswith("\n")
 
     # json document — byte-identical pretty format
-    got_json = json_documents(recs).collect()[0]["json"]
+    got_json = art["json_docs"].collect()[0]["json"]
     assert got_json == records_to_pretty_json(want_recs)
 
 
-def test_csv_header_only_for_zero_record_urls(spark):
-    """The reference emits one CSV per upload — header-only when no
-    records parsed (main.ts:55). csv_documents(urls=...) restores that
-    (ADVICE r1): urls absent from the record relation coalesce to the
-    bare header, matching the kernel's records_to_csv([])."""
-    recs = spark.createDataFrame(
-        [("u1", 0, 0, 0, "A", "1", "2", "3.5")],
-        "url string, chunk_id int, block_pos int, record_pos int, "
-        "SucursalName string, EAN string, CantidadVendida string, Importe string",
-    )
-    urls = spark.createDataFrame([("u1",), ("u2",)], "url string")
-    out = {r["url"]: r["csv"] for r in csv_documents(recs, urls=urls).collect()}
-    assert set(out) == {"u1", "u2"}
-    assert out["u2"] == records_to_csv([])  # 'HEADER\n'
-    assert out["u1"].startswith("SucursalName,EAN,CantidadVendida,Importe\n\"A\"")
-    # without a url universe, behavior is unchanged (records-only grouping)
-    assert {r["url"] for r in csv_documents(recs).collect()} == {"u1"}
-
-
-def test_csv_kernel_jvm_parity_at_boundaries(spark):
-    """The JVM CSV path (format_string %.2f + try_cast) and the Python
-    kernel serializer must agree bit-for-bit — including shortest-repr
-    half-up ties (1.005→1.01, 2.675→2.68) and Infinity literals."""
-    values = [
-        ("A", "1", "7", "1.005"), ("B", "2", "xx", "2.675"),
-        ("C", "3", "-5", "Infinity"), ("D", "4", "0", "-Infinity"),
-        ("E", "5", "3.9", "-1.125"), ("F", "6", "1", "junk"),
-        # r3 review: JS `||0` swallows -0 (never "-0.00"); NBSP is
-        # whitespace to str.strip()/parseFloat but not Java \s; ints
-        # beyond Long range must keep full digits (kernel = Python int)
-        ("G", "7", "-0", "-0"), ("H", "8", "\u00a042", "\u00a0-0.0e9"),
-        ("I", "9", "9223372036854775808", " .5"),
-    ]
-    rows = [("u", 0, 0, i) + v for i, v in enumerate(values)]
+def _text_rows(spark, rows):
+    """(url, text) → extracted rows: passthrough pages whose text is the
+    extracted_text as-is."""
     df = spark.createDataFrame(
-        rows,
-        "url string, chunk_id int, block_pos int, record_pos int, "
-        "SucursalName string, EAN string, CantidadVendida string, Importe string",
+        [(u, dt.datetime(2024, 1, 1), None, t, "es") for u, t in rows],
+        schema=PAGES_SCHEMA,
     )
-    got = csv_documents(df).collect()[0]["csv"]
-    want = records_to_csv(
-        [dict(zip(("SucursalName", "EAN", "CantidadVendida", "Importe"), v))
-         for v in values]
+    return run_extraction(df, dedup=False)
+
+
+def test_doc_artifacts_pass_matches_kernel_per_row(spark):
+    """Every extracted row's records, CSV and JSON equal
+    kernels.blocks.doc_artifacts of its text — the header-only CSV and
+    no json_docs row for a text without records included."""
+    extracted = run_extraction(pages_df(spark, 120, num_partitions=4)).cache()
+    try:
+        art = artifacts_from_extracted(extracted)
+        texts = {r["url"]: r["extracted_text"] for r in extracted.collect()}
+        recs: dict = {}
+        for r in art["records"].collect():
+            d = r.asDict()
+            recs.setdefault(d.pop("url"), []).append(d)
+        csvs = {r["url"]: r["csv"] for r in art["csv_docs"].collect()}
+        jsons = {r["url"]: r["json"] for r in art["json_docs"].collect()}
+        assert set(csvs) == set(texts)
+        n_with = 0
+        for url, text in texts.items():
+            want_recs, want_csv, want_json = doc_artifacts(text)
+            got_recs = sorted(
+                recs.get(url, []),
+                key=lambda d: (d["chunk_id"], d["block_pos"], d["record_pos"]),
+            )
+            assert got_recs == want_recs, url
+            assert csvs[url] == want_csv, url
+            if want_recs:
+                n_with += 1
+                assert jsons[url] == want_json, url
+            else:
+                assert url not in jsons and want_json == "[]", url
+        assert 0 < n_with < len(texts)
+        assert len(jsons) == n_with
+    finally:
+        extracted.unpersist()
+
+
+def test_null_url_document_keeps_its_csv_rows(spark):
+    """A document with a NULL url gets its own records in csv_docs, the
+    same ones its json_docs row holds — not a header-only CSV."""
+    text = "Sucursal Sur\nEAN 779 cantidad 3 importe 4.5"
+    art = artifacts_from_extracted(_text_rows(spark, [(None, text)]))
+    want_recs, want_csv, want_json = doc_artifacts(text)
+    assert len(want_recs) == 1
+    [csv_row] = art["csv_docs"].collect()
+    [json_row] = art["json_docs"].collect()
+    assert csv_row["url"] is None and csv_row["csv"] == want_csv
+    assert want_csv.endswith('"Sucursal Sur","779",3,4.50')
+    assert json_row["url"] is None and json_row["json"] == want_json
+    assert art["records"].count() == 1
+
+
+def test_csv_boundary_values_through_spark_pass(spark):
+    """CSV coercion at its edges, from record lines parse_records can
+    produce: shortest-repr half-up ties (1.005→1.01, 2.675→2.68),
+    Infinity literals, junk → 0, -0 → 0 (JS `||0`), a bare leading '.',
+    and integers past Long range and past 38 digits keeping every digit."""
+    values = [
+        ("1", "7", "1.005"), ("2", "xx", "2.675"), ("3", "-5", "Infinity"),
+        ("4", "0", "-Infinity"), ("5", "3.9", "-1.125"), ("6", "1", "junk"),
+        ("7", "-0", "-0"), ("8", "42", "-0.0e9"),
+        ("9", "9223372036854775808", ".5"), ("10", "1" * 40, "7"),
+    ]
+    text = "Sucursal Borde\n" + "\n".join(
+        f"EAN {e} cantidad {c} importe {i}" for e, c, i in values
     )
-    assert got == want
+    art = artifacts_from_extracted(_text_rows(spark, [("u", text)]))
+    got = art["csv_docs"].collect()[0]["csv"]
+    want_recs = parse_records(text)
+    assert [(r["EAN"], r["CantidadVendida"], r["Importe"]) for r in want_recs] == values
+    assert got == records_to_csv(want_recs)
+    assert got.splitlines()[1:] == [
+        '"Sucursal Borde","1",7,1.01', '"Sucursal Borde","2",0,2.68',
+        '"Sucursal Borde","3",-5,Infinity', '"Sucursal Borde","4",0,-Infinity',
+        '"Sucursal Borde","5",3,-1.13', '"Sucursal Borde","6",1,0.00',
+        '"Sucursal Borde","7",0,0.00', '"Sucursal Borde","8",42,0.00',
+        '"Sucursal Borde","9",9223372036854775808,0.50',
+        '"Sucursal Borde","10",' + "1" * 40 + ",7.00",
+    ]
 
 
 def test_local1_equals_local4(spark, pages):
@@ -236,23 +277,6 @@ def test_local1_equals_local4(spark, pages):
     )
     assert ha.count() == 0
     assert a.count() == b.count()
-
-
-def test_json_documents_renders_null_fields(spark):
-    """JSON.stringify renders missing/None fields as `"key": null`; Spark's
-    to_json default silently DROPS null struct fields — pinned here so
-    nullable records (e.g. LLM-ingested) keep stringify parity (r3 review)."""
-    recs = spark.createDataFrame(
-        [("u1", 0, 0, 0, "A", None, "2", None)],
-        "url string, chunk_id int, block_pos int, record_pos int, "
-        "SucursalName string, EAN string, CantidadVendida string, Importe string",
-    )
-    got = json_documents(recs).collect()[0]["json"]
-    want = records_to_pretty_json(
-        [{"SucursalName": "A", "EAN": None, "CantidadVendida": "2", "Importe": None}]
-    )
-    assert got == want
-    assert '"EAN": null' in got
 
 
 def test_null_url_rows_extract_not_crash(spark):
@@ -333,39 +357,3 @@ def test_dedup_duplicated_null_url_routes_to_window(spark):
     )
     out = run_extraction(df).collect()
     assert len(out) == 1 and out[0]["warc_ts"] == dt.datetime(2024, 1, 2)
-
-
-def test_html_roundtrip_fused_matches_unfused(spark):
-    """The r7 fused html_roundtrip_extract (wrap + extract in ONE Python
-    stage) must equal the unfused wrap_documents_as_pages →
-    run_extraction composition row-for-row, including the edge rows the
-    wrap/escape/url-recovery rules exist for: markup chars, entities,
-    NULL and empty text, and a negative doc_id (which the unfused path
-    maps to a NULL doc_id via its url regexp)."""
-    from pdf_to_text_spark.operators.extraction import (
-        html_roundtrip_extract,
-        run_extraction,
-        wrap_documents_as_pages,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "plain words only here today", "en"),
-            (2, "markup <b>bold</b> & entities &amp; kept", "en"),
-            (3, None, "en"),
-            (4, "", "en"),
-            (5, "multi\nline\ntext with  double  spaces", "de"),
-            (-6, "negative id row", "en"),
-        ],
-        "doc_id long, text string, lang string",
-    )
-    fused = {
-        r["doc_id"]: r["extracted_text"]
-        for r in html_roundtrip_extract(docs).collect()
-    }
-    unfused_df = run_extraction(wrap_documents_as_pages(docs), dedup=False).select(
-        F.regexp_extract("url", r"/(\d+)\.html$", 1).try_cast("long").alias("doc_id"),
-        "extracted_text",
-    )
-    unfused = {r["doc_id"]: r["extracted_text"] for r in unfused_df.collect()}
-    assert fused == unfused

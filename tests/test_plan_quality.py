@@ -94,6 +94,42 @@ def test_chunk_assembly_single_aggregate_no_window(spark):
     assert "Generate posexplode" in plan or "posexplode" in plan
 
 
+def test_artifact_sinks_are_one_python_pass_each(spark, pages, tmp_path):
+    """records, csv_docs and json_docs over a parquet-read extracted table
+    are each scan → ONE MapInPandas → project/generate/filter: no other
+    Python eval, no Exchange, join or cached relation; building the three
+    frames launches no Spark job."""
+    from pdf_to_text_spark.operators.extraction import run_extraction
+    from pdf_to_text_spark.pipeline import artifacts_from_extracted
+
+    path = str(tmp_path / "extracted")
+    run_extraction(pages).write.parquet(path)
+    extracted = spark.read.parquet(path)
+    sc = spark.sparkContext
+
+    def jobs(group):
+        # the status store is fed asynchronously by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        sc.setJobGroup("artifacts", "build the artifact frames")
+        art = artifacts_from_extracted(extracted)
+        sinks = [art[k] for k in ("records", "csv_docs", "json_docs")]
+        assert jobs("artifacts") == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for df in sinks:
+        plan = _plan(df)
+        tree = plan.split("\n\n", 1)[0]  # the operator tree, one line per node
+        assert len(re.findall(r"\bMapInPandas\b", tree)) == 1, plan
+        assert not re.search(r"ArrowEvalPython|BatchEvalPython", plan), plan
+        assert "Exchange" not in plan, plan
+        assert "Join" not in tree, plan
+        assert not re.search(r"InMemory(TableScan|Relation)", plan), plan
+        assert "Scan parquet" in tree, plan
+
+
 def test_lsh_band_join_is_hash_keyed_not_cartesian(spark):
     """MinHash/SimHash candidate joins must hash-join on band keys —
     a cartesian/BNLJ here is corpus² and would be fatal at scale."""
