@@ -3,7 +3,7 @@
 Re-expresses the dataflow of the reference (pierotech/pdf-to-text, a
 Cloudflare-Worker per-request PDF→text→blocks→records→CSV pipeline; see
 /root/reference/src/main.ts) as a batch DataFrame job over Common-Crawl-style
-``pages`` tables, plus the dedup / similarity / text-analysis operators a
+``pages`` tables, plus the curation (dedup) and text-analysis operators a
 100 TB training-data pipeline needs.
 
 Layout:
@@ -11,9 +11,10 @@ Layout:
               contract; also used by tools/oracle_extract.py to pin goldens
   functions/  Arrow-batched Spark UDF wrappers around the kernels
   operators/  DataFrame-level operators (extraction, records, dedup,
-              similarity, text analysis)
+              text analysis)
   sources/    synthetic pages-table generator + testdata catalog
-  plans/      layout (bucketing/salting) + checkpoint/resume (Iceberg-style
+  plans/      layout (url-hash buckets, small-scan spreading) +
+              checkpoint/resume (Iceberg-style
               manifest emulation)
   streaming/  Structured Streaming variant of the extraction pipeline
 """

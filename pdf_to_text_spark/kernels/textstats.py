@@ -5,7 +5,7 @@ Arrow-batched Spark UDFs. The Spark-side operators live in
 pdf_to_text_spark.operators.{dedup,text_analysis}; where the math is
 SQL-expressible it is ALSO written with built-in functions so the hot path
 stays JVM-side — these kernels back only the genuinely non-SQL parts
-(MinHash/SimHash signatures, winnowing fingerprints, n-gram language ID).
+(MinHash signatures, winnowing fingerprints, n-gram language ID).
 
 MinHash is one batch kernel, ``minhash_batch``: per batch of texts it
 hashes each doc's distinct shingles once, runs the n_perm universal
@@ -30,7 +30,6 @@ __all__ = [
     "minhash_batch",
     "minhash_signature",
     "minhash_bands",
-    "simhash64",
     "winnow_fingerprint",
     "detect_lang",
     "jaccard",
@@ -215,31 +214,6 @@ def minhash_bands(sig: np.ndarray, n_bands: int = 16) -> list[int]:
     """LSH band keys of one signature (minhash_batch's band rule); raises
     ValueError when n_bands does not divide len(sig)."""
     return _band_keys(np.asarray(sig, np.uint64)[None, :], n_bands)[0].tolist()
-
-
-def simhash64(text: str) -> int:
-    """64-bit SimHash (Charikar '02) over word unigrams+bigrams.
-
-    Vectorized: all feature hashes land in one uint64 array, bits are
-    unpacked with a single broadcasted shift — no per-feature Python work
-    beyond the stable hash itself.
-    """
-    words = normalize_text(text).split()
-    if not words:
-        return 0
-    feats = words + [" ".join(p) for p in zip(words, words[1:])]
-    hs = np.fromiter(
-        (_stable_u64(f.encode(), seed=7) for f in feats),
-        dtype=np.uint64,
-        count=len(feats),
-    )
-    bits = (hs[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)
-    acc = 2 * bits.astype(np.int64).sum(axis=0) - len(feats)  # (+1/-1 votes)
-    out = 0
-    for i in range(64):
-        if acc[i] > 0:
-            out |= 1 << i
-    return out
 
 
 def winnow_fingerprint(text: str, k: int = 7, window: int = 8) -> list[int]:

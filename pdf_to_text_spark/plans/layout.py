@@ -185,10 +185,3 @@ def estimated_size_bytes(df: DataFrame) -> int | None:
         return raw if isinstance(raw, int) else int(raw.toString())
     except Exception:
         return None
-
-
-def with_lineage(df: DataFrame) -> DataFrame:
-    """Per-partition lineage columns for the metrics table (north_rule)."""
-    return df.withColumn("partition_id", F.spark_partition_id()).withColumn(
-        "input_file", F.input_file_name()
-    )

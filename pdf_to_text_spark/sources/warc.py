@@ -367,78 +367,6 @@ def _warc_record(
     return b"\r\n".join(head) + _CRLF2 + body + _CRLF2
 
 
-_GATE_SHARDS: dict[tuple[int, int], str] = {}
-
-
-def _gate_shard_dir(n_rows: int, n_files: int, with_payload: list) -> str:
-    """One shard directory per (n_rows, n_files) per process, built on
-    first use — the gate queries run synthetic_warc_pages repeatedly
-    (spark side + oracle side, bench reps), and a fresh mkdtemp per call
-    leaked /tmp dirs and re-gzipped the corpus every time (r4 review).
-    Registered for interpreter-exit cleanup; deterministic content, so
-    reuse is safe."""
-    import os
-
-    key = (n_rows, n_files)
-    path = _GATE_SHARDS.get(key)
-    if path is not None and all(
-        os.path.exists(f"{path}/seg-{i}.warc.gz") for i in range(n_files)
-    ):
-        return path
-    import atexit
-    import shutil
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="pts_warc_gate_")
-    for i in range(n_files):
-        with open(f"{path}/seg-{i}.warc.gz", "wb") as f:
-            f.write(build_warc_bytes(with_payload[i::n_files]))
-    _GATE_SHARDS[key] = path
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
-
-
-def synthetic_warc_pages(spark, n_rows: int, n_files: int = 4):
-    """The deterministic ``build_pages_pdf`` corpus re-ingested THROUGH
-    the WARC walker.
-
-    Rows with a payload are written as `n_files` .warc.gz shards (one
-    gzip member per record, the Common Crawl layout) and read back via
-    ``warc_pages``, so the extraction path exercises
-    iter_warc_records/_gunzip_members/_http_payload. Payload-less rows
-    (passthrough text / empty) have no WARC representation by definition
-    — they join back as a unioned literal relation. Byte-identity of the
-    WARC round trip is separately pinned by tests/test_warc_source.py."""
-    from .pages import build_pages_pdf
-
-    pdf = build_pages_pdf(list(range(n_rows)))
-    with_payload = [
-        (u, ts.to_pydatetime(), bytes(h))
-        for u, ts, h, _t, _l in pdf[pdf["html"].notna()].itertuples(
-            index=False, name=None
-        )
-    ]
-    tmp = _gate_shard_dir(n_rows, n_files, with_payload)
-    from_warc = warc_pages(spark, tmp)
-    # lang is crawl metadata, not WARC content — rejoin it from the
-    # corpus relation (broadcast: fixture-sized)
-    import pyspark.sql.functions as F
-
-    meta = spark.createDataFrame(
-        pdf[["url", "warc_ts", "lang"]].drop_duplicates(["url", "warc_ts"]),
-        "url string, warc_ts timestamp, lang string",
-    )
-    from_warc = (
-        from_warc.drop("lang")
-        .join(F.broadcast(meta), ["url", "warc_ts"], "left_outer")
-        .select("url", "warc_ts", "html", "text", "lang")
-    )
-    no_payload = spark.createDataFrame(
-        pdf[pdf["html"].isna()], schema=PAGES_SCHEMA
-    )
-    return from_warc.unionByName(no_payload)
-
-
 def build_warc_bytes(
     rows: list[tuple[str, dt.datetime, bytes | None]],
     gzip_per_record: bool = True,

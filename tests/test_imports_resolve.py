@@ -34,6 +34,11 @@ def _module_name(root: pathlib.Path, path: pathlib.Path) -> str:
     return ".".join(parts)
 
 
+def _parse_all(root: pathlib.Path):
+    files = {_module_name(root, p): p for p in _tracked_py(root)}
+    return files, {m: ast.parse(p.read_text(), str(p)) for m, p in files.items()}
+
+
 def _bound_names(tree: ast.Module) -> set[str]:
     """Names a module binds at top level, including inside top-level
     if/try/with blocks."""
@@ -57,11 +62,22 @@ def _bound_names(tree: ast.Module) -> set[str]:
     return names
 
 
+def _from_base(mod: str, is_pkg: bool, node: ast.ImportFrom) -> str | None:
+    """The absolute module a repo-local `from X import ...` in `mod`
+    names, or None when X is not repo-local."""
+    if node.level:
+        pkg = mod.split(".") if is_pkg else mod.split(".")[:-1]
+        pkg = pkg[:len(pkg) - (node.level - 1)]
+        return ".".join(pkg + ([node.module] if node.module else []))
+    if (node.module or "").split(".")[0] in LOCAL:
+        return node.module
+    return None
+
+
 def dangling_imports(root: pathlib.Path) -> list[str]:
     """'<file>:<line>: <what>' for every repo-local import that does not
     resolve to an existing module, or to a name that module binds."""
-    files = {_module_name(root, p): p for p in _tracked_py(root)}
-    trees = {m: ast.parse(p.read_text(), str(p)) for m, p in files.items()}
+    files, trees = _parse_all(root)
     bound = {m: _bound_names(t) for m, t in trees.items()}
     bad = []
     for mod, tree in trees.items():
@@ -73,13 +89,8 @@ def dangling_imports(root: pathlib.Path) -> list[str]:
                     if a.name.split(".")[0] in LOCAL and a.name not in files:
                         bad.append(f"{where}:{node.lineno}: import {a.name}")
             elif isinstance(node, ast.ImportFrom):
-                if node.level:
-                    pkg = mod.split(".") if is_pkg else mod.split(".")[:-1]
-                    pkg = pkg[:len(pkg) - (node.level - 1)]
-                    base = ".".join(pkg + ([node.module] if node.module else []))
-                elif (node.module or "").split(".")[0] in LOCAL:
-                    base = node.module
-                else:
+                base = _from_base(mod, is_pkg, node)
+                if base is None:
                     continue
                 if base not in files:
                     bad.append(f"{where}:{node.lineno}: from {base} import ...")
@@ -92,3 +103,55 @@ def dangling_imports(root: pathlib.Path) -> list[str]:
 
 def test_repo_local_imports_resolve():
     assert dangling_imports(ROOT) == []
+
+
+# The engine's entry points: code no import chain from these reaches is
+# dead weight (tests alone do not keep a module alive).
+ROOTS = ("pdf_to_text_spark/pipeline.py", "pdf_to_text_spark/run.py",
+         "pdf_to_text_spark/streaming", "perfbench")
+
+# Engine modules no root reaches that stay on purpose, each with its
+# reason. Anything else unreached is deleted, not added here.
+UNREACHED_OK = {
+    # media codecs: only their tests decode media; they go codec by codec
+    "pdf_to_text_spark.kernels.media",
+    # stand-alone chunk enrichment: whether it stays is still open
+    "pdf_to_text_spark.operators.enrichment",
+    # the tests' loader for the generated sf testdata tables
+    "pdf_to_text_spark.sources.catalog",
+}
+
+
+def reachable_modules(root: pathlib.Path) -> set[str]:
+    """Repo-local modules reachable by import from ROOTS: each import
+    pulls in the named module, its parent packages and, for
+    `from pkg import sub`, the submodule. Function-local imports count."""
+    files, trees = _parse_all(root)
+    todo = [m for m, p in files.items()
+            if any(str(p.relative_to(root)).startswith(r) for r in ROOTS)]
+    seen: set[str] = set()
+    while todo:
+        mod = todo.pop()
+        if mod in seen or mod not in files:
+            continue
+        seen.add(mod)
+        parts = mod.split(".")
+        todo += [".".join(parts[:i]) for i in range(1, len(parts))]
+        is_pkg = files[mod].name == "__init__.py"
+        for node in ast.walk(trees[mod]):
+            if isinstance(node, ast.Import):
+                todo += [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = _from_base(mod, is_pkg, node)
+                if base is not None:
+                    todo += [base] + [f"{base}.{a.name}" for a in node.names]
+    return seen
+
+
+def test_every_engine_module_is_reachable_from_a_root():
+    files, _ = _parse_all(ROOT)
+    engine = {m for m in files if m.split(".")[0] == "pdf_to_text_spark"}
+    unreached = engine - reachable_modules(ROOT)
+    assert sorted(unreached - UNREACHED_OK) == []
+    # an allowlisted module that a root reaches again leaves the list
+    assert sorted(UNREACHED_OK - unreached) == []

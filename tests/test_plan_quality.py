@@ -131,7 +131,7 @@ def test_artifact_sinks_are_one_python_pass_each(spark, pages, tmp_path):
 
 
 def test_lsh_band_join_is_hash_keyed_not_cartesian(spark):
-    """MinHash/SimHash candidate joins must hash-join on band keys —
+    """MinHash and n-gram candidate joins must hash-join on their keys —
     a cartesian/BNLJ here is corpus² and would be fatal at scale."""
     from pdf_to_text_spark.operators import dedup
     from pdf_to_text_spark.sources.catalog import load
@@ -139,7 +139,6 @@ def test_lsh_band_join_is_hash_keyed_not_cartesian(spark):
     docs = load(spark, "documents", "/root/testdata/sf0.001")
     for df in (
         dedup.minhash_candidate_pairs(dedup.minhash_signatures(docs)),
-        dedup.simhash_near_pairs(docs),
         dedup.ngram_jaccard_pairs(docs),
     ):
         plan = _plan(df)
@@ -170,20 +169,24 @@ def test_dedup_corpus_is_one_linear_kernel_pass(spark):
     for cols in inputs:
         assert not re.search(r"\btext#", cols), plan
 
-def test_embedding_near_pairs_lsh_is_bucket_keyed(spark):
-    """The queries() entry point for embedding near-dup must be the
-    LSH-bucketed plan (VERDICT r1 #3): keyed joins only — the O(n²)
-    cross join lives solely in embedding_near_pairs_exact."""
-    from pdf_to_text_spark.operators import dedup
-    from pdf_to_text_spark.sources.catalog import load
+def test_strip_duplicate_lines_is_one_linear_plan(spark):
+    """strip_duplicate_lines is explode → aggregate by line → aggregate
+    by doc_id: exactly two Exchanges, and no Window, join, cached
+    relation or round-robin repartition."""
+    import os
 
-    emb = load(spark, "embeddings", "/root/testdata/sf0.001")
-    plan = _plan(dedup.embedding_near_pairs(emb, threshold=0.3, dim=64))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # the audit baseline is deliberately exhaustive
-    exact = _plan(dedup.embedding_near_pairs_exact(emb, threshold=0.3))
-    assert "CartesianProduct" in exact or "BroadcastNestedLoopJoin" in exact
+    from pdf_to_text_spark.operators import dedup
+    from pdf_to_text_spark.sources.catalog import DEFAULT_SF_DIR, load
+
+    # the smallest generated table set, beside the default one
+    docs = load(spark, "documents", os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001"))
+    plan = _plan(dedup.strip_duplicate_lines(docs))
+    tree = plan.split("\n\n", 1)[0]  # the operator tree, one line per node
+    assert len(_exchange_inputs(plan)) == 2, plan
+    assert "Window" not in tree, plan
+    assert "Join" not in tree, plan
+    assert not re.search(r"InMemory(TableScan|Relation)", plan), plan
+    assert "RoundRobinPartitioning" not in plan, plan
 
 
 def test_ngram_jaccard_candidates_path_is_keyed(spark):
