@@ -17,6 +17,14 @@ Layout:
               checkpoint/resume (Iceberg-style
               manifest emulation)
   streaming/  Structured Streaming variant of the extraction pipeline
+
+Importing the package installs ``_zipcache``: PySpark re-reads every zip
+directory on ``sys.path`` before each Python task on CPython < 3.13, and
+the installed method skips archives that have not changed.
 """
+
+from pdf_to_text_spark import _zipcache
+
+_zipcache.install()
 
 __version__ = "0.1.0"
