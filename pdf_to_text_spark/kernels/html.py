@@ -7,9 +7,18 @@ Boilerpipe (Kohlschütter et al., WSDM 2010) densitometric-classification
 and jusText (Pomikálek 2011) link-density algorithms. SURVEY.md §2.9.
 
 Pinned spec:
-  1. Parse with stdlib html.parser; split into block-level segments at
-     config.HTML_BLOCK_TAGS boundaries; drop config.HTML_DROP_TAGS
-     subtrees and comments entirely; decode entities.
+  1. Parse with the event semantics of stdlib html.parser (3.11); split
+     into block-level segments at config.HTML_BLOCK_TAGS boundaries; drop
+     config.HTML_DROP_TAGS subtrees and comments entirely; decode
+     entities. One compiled regex, `_TOK`, tokenizes the common grammar
+     (text runs, start tags with quoted or valueless attributes, end
+     tags, comments, doctype, script/style content) and drives the
+     `_BlockCollector` handlers directly. At the first `<` that grammar
+     does not match, the rest of the page goes to the same collector's
+     `HTMLParser.feed` + `close` (the tail parser). This is exact: at
+     every token boundary outside script/style, html.parser holds no
+     state, and the collector's buffers do not depend on how the text
+     is split. tests/test_html_tokenizer.py pins the equivalence.
   2. Per block compute words, chars, link_chars (text inside <a>),
      link_text_ratio = link_chars / max(1, chars).
   3. Content iff link_text_ratio < HTML_LINK_RATIO_MAX and
@@ -26,6 +35,7 @@ to the parse_failed metric instead of failing the task.
 from __future__ import annotations
 
 import re
+from html import unescape
 from html.parser import HTMLParser
 
 from ..config import (
@@ -43,6 +53,14 @@ _WS_RE = re.compile(r"[ \t\r\f\v]+")
 def _normalize(raw: str) -> str:
     """The block whitespace rule (§4 of the pinned spec), shared by text
     and link-char accounting so the two can never disagree."""
+    text = raw.strip()
+    # the two subs below change nothing unless `[\t\n\r\f\v]|  ` matches;
+    # six substring tests (memchr) run ~8x faster than that regex
+    if not (
+        "  " in text or "\n" in text or "\t" in text
+        or "\r" in text or "\f" in text or "\v" in text
+    ):
+        return text
     text = _WS_RE.sub(" ", raw).strip()
     if "\n" in text:
         # collapse internal newline runs left by nested flushes
@@ -101,7 +119,7 @@ class _BlockCollector(HTMLParser):
         # several handle_data calls ('<a>read <b>more</b></a>' → 8 of 9
         # chars), biasing link_ratio low and letting linky boilerplate
         # past the threshold (r6 review)
-        link = len(_normalize("".join(self._link_buf)))
+        link = len(_normalize("".join(self._link_buf))) if self._link_buf else 0
         self._buf.clear()
         self._link_buf.clear()
         if text:
@@ -164,12 +182,85 @@ class _BlockCollector(HTMLParser):
         self._flush()
 
 
+# The common grammar, each alternative a construct on which html.parser
+# 3.11 emits exactly the events _tokenize emits. Separators inside a tag
+# are [ \t\n\r\f], NOT \s: html.parser's tag name runs on through \v,
+# \xa0 and the other Unicode spaces ('<p\vx>' is tag 'p\x0bx'), so a tag
+# holding one of those goes to the tail parser. Attribute values must be
+# quoted (a bare value may end in '/', which changes <x/> detection), and
+# attribute names exclude quotes, '<' and '=' so each one ends where
+# html.parser's does. The attributes themselves are never read.
+_SEP = r"[ \t\n\r\f]"
+_TOK = re.compile(
+    r"([^<]*+)(?:"  # 1: the text run before the construct
+    r"<([a-zA-Z][a-zA-Z0-9]*)"  # 2: start tag name
+    rf"(?:{_SEP}+[^\s\"'<>/=]+(?:{_SEP}*={_SEP}*(?:\"[^\"]*\"|'[^']*'))?)*"
+    rf"{_SEP}*(/?)>"  # 3: '/' of <x/>
+    rf"|</([a-zA-Z][a-zA-Z0-9]*){_SEP}*>"  # 4: end tag
+    r"|<!--.*?--\s*>|<![dD][oO][cC][tT][yY][pP][eE][^>]*>"  # comment, doctype
+    r"|\Z)",  # or the end of the page
+    re.S,
+)
+# script/style content runs to this end tag, as HTMLParser.set_cdata_mode
+# has it; html.parser's endtagfind then decides whether that end tag closes
+# the element (a re.I match such as '</ſcript>' does not)
+_CDATA_END = {
+    t: re.compile(r"</\s*%s\s*>" % t, re.I) for t in HTMLParser.CDATA_CONTENT_ELEMENTS
+}
+_ENDTAGFIND = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
+
+
+def _skip_cdata(p: _BlockCollector, html: str, pos: int, tag: str) -> int:
+    """Content of <script>/<style> from `pos` → position after its end
+    tag; an element that never ends swallows the rest of the page."""
+    search = _CDATA_END[tag].search
+    while (m := search(html, pos)) is not None:
+        j, gt = m.span()
+        if j > pos:
+            p.handle_data(html[pos:j])
+        e = _ENDTAGFIND.match(html, j)
+        if e is not None and e.group(1).lower() == tag:
+            p.handle_endtag(tag)
+            return gt
+        p.handle_data(html[j:gt])
+        pos = gt
+    return len(html)
+
+
+def _tokenize(p: _BlockCollector, html: str) -> None:
+    """Drive `p` over `html`: `_TOK` up to the first construct outside
+    its grammar, html.parser from there (that construct's text run
+    included) to the end."""
+    match = _TOK.match
+    on_data, on_start, on_end = p.handle_data, p.handle_starttag, p.handle_endtag
+    pos, n = 0, len(html)
+    while pos < n:
+        m = match(html, pos)
+        if m is None:
+            p.feed(html[pos:])
+            break
+        text, start, slash, end = m.groups()
+        if text:
+            on_data(unescape(text) if "&" in text else text)
+        pos = m.end()
+        if start:
+            tag = start.lower()
+            if slash:
+                p.handle_startendtag(tag, [])
+            else:
+                on_start(tag, [])
+                if tag in _CDATA_END:
+                    pos = _skip_cdata(p, html, pos, tag)
+        elif end:
+            on_end(end.lower())
+    p.close()
+
+
 def segment_blocks(html: str) -> list[Block]:
     """HTML string → ordered block list with densitometric stats."""
     p = _BlockCollector()
     try:
-        p.feed(html)
-        p.close()
+        _tokenize(p, html)
     except Exception as e:  # html.parser is lenient; anything else is a fail
         raise HTMLParseFailed(str(e)) from e
     return p.blocks
