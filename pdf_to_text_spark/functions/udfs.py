@@ -3,9 +3,14 @@
 Design rules (BASELINE.json input_hint: "no per-row Python"):
   * every UDF is a pandas/Arrow batch function — the JVM↔Python boundary
     is crossed once per batch, never per row;
-  * the extraction UDF yields output in byte-capped slices so a batch of
-    megabyte PDFs can't blow the Arrow IPC buffer (SURVEY.md §4
-    "byte-capped batch yielding");
+  * extraction is one mapInArrow (extract_arrow_batches): each Arrow
+    batch is read once into Python lists, url/warc_ts/lang pass through
+    as Arrow arrays, and the kernel columns become Arrow arrays with no
+    pandas round trip. extract_batches runs the same row loop over
+    pandas frames for in-process replays;
+  * extraction yields output in byte-capped slices (UTF-8 bytes of the
+    text column) so a batch of megabyte PDFs can't blow the Arrow IPC
+    buffer (SURVEY.md §4 "byte-capped batch yielding");
   * errors become per-row ``parse_status`` values, never task failures
     (reference #18 softened: a bad document must not kill a 100 TB job).
 """
@@ -15,6 +20,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -36,7 +42,7 @@ def content_type_col(url="url", html="html"):
 
     Pure built-in expression — stays inside WholeStageCodegen. THE single
     definition of the dispatch rule: operators.extraction.
-    content_type_dispatch uses this expression and extract_batches
+    content_type_dispatch uses this expression and _extract_rows
     mirrors it row-wise (a NULL url with html bytes is text/html on both
     paths — r3 review pinned the two copies together).
     """
@@ -48,7 +54,7 @@ def content_type_col(url="url", html="html"):
     )
 
 
-# ── extraction (mapInPandas, the heavy kernel) ───────────────────────────────
+# ── extraction (mapInArrow, the heavy kernel) ────────────────────────────────
 
 EXTRACT_SCHEMA = T.StructType(
     [
@@ -62,6 +68,21 @@ EXTRACT_SCHEMA = T.StructType(
         T.StructField("parse_status", T.StringType()),
         # ok|passthrough|empty|encrypted|unsupported_cmap|parse_failed
         T.StructField("parse_failed", T.IntegerType()),
+    ]
+)
+
+# EXTRACT_SCHEMA as Arrow (pinned equal to pyspark's to_arrow_schema of it)
+EXTRACT_ARROW_SCHEMA = pa.schema(
+    [
+        ("url", pa.string()),
+        ("warc_ts", pa.timestamp("us", tz="UTC")),
+        ("lang", pa.string()),
+        ("content_type", pa.string()),
+        ("extracted_text", pa.string()),
+        ("n_pages", pa.int32()),
+        ("n_chars", pa.int64()),
+        ("parse_status", pa.string()),
+        ("parse_failed", pa.int32()),
     ]
 )
 
@@ -97,50 +118,91 @@ def _extract_one(html, text, is_pdf: bool) -> tuple[str, int, str, int]:
         return "", 0, "parse_failed", 1
 
 
-def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: pages rows → extracted rows, byte-capped yields."""
-    cols = list(EXTRACT_SCHEMA.fieldNames())
+def _extract_rows(urls, htmls, texts):
+    """The kernel's row loop: one (content_type, extracted_text, n_pages,
+    parse_status, parse_failed) per row."""
+    for url, html, text in zip(urls, htmls, texts):
+        # (url or ""): a NULL url must cost a text/html fallback, not
+        # an AttributeError that fails the task (per-row error rule)
+        is_pdf = bool(
+            (url or "").endswith(".pdf") and html is not None and html[:5] == b"%PDF-"
+        )
+        ctype = None if html is None else ("application/pdf" if is_pdf else "text/html")
+        yield (ctype, *_extract_one(html, text, is_pdf))
+
+
+def _capped(rows):
+    """Group the row loop into slices: a slice ends at the row that takes
+    its text to ARROW_MAX_BATCH_BYTES.
+
+    UTF-8 bytes, not code points (r5 review): CJK output — the whole
+    point of the CMap decode paths — is ~3 bytes/char in the Arrow
+    string buffer, so counting len(out) admitted ~3× the intended cap.
+    The encode costs ~1 GB/s, noise next to the kernel it follows."""
     buf: list[tuple] = []
     buf_bytes = 0
-
-    def drain():
-        nonlocal buf, buf_bytes
-        df = pd.DataFrame(buf, columns=cols)
-        buf = []
-        buf_bytes = 0
-        return df
-
-    for b in batches:
-        urls = b["url"].tolist()
-        tss = b["warc_ts"].tolist()
-        htmls = b["html"].tolist()
-        texts = b["text"].tolist()
-        langs = b["lang"].tolist()
-        for url, ts, html, text, lang in zip(urls, tss, htmls, texts, langs):
-            # (url or ""): a NULL url must cost a text/html fallback, not
-            # an AttributeError that fails the task (per-row error rule)
-            is_pdf = bool(
-                (url or "").endswith(".pdf")
-                and html is not None
-                and html[:5] == b"%PDF-"
-            )
-            ctype = (
-                None
-                if html is None
-                else ("application/pdf" if is_pdf else "text/html")
-            )
-            out, n_pages, status, failed = _extract_one(html, text, is_pdf)
-            buf.append((url, ts, lang, ctype, out, n_pages, len(out), status, failed))
-            # UTF-8 bytes, not code points (r5 review): CJK output — the
-            # whole point of the CMap decode paths — is ~3 bytes/char in
-            # the Arrow string buffer, so counting len(out) admitted
-            # ~3× the intended cap. The encode costs ~1 GB/s, noise
-            # next to the kernel it follows.
-            buf_bytes += len(out.encode("utf-8", "replace"))
-            if buf_bytes >= ARROW_MAX_BATCH_BYTES:
-                yield drain()
+    for r in rows:
+        buf.append(r)
+        buf_bytes += len(r[1].encode("utf-8", "replace"))
+        if buf_bytes >= ARROW_MAX_BATCH_BYTES:
+            yield buf
+            buf = []
+            buf_bytes = 0
     if buf:
-        yield drain()
+        yield buf
+
+
+def extract_arrow_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel: pages batches → EXTRACT_ARROW_SCHEMA batches,
+    byte-capped yields. url, warc_ts and lang pass through as Arrow
+    slices (cast only where the session hands another type, e.g. a
+    non-UTC session time zone)."""
+    passthrough = [EXTRACT_ARROW_SCHEMA.field(c) for c in ("url", "warc_ts", "lang")]
+    for b in batches:
+        keep = []
+        for f in passthrough:
+            col = b.column(f.name)
+            keep.append(col if col.type == f.type else col.cast(f.type))
+        start = 0
+        rows = _extract_rows(
+            keep[0].to_pylist(), b.column("html").to_pylist(), b.column("text").to_pylist()
+        )
+        for part in _capped(rows):
+            k = len(part)
+            ctypes, outs, n_pages, statuses, failed = zip(*part)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    *(col.slice(start, k) for col in keep),
+                    pa.array(ctypes, pa.string()),
+                    pa.array(outs, pa.string()),
+                    pa.array(n_pages, pa.int32()),
+                    pa.array([len(o) for o in outs], pa.int64()),
+                    pa.array(statuses, pa.string()),
+                    pa.array(failed, pa.int32()),
+                ],
+                schema=EXTRACT_ARROW_SCHEMA,
+            )
+            start += k
+
+
+def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """extract_arrow_batches' row loop and byte cap over pandas frames
+    (pages columns in, EXTRACT_SCHEMA columns out), for in-process
+    replays of the kernel without Spark."""
+    cols = EXTRACT_SCHEMA.fieldNames()
+    for b in batches:
+        meta = zip(b["url"].tolist(), b["warc_ts"].tolist(), b["lang"].tolist())
+        rows = _extract_rows(b["url"].tolist(), b["html"].tolist(), b["text"].tolist())
+        for part in _capped(rows):
+            # part first: zip stops on it without drawing from meta
+            yield pd.DataFrame(
+                [
+                    (url, ts, lang, ctype, out, n_pages, len(out), status, failed)
+                    for (ctype, out, n_pages, status, failed), (url, ts, lang)
+                    in zip(part, meta)
+                ],
+                columns=cols,
+            )
 
 
 # ── segmentation / per-document artifacts ───────────────────────────────────

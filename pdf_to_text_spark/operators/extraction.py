@@ -3,7 +3,7 @@
 Spark-first restatement of the reference's /upload dataflow
 (src/main.ts:133-263): scan → Arrow-batched extraction kernel over the
 scan splits → keep the newest crawl per url → metrics rollup.
-Everything before and after the one mapInPandas stage is built-in
+Everything before and after the one mapInArrow stage is built-in
 Catalyst expressions (pushdown/pruning-friendly).
 """
 
@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import N_BUCKETS
-from ..functions.udfs import EXTRACT_SCHEMA, content_type_col, extract_batches
+from ..functions.udfs import EXTRACT_SCHEMA, content_type_col, extract_arrow_batches
 from ..plans.layout import with_bucket
 
 PAGES_COLS = ["url", "warc_ts", "html", "text", "lang"]
@@ -93,8 +93,8 @@ def run_extraction(
     wave filtering.
     """
     nb = N_BUCKETS if n_buckets is None else n_buckets
-    extracted = pages.select(*PAGES_COLS).mapInPandas(
-        extract_batches, schema=EXTRACT_SCHEMA
+    extracted = pages.select(*PAGES_COLS).mapInArrow(
+        extract_arrow_batches, schema=EXTRACT_SCHEMA
     )
     extracted = extracted.withColumn("partition_id", F.spark_partition_id())
     if dedup:

@@ -2,7 +2,7 @@
 
 The reference is request/response (one doc per HTTP call); its streaming
 analogue is a continuous crawl feed. This module runs the SAME extraction
-kernel (functions/udfs.extract_batches) over a file-source stream of
+kernel (functions/udfs.extract_arrow_batches) over a file-source stream of
 pages parquet, with:
 
   * exactly-once sink semantics via the streaming checkpoint (replaces
@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import EXTRACT_SCHEMA, extract_batches
+from ..functions.udfs import EXTRACT_SCHEMA, extract_arrow_batches
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -39,8 +39,8 @@ def read_pages_stream(
 
 def extract_stream(pages_stream: DataFrame) -> DataFrame:
     """Same Arrow-batched kernel, streaming micro-batches."""
-    return pages_stream.select("url", "warc_ts", "html", "text", "lang").mapInPandas(
-        extract_batches, schema=EXTRACT_SCHEMA
+    return pages_stream.select("url", "warc_ts", "html", "text", "lang").mapInArrow(
+        extract_arrow_batches, schema=EXTRACT_SCHEMA
     )
 
 

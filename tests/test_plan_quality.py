@@ -56,9 +56,10 @@ def test_no_payload_shuffle_before_kernel(pages):
     plan = _plan(run_extraction(pages))
     # the formatted plan opens with the operator tree, root first: the
     # nodes between the kernel and the scan sit between their first
-    # mentions
-    kernel_pos, scan_pos = plan.find("MapInPandas"), plan.find("Scan parquet")
+    # mentions. The kernel is one Arrow crossing, no pandas node.
+    kernel_pos, scan_pos = plan.find("MapInArrow"), plan.find("Scan parquet")
     assert 0 <= kernel_pos < scan_pos, plan
+    assert "MapInPandas" not in plan, plan
     assert "Exchange" not in plan[kernel_pos:scan_pos], plan
     for cols in _exchange_inputs(plan):
         assert "html" not in cols, plan

@@ -61,6 +61,10 @@ def lzw_encode(data: bytes, early: int = 1) -> bytes:
         w = bytes([ch])
     if w:
         emit(table[w])
+        # the decoder adds an entry for this last code too, and widens
+        # before it reads EOD when that entry reaches the edge
+        if next_code >= (1 << width) - early and width < 12:
+            width += 1
     emit(257)  # EOD
     if bits:
         out.append((buf << (8 - bits)) & 0xFF)
