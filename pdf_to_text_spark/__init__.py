@@ -16,7 +16,6 @@ Layout:
   plans/      layout (url-hash buckets, small-scan spreading) +
               checkpoint/resume (Iceberg-style
               manifest emulation)
-  streaming/  Structured Streaming variant of the extraction pipeline
 
 Importing the package installs ``_zipcache``: PySpark re-reads every zip
 directory on ``sys.path`` before each Python task on CPython < 3.13, and

@@ -12,8 +12,6 @@ import os
 # Reference: /root/reference/src/main.ts:166 (MAX_BLOCKS_PER_REQUEST = 10;
 # the comment says 5, the code says 10 — code wins, SURVEY.md §2 #8).
 MAX_BLOCKS_PER_CHUNK = 10
-# Chunk-internal block delimiter (src/main.ts:177 `blockGroup.join("\n\n")`).
-CHUNK_BLOCK_DELIM = "\n\n"
 # Block start prefix (src/main.ts:79) and end regex (src/main.ts:94).
 BLOCK_START_PREFIX = "sucursal"
 BLOCK_END_REGEX = r"\* total importe en la sucursal:\s*\d+(\.\d+)?"
@@ -48,19 +46,17 @@ N_BUCKETS = int(os.environ.get("PTS_N_BUCKETS", "32"))
 # finding was about a blanket repartition(128); only the md5-cheap
 # fingerprint paths lose, and those simply don't call the helper).
 # The gate SFs (0.001/0.01, ~28 KB est.) stay below MIN → gate plans
-# unchanged. Production clusters tune via env: MIN scales with
-# (per-task scheduling cost x cluster size), MAX with what a one-off
-# shuffle of the whole relation may cost there.
-SPREAD_MIN_BYTES = int(os.environ.get("PTS_SPREAD_MIN_BYTES", str(128 << 10)))
-SPREAD_MAX_BYTES = int(os.environ.get("PTS_SPREAD_MAX_BYTES", str(1 << 30)))
-SPREAD_TARGET_BYTES = int(os.environ.get("PTS_SPREAD_TARGET_BYTES", str(96 << 10)))
+# unchanged.
+SPREAD_MIN_BYTES = 128 << 10
+SPREAD_MAX_BYTES = 1 << 30
+SPREAD_TARGET_BYTES = 96 << 10
 # stats gate for persisting plan-fan-out band relations (operators/dedup
 # _persist_if_large): below this estimated size the cache barrier costs
 # more than recomputing both fan-out branches (measured r7 at 5k docs)
-BAND_PERSIST_MIN_BYTES = int(os.environ.get("PTS_BAND_PERSIST_MIN_BYTES", str(1 << 20)))
+BAND_PERSIST_MIN_BYTES = 1 << 20
 # Arrow batch budget: rows are megabyte-scale, so cap batch *bytes*, not rows.
-ARROW_MAX_BATCH_BYTES = int(os.environ.get("PTS_ARROW_MAX_BATCH_BYTES", str(32 << 20)))
-ARROW_MAX_RECORDS_PER_BATCH = int(os.environ.get("PTS_ARROW_MAX_RECORDS", "256"))
+ARROW_MAX_BATCH_BYTES = 32 << 20
+ARROW_MAX_RECORDS_PER_BATCH = 256
 
 
 def package_zip(out_dir: str | None = None) -> str:
@@ -101,7 +97,7 @@ def build_spark(app_name: str = "pdf_to_text_spark", master: str | None = None,
     master = master or os.environ.get("PTS_MASTER", "local[*]")
     cores = os.cpu_count() or 8
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("PTS_SHUFFLE_PARTITIONS", str(max(32, cores))))
+        shuffle_partitions = max(32, cores)
 
     b = (
         SparkSession.builder.appName(app_name)
@@ -111,13 +107,11 @@ def build_spark(app_name: str = "pdf_to_text_spark", master: str | None = None,
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow hands applyInPandasWithState NAIVE session-tz wall-clock
-        # timestamps; on a DST-observing machine wall-clock is
-        # non-monotonic across fall-back, so the stateful dedup's
-        # newer-than compare (streaming/stateful.py) could drop a strictly
-        # newer crawl. Pin the session to UTC — instants stay monotonic
-        # everywhere and parquet comparisons are machine-independent
-        # (r6 review)
+        # Pin the session to UTC: mapInArrow hands warc_ts over in the
+        # session time zone while the extraction kernel's schema carries
+        # it as UTC (EXTRACT_ARROW_SCHEMA), so any other zone costs a
+        # cast per batch; and a timestamp rendered as text (show, date
+        # functions, string casts) reads the same on every machine
         .config("spark.sql.session.timeZone", "UTC")
         # megabyte-scale binary rows: keep Arrow batches small (SURVEY.md §4)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",

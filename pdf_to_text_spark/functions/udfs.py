@@ -34,26 +34,6 @@ from ..kernels.pdf import (
     extract_pdf_text,
 )
 
-# ── content-type dispatch (FIXTURES.md §1 derived column) ───────────────────
-
-
-def content_type_col(url="url", html="html"):
-    """application/pdf iff url ends .pdf AND bytes start %PDF-, else text/html.
-
-    Pure built-in expression — stays inside WholeStageCodegen. THE single
-    definition of the dispatch rule: operators.extraction.
-    content_type_dispatch uses this expression and _extract_rows
-    mirrors it row-wise (a NULL url with html bytes is text/html on both
-    paths — r3 review pinned the two copies together).
-    """
-    is_pdf = F.col(url).endswith(".pdf") & (
-        F.substring(F.col(html).cast("binary"), 1, 5) == F.lit(b"%PDF-")
-    )
-    return F.when(F.col(html).isNull(), F.lit(None).cast("string")).otherwise(
-        F.when(is_pdf, F.lit("application/pdf")).otherwise(F.lit("text/html"))
-    )
-
-
 # ── extraction (mapInArrow, the heavy kernel) ────────────────────────────────
 
 EXTRACT_SCHEMA = T.StructType(
@@ -120,7 +100,11 @@ def _extract_one(html, text, is_pdf: bool) -> tuple[str, int, str, int]:
 
 def _extract_rows(urls, htmls, texts):
     """The kernel's row loop: one (content_type, extracted_text, n_pages,
-    parse_status, parse_failed) per row."""
+    parse_status, parse_failed) per row.
+
+    The one definition of the content-type rule: application/pdf iff
+    the url ends .pdf AND the bytes start %PDF-, NULL without bytes, else
+    text/html."""
     for url, html, text in zip(urls, htmls, texts):
         # (url or ""): a NULL url must cost a text/html fallback, not
         # an AttributeError that fails the task (per-row error rule)

@@ -1,24 +1,21 @@
-"""Block segmentation, chunking, record extraction, CSV/JSON serialization.
+"""Block segmentation, record extraction, CSV/JSON serialization.
 
 Pure-Python re-statements of the reference's downstream dataflow:
 
   * segment_blocks   — src/main.ts:70-109  (extractBlocksFromPDFText)
-  * chunk_blocks     — src/main.ts:116-124 (splitBlocksForOpenAI), size 10
-                       per src/main.ts:166
   * parse_records    — deterministic stand-in for the LLM field-extraction
                        stage (src/main.ts:169-234): same output schema
                        {SucursalName, EAN, CantidadVendida, Importe}, but a
-                       regex parser so the pipeline is reproducible. The
-                       enrichment stage is pluggable (SURVEY.md §2 #9).
-  * extract_json_fenced — src/main.ts:25-36 (extractJsonFromResponse)
+                       regex parser so the pipeline is reproducible
   * records_to_csv   — src/main.ts:39-56 with every quirk preserved:
                        `parseInt(...)||0` / `parseFloat(...)||0` coercions,
                        `.toFixed(2)`, quotes NOT escaped, no trailing newline
   * records_to_pretty_json — JSON.stringify(data, null, 2) equivalent
                        (src/main.ts:242)
   * doc_artifacts    — one upload's records, CSV and JSON in one pass
-                       (src/main.ts:133-263); the only CSV/JSON serializer
-                       the Spark artifacts use
+                       (src/main.ts:133-263), records tagged with their
+                       chunk of 10 blocks (src/main.ts:116-124,166); the
+                       only CSV/JSON serializer the Spark artifacts use
 """
 
 from __future__ import annotations
@@ -38,9 +35,7 @@ from ..config import (
 
 __all__ = [
     "segment_blocks",
-    "chunk_blocks",
     "parse_records",
-    "extract_json_fenced",
     "records_to_csv",
     "records_to_pretty_json",
     "doc_artifacts",
@@ -82,11 +77,6 @@ def segment_blocks(full_text: str) -> list[str]:
     return blocks
 
 
-def chunk_blocks(blocks: list[str], max_per_chunk: int = MAX_BLOCKS_PER_CHUNK) -> list[list[str]]:
-    """Order-preserving fixed-size grouping (src/main.ts:116-124)."""
-    return [blocks[i : i + max_per_chunk] for i in range(0, len(blocks), max_per_chunk)]
-
-
 # ── deterministic field extraction (LLM stand-in) ───────────────────────────
 
 _SALE_RE = re.compile(
@@ -117,21 +107,6 @@ def parse_records(block: str) -> list[dict]:
                 }
             )
     return out
-
-
-_FENCE_RE = re.compile(r"```json([\s\S]+?)```")
-
-
-def extract_json_fenced(response_text: str) -> str:
-    """src/main.ts:25-36 — fenced-JSON extraction with whole-text fallback.
-
-    Returns the validated JSON string; raises ValueError on invalid JSON
-    (callers route to a metrics counter instead of aborting, #10/#18).
-    """
-    m = _FENCE_RE.search(response_text)
-    candidate = m.group(1).strip() if m else response_text.strip()
-    json.loads(candidate)  # validate
-    return candidate
 
 
 # ── CSV / JSON serialization quirks ─────────────────────────────────────────

@@ -1,15 +1,13 @@
 """Real stdlib-only media codecs (round 6 — VERDICT r5 #3).
 
-PNG, TIFF, BMP, GIF, baseline JPEG, WAV-PCM (incl. G.711 telephony),
-Y4M raw video and MJPEG AVI decode with
-zero external dependencies (JPEG leans on numpy — baked into the
-runtime — for the IDCT), so features are computed over REAL pixels,
-samples and frames instead of the contract-sanctioned stub (which
+PNG, TIFF, BMP, baseline JPEG and WAV-PCM (incl. G.711 telephony)
+decode with zero external dependencies (JPEG leans on numpy — baked
+into the runtime — for the IDCT), so features are computed over REAL
+pixels and samples instead of the contract-sanctioned stub (which
 remains the fallback for formats that genuinely need external
-libraries — MP3, MP4/MKV compressed video —
-and is reported distinctly as decode_status='stub';
-progressive/arithmetic JPEG is RECOGNIZED and surfaces the countable
-decode_failed class instead).
+libraries — MP3, video — and is reported distinctly as
+decode_status='stub'; progressive/arithmetic JPEG is RECOGNIZED and
+surfaces the countable decode_failed class instead).
 
 Public specs implemented:
 * PNG (RFC 2083 / W3C PNG): signature, IHDR/PLTE/IDAT/IEND chunk walk,
@@ -21,11 +19,6 @@ Public specs implemented:
   sample expansion), color types 0/2/3/4/6, interlace 0 and Adam7
   (seven independently-filtered passes scattered onto the pass
   grid).
-* GIF (GIF89a spec): logical screen + image descriptors, global/local
-  color tables, extension-block skip, GIF-variant LZW (LSB-first,
-  CLEAR/EOI, 3..12-bit growing codes — the opposite bit order of the
-  PDF/TIFF LZW in kernels/pdf.py), 4-pass de-interlace, palette→RGB.
-  First frame only (animation is a documented scope cut).
 * TIFF (baseline TIFF 6.0): both byte orders, first-IFD walk, strip
   organization, compression none/PackBits/LZW (the PDF kernel's
   MSB-first early-change LZW reused — §13 and PDF LZWDecode share the
@@ -41,17 +34,6 @@ Public specs implemented:
   signed LE and 24-bit signed LE PCM (24-bit scaled into the 16-bit
   analysis domain), WAVE_FORMAT_EXTENSIBLE unwrapped when its
   SubFormat GUID names PCM, any channel count.
-* AVI/MJPEG (RIFF AVI): chunk walk to the movi LIST, one baseline
-  JPEG per '##dc'/'##db' frame chunk decoded through this module's
-  JPEG decoder, BT.601 integer luma reduction, strided frame decode
-  (sampling skips the JPEG work entirely for unsampled frames).
-  Non-MJPEG AVIs are countable decode_failed; MP4/MKV are not RIFF
-  and stay on the declared stub path.
-* Y4M (YUV4MPEG2, mjpegtools yuv4mpeg(5)): ASCII stream header
-  (W/H/F/I/A/C/X tags), FRAME markers with optional parameters, planar
-  frames under C420(jpeg|mpeg2|paldv)/C422/C444/Cmono; the decode
-  surface is each frame's luma plane (chroma is size-validated and
-  skipped — features and frame sampling are luma-based).
 
 Encoding (for the resize sink) writes the simplest valid PNG: filter-0
 scanlines, one IDAT, CRC32 per chunk.
@@ -294,135 +276,6 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
             rgb[3 * i : 3 * i + 3] = plte[off : off + 3]
         return width, height, 3, bytes(rgb)
     return width, height, ch, bytes(pixels)
-
-
-# ── GIF decode ───────────────────────────────────────────────────────────────
-
-GIF_MAGICS = (b"GIF87a", b"GIF89a")
-
-
-def _gif_lzw_decode(min_code_size: int, data: bytes, max_out: int) -> bytearray:
-    """GIF-variant LZW (LSB-first bit packing, CLEAR/EOI codes, code
-    width grows 3..12 bits as the table fills — the OPPOSITE bit order
-    of the PDF/TIFF LZW in kernels/pdf.py, hence a separate decoder).
-    Output is clamped at `max_out` indices: trailing codes past the
-    declared geometry are ignored rather than ballooning memory."""
-    # root codes are palette indices (bytes), so the spec bound is 2..8
-    # — 9+ would make clear > 256 and the root table non-byte-valued
-    if not 2 <= min_code_size <= 8:
-        raise MediaDecodeError(f"bad LZW min code size {min_code_size}")
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
-    width = min_code_size + 1
-    prev: bytes | None = None
-    acc = bits = 0
-    for byte in data:
-        acc |= byte << bits
-        bits += 8
-        while bits >= width:
-            code = acc & ((1 << width) - 1)
-            acc >>= width
-            bits -= width
-            if code == clear:
-                table = [bytes([i]) for i in range(clear)] + [b"", b""]
-                width = min_code_size + 1
-                prev = None
-                continue
-            if code == eoi:
-                return out
-            if prev is None:
-                if code >= len(table):
-                    raise MediaDecodeError("bad first LZW code")
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + entry[:1])
-            elif code == len(table):  # KwKwK
-                entry = prev + prev[:1]
-                table.append(entry)
-            else:
-                raise MediaDecodeError("LZW code out of range")
-            out += entry
-            if len(out) >= max_out:
-                return out
-            prev = entry
-            if len(table) >= (1 << width) and width < 12:
-                width += 1
-    return out
-
-
-def decode_gif(data: bytes) -> tuple[int, int, int, bytes]:
-    """GIF bytes → (width, height, 3, RGB pixels) of the FIRST image
-    (animation frames beyond the first are a documented scope cut).
-    Interlaced images are de-interlaced; local palettes override the
-    global one. Raises MediaDecodeError outside the profile."""
-    if data[:6] not in GIF_MAGICS or len(data) < 13:
-        raise MediaDecodeError("not a GIF")
-    sw, sh, packed = struct.unpack_from("<HHB", data, 6)
-    pos = 13
-    gct = b""
-    if packed & 0x80:
-        n = 3 * (2 << (packed & 0x07))
-        gct = data[pos : pos + n]
-        pos += n
-    while pos < len(data):
-        block = data[pos]
-        pos += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension: label + sub-blocks, skipped
-            pos += 1
-            while pos < len(data) and data[pos]:
-                pos += 1 + data[pos]
-            pos += 1
-            continue
-        if block != 0x2C:
-            raise MediaDecodeError(f"unknown GIF block 0x{block:02x}")
-        if pos + 9 > len(data):
-            raise MediaDecodeError("short image descriptor")
-        _left, _top, w, h, ipacked = struct.unpack_from("<HHHHB", data, pos)
-        pos += 9
-        if w == 0 or h == 0 or w * h > MAX_PIXELS:
-            raise MediaDecodeError("dimension bomb")
-        pal = gct
-        if ipacked & 0x80:
-            n = 3 * (2 << (ipacked & 0x07))
-            pal = data[pos : pos + n]
-            pos += n
-        if not pal:
-            raise MediaDecodeError("image without a color table")
-        if pos >= len(data):
-            raise MediaDecodeError("missing LZW data")
-        min_code = data[pos]
-        pos += 1
-        lzw = bytearray()
-        while pos < len(data) and data[pos]:
-            n = data[pos]
-            lzw += data[pos + 1 : pos + 1 + n]
-            pos += 1 + n
-        idx = _gif_lzw_decode(min_code, bytes(lzw), w * h)
-        if len(idx) < w * h:
-            raise MediaDecodeError("short pixel data")
-        if ipacked & 0x40:  # de-interlace: rows arrive in 4 passes
-            rows = [idx[y * w : (y + 1) * w] for y in range(h)]
-            order = (
-                list(range(0, h, 8)) + list(range(4, h, 8))
-                + list(range(2, h, 4)) + list(range(1, h, 2))
-            )
-            deint: list[bytearray | None] = [None] * h
-            for src_row, y in enumerate(order):
-                deint[y] = rows[src_row]
-            idx = bytearray(b"".join(bytes(r) for r in deint))  # type: ignore[arg-type]
-        rgb = bytearray(w * h * 3)
-        npal = len(pal) // 3
-        for i, k in enumerate(idx[: w * h]):
-            if k >= npal:
-                raise MediaDecodeError("palette index out of range")
-            rgb[3 * i : 3 * i + 3] = pal[3 * k : 3 * k + 3]
-        return w, h, 3, bytes(rgb)
-    raise MediaDecodeError("no image block before trailer")
 
 
 # ── JPEG decode (baseline sequential DCT, ITU-T T.81) ────────────────────────
@@ -940,7 +793,7 @@ def decode_tiff(data: bytes) -> tuple[int, int, int, bytes]:
     """Baseline TIFF 6.0 bytes → (width, height, channels, pixels).
 
     Both byte orders (II/MM), first IFD (multi-page files decode their
-    first image, like the GIF first-frame rule), strip organization,
+    first image), strip organization,
     compression none(1)/LZW(5)/PackBits(32773) — the LZW is the same
     MSB-first early-change-1 code the PDF kernel implements
     (kernels/pdf.py _lzw_decode; TIFF 6.0 §13 and PDF LZWDecode share
@@ -1058,238 +911,6 @@ def decode_tiff(data: bytes) -> tuple[int, int, int, bytes]:
 
 
 _INVERT_TABLE = bytes(255 - i for i in range(256))
-
-
-# ── Y4M (YUV4MPEG2) video decode ─────────────────────────────────────────────
-
-Y4M_MAGIC = b"YUV4MPEG2 "
-# Frame-count bomb cap: the pixel cap alone lets a crafted 1x1 stream
-# materialize millions of tiny bytes objects (~50 B each of interpreter
-# overhead); 10k frames of ANY geometry is far beyond a crawl thumbnail
-# clip and bounds the returned list.
-MAX_FRAMES = 10_000
-
-# chroma-plane divisors per colorspace tag (w_div, h_div); the three
-# C420 variants differ only in chroma SITING, which has no effect on
-# plane sizes or on luma — mjpegtools yuv4mpeg(5).
-_Y4M_CHROMA = {
-    "420": (2, 2), "420jpeg": (2, 2), "420mpeg2": (2, 2),
-    "420paldv": (2, 2), "422": (2, 1), "444": (1, 1), "mono": None,
-}
-
-
-def decode_y4m(
-    data: bytes, stride: int = 1
-) -> tuple[int, int, int, list[bytes]]:
-    """Y4M bytes → (width, height, n_frames, luma_frames).
-
-    `stride` materializes only every stride-th frame (ordinals 0,
-    stride, 2*stride, …) while still validating the framing of every
-    frame — the frame-sampling path would otherwise copy ~90% of the
-    stream's luma bytes just to discard them (r6 review). n_frames is
-    always the TOTAL frame count; the cumulative-luma bomb cap applies
-    to the frames actually kept.
-
-    YUV4MPEG2 (the mjpegtools raw-video interchange format — an ASCII
-    stream header, then `FRAME\\n` + raw planar YUV per frame) is the
-    one public video container decodable with zero external libraries,
-    so since round 6 `kind='video'` rows decode for REAL through it
-    (MP4/AVI/MKV need real codec stacks and stay on the declared stub
-    path). Each returned frame is its decoded Y (luma) plane, row-major
-    w*h bytes — the analysis surfaces (features, frame sampling) are
-    luma-based, the standard cheap proxy; chroma planes are validated
-    for size and skipped. Colorspaces C420(jpeg|mpeg2|paldv), C422,
-    C444 and Cmono; subsampled dims must be even (what every real
-    writer produces — a lenient ceil here would silently misalign every
-    subsequent frame boundary). Raises MediaDecodeError on anything
-    else, including a truncated final frame."""
-    if not data.startswith(Y4M_MAGIC):
-        raise MediaDecodeError("not a Y4M stream")
-    eol = data.find(b"\n", 0, 1024)
-    if eol < 0:
-        raise MediaDecodeError("unterminated Y4M stream header")
-    try:
-        header = data[:eol].decode("ascii")
-    except UnicodeDecodeError as e:
-        raise MediaDecodeError("non-ASCII Y4M header") from e
-    w = h = None
-    cs = "420"  # mjpegtools default when no C tag is present
-    for tok in header.split(" ")[1:]:
-        if not tok:
-            continue
-        tag, val = tok[0], tok[1:]
-        if tag == "W" or tag == "H":
-            if not val.isdigit():
-                raise MediaDecodeError(f"bad Y4M {tag} param {val!r}")
-            if tag == "W":
-                w = int(val)
-            else:
-                h = int(val)
-        elif tag == "C":
-            cs = val
-        elif tag == "F" or tag == "A":
-            num, sep, den = val.partition(":")
-            if not (sep and num.isdigit() and den.isdigit()):
-                raise MediaDecodeError(f"bad Y4M {tag} ratio {val!r}")
-        elif tag == "I":
-            if val not in ("p", "t", "b", "m", "?"):
-                raise MediaDecodeError(f"bad Y4M interlace {val!r}")
-        elif tag == "X":
-            pass  # extension parameters carry no layout information
-        else:
-            raise MediaDecodeError(f"unknown Y4M header tag {tag!r}")
-    if not w or not h:
-        raise MediaDecodeError("Y4M header missing W/H")
-    if w * h > MAX_PIXELS:
-        raise MediaDecodeError(f"frame {w}x{h} exceeds pixel cap")
-    chroma = _Y4M_CHROMA.get(cs)
-    if chroma is None and cs != "mono":
-        raise MediaDecodeError(f"unsupported Y4M colorspace C{cs}")
-    if chroma is None:
-        frame_size = w * h
-    else:
-        wd, hd = chroma
-        if w % wd or h % hd:
-            raise MediaDecodeError(
-                f"odd dimensions {w}x{h} for C{cs} chroma subsampling"
-            )
-        frame_size = w * h + 2 * (w // wd) * (h // hd)
-    if stride < 1:
-        raise ValueError("stride must be >= 1")
-    frames: list[bytes] = []
-    n_frames = 0
-    pos = eol + 1
-    while pos < len(data):
-        if not data.startswith(b"FRAME", pos):
-            raise MediaDecodeError("missing FRAME marker")
-        nl = data.find(b"\n", pos, pos + 1024)
-        if nl < 0:
-            raise MediaDecodeError("unterminated FRAME header")
-        params = data[pos + 5 : nl]
-        if params and not params.startswith(b" "):
-            raise MediaDecodeError("malformed FRAME parameters")
-        pos = nl + 1
-        if pos + frame_size > len(data):
-            raise MediaDecodeError("truncated Y4M frame")
-        if n_frames % stride == 0:
-            frames.append(bytes(data[pos : pos + w * h]))
-            if len(frames) * w * h > MAX_PIXELS:
-                raise MediaDecodeError("total decoded luma exceeds pixel cap")
-        pos += frame_size
-        n_frames += 1
-        if n_frames > MAX_FRAMES:
-            raise MediaDecodeError("frame count exceeds cap")
-    return w, h, n_frames, frames
-
-
-# ── AVI (MJPEG) video decode ─────────────────────────────────────────────────
-
-AVI_MAGIC = b"RIFF"  # + size + b"AVI " at offset 8
-
-
-def is_avi(data: bytes) -> bool:
-    return len(data) >= 12 and data[:4] == b"RIFF" and data[8:12] == b"AVI "
-
-
-def _rgb_to_luma(pixels: bytes, ch: int) -> bytes:
-    """ITU-R BT.601 integer luma; gray passes through, alpha ignored."""
-    if ch == 1:
-        return pixels
-    out = bytearray(len(pixels) // ch)
-    for k in range(len(out)):
-        p = k * ch
-        out[k] = (
-            77 * pixels[p] + 150 * pixels[p + 1] + 29 * pixels[p + 2] + 128
-        ) >> 8
-    return bytes(out)
-
-
-def decode_avi_mjpeg(
-    data: bytes, stride: int = 1
-) -> tuple[int, int, int, list[bytes]]:
-    """MJPEG AVI bytes → (width, height, n_frames, luma_frames) — the
-    same surface as decode_y4m, so video features and frame sampling
-    treat raw and compressed containers uniformly.
-
-    RIFF walk to the 'movi' LIST, then every '##dc'/'##db' chunk is one
-    baseline JPEG decoded through this module's decoder (what old
-    cameras and OpenCV's MJPG writer emit); frames reduce to their
-    BT.601 luma plane. `stride` decodes only every stride-th frame —
-    JPEG decode is the expensive part, so sampling skips the others
-    entirely (framing still validated). All frames must share the first
-    frame's geometry. Non-MJPEG streams ('rec ' interleaves, other
-    fourccs) and malformed chunks raise MediaDecodeError (countable
-    decode_failed; MP4/MKV stay on the declared stub path — they are
-    not RIFF)."""
-    if not is_avi(data):
-        raise MediaDecodeError("not an AVI")
-    if stride < 1:
-        raise ValueError("stride must be >= 1")
-    # walk top-level and nested chunks: find the 'movi' LIST, and keep
-    # the avih header dims so a well-formed zero-frame AVI can return
-    # (w, h, 0, []) like decode_y4m does (r6 review — the two
-    # containers must classify the identical condition identically)
-    movi = None
-    avih_dims = None
-    stack = [(12, len(data))]
-    while stack:
-        pos, end = stack.pop()
-        while pos + 8 <= end:
-            cid = data[pos : pos + 4]
-            (length,) = struct.unpack_from("<I", data, pos + 4)
-            body_at = pos + 8
-            if body_at + length > end:  # bound by the ENCLOSING chunk
-                raise MediaDecodeError("truncated AVI chunk")
-            if cid == b"LIST":
-                ltype = data[body_at : body_at + 4]
-                if ltype == b"movi":
-                    movi = (body_at + 4, body_at + length)
-                else:
-                    stack.append((body_at + 4, body_at + length))
-            elif cid == b"avih" and length >= 40:
-                aw, ah = struct.unpack_from("<ii", data, body_at + 32)
-                if aw > 0 and ah > 0:
-                    avih_dims = (aw, ah)
-            pos = body_at + length + (length & 1)
-    if movi is None:
-        raise MediaDecodeError("AVI without a movi list")
-    w = h = None
-    frames: list[bytes] = []
-    n_frames = 0
-    pos, end = movi
-    while pos + 8 <= end:
-        cid = data[pos : pos + 4]
-        (length,) = struct.unpack_from("<I", data, pos + 4)
-        body_at = pos + 8
-        # bound by the movi list's own end — checking len(data) would
-        # let a corrupted length swallow later frames as 'ok' (r6
-        # review, confirmed by execution)
-        if body_at + length > end:
-            raise MediaDecodeError("truncated AVI frame chunk")
-        pos = body_at + length + (length & 1)
-        if cid[2:4] not in (b"dc", b"db"):
-            raise MediaDecodeError(f"unsupported movi chunk {cid!r}")
-        if n_frames % stride == 0:
-            fw, fh, ch, pixels = decode_jpeg(data[body_at : body_at + length])
-            if w is None:
-                w, h = fw, fh
-                if w * h > MAX_PIXELS:
-                    raise MediaDecodeError("frame exceeds pixel cap")
-            elif (fw, fh) != (w, h):
-                raise MediaDecodeError("AVI frames change geometry")
-            frames.append(_rgb_to_luma(pixels, ch))
-            if len(frames) * w * h > MAX_PIXELS:
-                raise MediaDecodeError("total decoded luma exceeds pixel cap")
-        n_frames += 1
-        if n_frames > MAX_FRAMES:
-            raise MediaDecodeError("frame count exceeds cap")
-    if w is None:
-        if n_frames == 0 and avih_dims is not None:
-            # well-formed zero-frame stream: same classification as a
-            # zero-frame Y4M ('empty', not decode_failed)
-            return avih_dims[0], avih_dims[1], 0, []
-        raise MediaDecodeError("AVI movi list holds no frames")
-    return w, h, n_frames, frames
 
 
 # ── bilinear resize ──────────────────────────────────────────────────────────
@@ -1559,55 +1180,4 @@ def audio_features(rate: int, nch: int, samples: list[int]) -> list[float]:
         _r6(min(samples) / 32768.0), _r6(max(samples) / 32768.0),
         _r6(zc / (n - 1)) if n > 1 else 0.0,
         *[_r6(v) for v in seg],
-    ]
-
-
-def video_features(w: int, h: int, frames: list[bytes]) -> list[float]:
-    """[log-w/16, log-h/16, log-nframes/16, aspect/8, global luma
-    mean/std, first/last frame means, motion (mean abs frame-to-frame
-    luma delta), 4-bucket luma histogram fractions, min, max, temporal
-    std of per-frame means] over decode_y4m's luma planes — integer
-    accumulation wherever order could matter; same float32-recovery
-    contract as image_features."""
-    import math
-
-    nf = len(frames)
-    base = [
-        _r6(math.log1p(w) / 16), _r6(math.log1p(h) / 16),
-        _r6(math.log1p(nf) / 16), _r6(min(w / h, 16.0) / 8),
-    ]
-    if nf == 0:
-        return base + [0.0] * (FEATURE_DIM - 4)
-    n = w * h
-    total = nf * n
-    fsums = [sum(f) for f in frames]
-    s = sum(fsums)  # one pass, not two: r6 review
-    s2 = sum(b * b for f in frames for b in f)
-    mean = s / total
-    var = max(0.0, s2 / total - mean * mean)
-    motion = 0.0
-    if nf > 1:
-        diff = sum(
-            abs(a - b)
-            for f0, f1 in zip(frames, frames[1:])
-            for a, b in zip(f0, f1)
-        )
-        motion = diff / ((nf - 1) * n)
-    hist = [0] * 4
-    for f in frames:
-        for b in f:
-            hist[b >> 6] += 1
-    # temporal variance of per-frame means from the exact integer sums:
-    # E[m^2] - E[m]^2 with m_i = fsums[i]/n
-    tm = s / nf / n  # s IS sum(fsums) — reuse it (ADVICE r6 #3)
-    tm2 = sum(fs * fs for fs in fsums) / nf / (n * n)
-    tvar = max(0.0, tm2 - tm * tm)
-    return base + [
-        _r6(mean / 255.0), _r6(math.sqrt(var) / 255.0),
-        _r6(fsums[0] / n / 255.0), _r6(fsums[-1] / n / 255.0),
-        _r6(motion / 255.0),
-        *[_r6(v / total) for v in hist],
-        _r6(min(min(f) for f in frames) / 255.0),
-        _r6(max(max(f) for f in frames) / 255.0),
-        _r6(math.sqrt(tvar) / 255.0),
     ]

@@ -1,11 +1,10 @@
-"""Text-analysis / dedup primitives for the training-data pipeline operators.
+"""Dedup primitives for the training-data pipeline operators.
 
 Pure Python + numpy, deterministic (fixed hash seeds), used inside
 Arrow-batched Spark UDFs. The Spark-side operators live in
-pdf_to_text_spark.operators.{dedup,text_analysis}; where the math is
-SQL-expressible it is ALSO written with built-in functions so the hot path
-stays JVM-side — these kernels back only the genuinely non-SQL parts
-(MinHash signatures, winnowing fingerprints, n-gram language ID).
+pdf_to_text_spark.operators.dedup; where the math is SQL-expressible it
+is ALSO written with built-in functions so the hot path stays JVM-side —
+these kernels back only the genuinely non-SQL part (MinHash signatures).
 
 MinHash is one batch kernel, ``minhash_batch``: per batch of texts it
 hashes each doc's distinct shingles once, runs the n_perm universal
@@ -30,9 +29,6 @@ __all__ = [
     "minhash_batch",
     "minhash_signature",
     "minhash_bands",
-    "winnow_fingerprint",
-    "detect_lang",
-    "jaccard",
     "TOKEN_RE",
 ]
 
@@ -57,11 +53,6 @@ def normalize_text(text: str) -> str:
 def word_shingles(text: str, k: int = 5) -> set[bytes]:
     """Set of k-word shingles (utf-8 bytes) over the normalized text."""
     return set(_shingles(text, k))
-
-
-def _stable_u64(data: bytes, seed: int = 0) -> int:
-    h = hashlib.blake2b(data, digest_size=8, person=struct.pack("<q", seed))
-    return struct.unpack("<Q", h.digest())[0]
 
 
 def _hasher(seed: int):
@@ -214,75 +205,3 @@ def minhash_bands(sig: np.ndarray, n_bands: int = 16) -> list[int]:
     """LSH band keys of one signature (minhash_batch's band rule); raises
     ValueError when n_bands does not divide len(sig)."""
     return _band_keys(np.asarray(sig, np.uint64)[None, :], n_bands)[0].tolist()
-
-
-def winnow_fingerprint(text: str, k: int = 7, window: int = 8) -> list[int]:
-    """Winnowing document fingerprint (Schleimer et al., SIGMOD 2003).
-
-    Rolling k-gram hashes over the normalized char stream; keep the min of
-    each sliding window (rightmost tie-break) → sorted unique fingerprint.
-    """
-    s = normalize_text(text)
-    if len(s) < k:
-        return [_stable_u64(s.encode(), seed=11) & 0x7FFFFFFFFFFFFFFF] if s else []
-    hashes = [
-        _stable_u64(s[i : i + k].encode(), seed=11) & 0x7FFFFFFFFFFFFFFF
-        for i in range(len(s) - k + 1)
-    ]
-    picked: set[int] = set()
-    last_idx = -1
-    for w in range(max(1, len(hashes) - window + 1)):
-        win = hashes[w : w + window]
-        mi = max(range(len(win)), key=lambda j: (-win[j], j))  # min value, rightmost
-        idx = w + mi
-        if idx != last_idx:
-            picked.add(win[mi])
-            last_idx = idx
-    return sorted(picked)
-
-
-def jaccard(a: set, b: set) -> float:
-    if not a and not b:
-        return 1.0
-    u = len(a | b)
-    return len(a & b) / u if u else 0.0
-
-
-# ── n-gram / stopword language ID ────────────────────────────────────────────
-# Small pinned stopword profiles (public common-word lists) — heuristic
-# language ID for the five langs in the corpus mix (FIXTURES.md §1).
-_LANG_STOPWORDS: dict[str, frozenset[str]] = {
-    "en": frozenset(
-        "the of and to in a is that it for on with as are was be this have "
-        "from or by not at but we they you all can her his".split()
-    ),
-    "es": frozenset(
-        "de la que el en y a los del se las por un para con no una su al es "
-        "lo como más pero sus le ya o este sí".split()
-    ),
-    "de": frozenset(
-        "der die und in den von zu das mit sich des auf für ist im dem nicht "
-        "ein eine als auch es an werden aus er".split()
-    ),
-    "fr": frozenset(
-        "de la le et les des en un du une que est pour qui dans a par plus "
-        "pas au sur ne se ce il sont avec son".split()
-    ),
-    "zh": frozenset("的 了 和 是 在 我 有 他 这 中 大 来 上 国 个 到 说 们 为 子".split()),
-}
-
-
-def detect_lang(text: str) -> str:
-    """Stopword-profile language ID; 'und' when no profile scores > 0."""
-    words = text.lower().split()
-    if not words:
-        return "und"
-    # CJK check: any han characters → zh
-    if any("一" <= ch <= "鿿" for ch in text[:2000]):
-        return "zh"
-    best_lang, best_score = "und", 0
-    for lang, sw in _LANG_STOPWORDS.items():
-        score = sum(1 for w in words if w in sw)
-        if score > best_score:
-            best_lang, best_score = lang, score
-    return best_lang

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import N_BUCKETS
-from ..functions.udfs import EXTRACT_SCHEMA, content_type_col, extract_arrow_batches
+from ..functions.udfs import EXTRACT_SCHEMA, extract_arrow_batches
 from ..plans.layout import with_bucket
 
 PAGES_COLS = ["url", "warc_ts", "html", "text", "lang"]
@@ -120,19 +120,4 @@ def metrics_rollup(extracted: DataFrame) -> DataFrame:
         ),
         F.sum(F.when(F.col("parse_status") == "empty", 1).otherwise(0)).alias("empty_docs"),
         F.countDistinct("partition_id").alias("n_tasks"),
-    )
-
-
-def content_type_dispatch(pages: DataFrame) -> DataFrame:
-    """Pure-projection content-type classification (SURVEY §2 #2/#16).
-
-    Built-in expressions only — exercises pushdown/codegen, used by the
-    driver oracle checks as a SQL-expressible stand-in for the UDF path.
-    """
-    return pages.select(
-        "url",
-        content_type_col().alias("content_type"),
-        F.when(F.col("html").isNull() & F.col("text").isNull(), 1)
-        .otherwise(0)
-        .alias("is_empty"),
     )

@@ -1,14 +1,11 @@
-"""Downstream record dataflow: extracted text → blocks → chunks → records
-→ CSV/JSON documents.
+"""Downstream record dataflow: extracted text → blocks → chunk-tagged
+records → CSV/JSON documents.
 
 Spark-first restatement of src/main.ts:70-124,133-263. Key idiom choices:
 
   * ``posexplode`` gives the per-url block ordinal for free (array
     position) — no window shuffle needed for chunk assignment
     (chunk_id = floor(block_pos / 10), src/main.ts:166);
-  * chunk reassembly uses ``sort_array(collect_list(struct(pos, …)))``
-    — a single hash aggregation, order restored inside the array, no
-    global sort;
   * records, CSV and JSON come from ONE Python pass per document
     (``doc_artifacts_df``, kernels/blocks.doc_artifacts), like the
     reference's per-upload handler: no per-url regroup, no join, and the
@@ -22,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import CHUNK_BLOCK_DELIM, MAX_BLOCKS_PER_CHUNK
+from ..config import MAX_BLOCKS_PER_CHUNK
 from ..functions.udfs import DOC_ARTIFACTS_SCHEMA, doc_artifacts_batches, segment_blocks_udf
 
 
@@ -41,20 +38,6 @@ def with_chunk_id(blocks: DataFrame, max_per_chunk: int = MAX_BLOCKS_PER_CHUNK) 
     reference's sequential slicing (src/main.ts:116-124)."""
     return blocks.withColumn(
         "chunk_id", (F.col("block_pos") / F.lit(max_per_chunk)).cast("int")
-    )
-
-
-def chunks_df(blocks_with_chunk: DataFrame) -> DataFrame:
-    """Reassemble chunk text: blocks joined with "\\n\\n" (src/main.ts:177)."""
-    return blocks_with_chunk.groupBy("url", "chunk_id").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("block_pos", "block"))),
-                lambda s: s["block"],
-            ),
-            CHUNK_BLOCK_DELIM,
-        ).alias("chunk_text"),
-        F.count(F.lit(1)).alias("n_blocks"),
     )
 
 

@@ -1,22 +1,18 @@
 """Text-analysis operators over a documents corpus (doc_id, text, lang, …).
 
-Training-data-pipeline staples: token counting, quality scoring, language
-ID, document fingerprinting. Everything here is expressed with BUILT-IN
-pyspark.sql.functions (JVM-side, codegen-friendly, no Python in the hot
-path); the winnowing fingerprint is the only pandas-UDF operator because
-rolling-window minima over char k-grams aren't SQL-expressible.
+Training-data-pipeline staples: token counting, quality scoring and
+language ID, fused into one pass by text_profile. Everything here is
+expressed with BUILT-IN pyspark.sql.functions (JVM-side, codegen-friendly,
+no Python in the hot path).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-# Pinned stopword list for the quality score (subset of the en profile in
-# kernels/textstats.py — duplicated as a LITERAL so the SQL oracle can pin
-# the identical list).
+# Pinned stopword list for the quality score (a LITERAL, so the SQL oracle
+# can pin the identical list).
 QUALITY_STOPWORDS = [
     "the", "of", "and", "to", "in", "a", "is", "that", "it", "for",
     "on", "with", "as", "are", "was", "be", "this", "have", "from", "or",
@@ -293,186 +289,4 @@ def text_profile(documents: DataFrame) -> DataFrame:
         "*",
         quality.alias("quality"),
         _pred_lang_expr().alias("pred_lang"),
-    )
-
-
-# PII patterns pinned to the RE2 ∩ Java-regex common subset, so the same
-# patterns compile in either engine: no backreferences, no lookaround.
-PII_PATTERNS = {
-    "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
-    "phone": r"\+?[0-9]{1,3}[-. (]{1,2}[0-9]{3}[-. )]{1,2}[0-9]{3}[-. ]{0,2}[0-9]{4}",
-    "ipv4": r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b",
-}
-
-
-def redact_pii(documents: DataFrame) -> DataFrame:
-    """C4-style PII scrubbing: emails/phones/IPv4s replaced with typed
-    placeholder tokens, with per-kind hit counts for audit rollups.
-
-    Pure JVM regexp passes (one per pattern, chained) — no Python in the
-    path; patterns live in the RE2∩Java subset (see PII_PATTERNS). At
-    100 TB this is a map-only stage: no shuffle, pushdown-friendly,
-    linear scans.
-
-    Each kind is COUNTED on the text as it stands after the previous
-    kinds' replacements (the same progression the redaction applies), so
-    the audit counts equal the placeholder tokens actually emitted —
-    counting every pattern on the original text would overcount spans a
-    prior kind consumed (review r2b #3)."""
-    counts = []
-    redacted = F.col("text")
-    for kind, pat in PII_PATTERNS.items():
-        counts.append(F.regexp_count(redacted, F.lit(pat)).alias(f"{kind}_hits"))
-        redacted = F.regexp_replace(redacted, pat, f"<{kind.upper()}>")
-    return _spread_doc_text(documents).select(
-        "doc_id", *counts, redacted.alias("redacted_text")
-    )
-
-
-def repetition_stats(documents: DataFrame) -> DataFrame:
-    """Gopher-style repetition signals (Rae et al. '21 quality rules):
-    per-doc distinct-word ratio and top word/bigram mass — boilerplate
-    and spam have a few tokens carrying most of the mass.
-
-    Shape: explode → (doc, term) count → per-doc max/sum — two keyed
-    aggregations whose shuffles carry (doc, term) partials (map-side
-    combine), the scalable form of a per-doc mode. Fractions are
-    floor-scaled to 4 decimals (engine-portable). NULL text coalesces to
-    '' so the doc keeps a row (explode(NULL) would silently drop it —
-    the no-vanishing rule every other operator here follows)."""
-    words = F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), _WS_RE)
-    base = _spread_doc_text(documents)
-    wc = (
-        base.select("doc_id", F.explode(words).alias("w"))
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").alias("words"),
-            F.count(F.lit(1)).alias("distinct_words"),
-            F.max("cnt").alias("top_word_count"),
-        )
-    )
-    bigrams = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - 2),
-            lambda i: F.concat_ws(" ", F.element_at(words, i + 1), F.element_at(words, i + 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    bc = (
-        base.select("doc_id", F.explode(bigrams).alias("b"))
-        .groupBy("doc_id", "b")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("doc_id")
-        .agg(F.max("cnt").alias("top_bigram_count"))
-    )
-    out = wc.join(bc, "doc_id", "left").select(
-        "doc_id",
-        "words",
-        "distinct_words",
-        "top_word_count",
-        F.coalesce("top_bigram_count", F.lit(0)).alias("top_bigram_count"),
-        (F.floor(F.col("distinct_words") / F.col("words") * 10000) / 10000).alias(
-            "distinct_ratio"
-        ),
-        (F.floor(F.col("top_word_count") / F.col("words") * 10000) / 10000).alias(
-            "top_word_frac"
-        ),
-    )
-    return out
-
-
-def md5_bucket(key: str, buckets: int = 100):
-    """First 4 md5 hex digits of str(key) mod `buckets` — THE shared
-    content-addressed bucket (one definition for deterministic_sample,
-    stratified_sample, and the SQL oracle mirrors).
-
-    NULL keys hash as '' rather than propagating NULL: md5(NULL) is NULL
-    and `WHERE NULL < pct` silently dropped the row from EVERY sample —
-    even pct=100 — breaking the reproducible-subset contract (r6
-    review). A NULL-keyed row now lands in a deterministic bucket like
-    any other."""
-    key_s = F.coalesce(F.col(key).cast("string"), F.lit(""))
-    return (
-        F.conv(F.substring(F.md5(key_s.cast("binary")), 1, 4), 16, 10).cast("int")
-        % buckets
-    )
-
-
-def deterministic_sample(
-    df: DataFrame, key: str = "doc_id", pct: int = 10, buckets: int = 100
-) -> DataFrame:
-    """Content-addressed sampling: keep rows whose md5(key) bucket falls
-    below pct — the reproducible-subset primitive a 100 TB curation
-    pipeline needs (rng-free: the SAME rows are selected on any cluster,
-    any partitioning, any rerun, and the sample GROWS MONOTONICALLY as
-    pct rises, so 1% ⊂ 5% ⊂ 10% subsets nest for scaling-law runs)."""
-    return df.where(md5_bucket(key, buckets) < pct)
-
-
-def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    pcts: dict[str, int],
-    default_pct: int = 0,
-    key: str = "doc_id",
-    buckets: int = 100,
-) -> DataFrame:
-    """Per-stratum content-addressed sampling: each stratum keeps its own
-    md5-bucket fraction — the corpus-rebalancing primitive (e.g. downsample
-    the dominant language, keep the tail whole). Same determinism and
-    monotone-nesting guarantees as deterministic_sample, per stratum."""
-    bucket = md5_bucket(key, buckets)
-    pct = F.lit(default_pct)
-    for value, p in pcts.items():
-        pct = F.when(F.col(strata_col) == value, F.lit(p)).otherwise(pct)
-    return df.where(bucket < pct)
-
-
-def fingerprints(documents: DataFrame) -> DataFrame:
-    """Exact-dedup document fingerprint: md5 of normalized text.
-
-    Normalization pinned once in dedup.fingerprint_col (mirrors
-    kernels/textstats.normalize_text and the SQL oracle): lower →
-    non-alnum runs → ' ' → trim; NULL text normalizes like ''.
-    """
-    from .dedup import fingerprint_col
-
-    # not spread: md5-cheap map side, same rationale as dedup_exact_groups
-    return documents.select("doc_id", fingerprint_col().alias("fingerprint"))
-
-
-# ── winnowing fingerprint (pandas UDF — non-SQL-expressible) ────────────────
-
-
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def winnow_udf(texts: pd.Series) -> pd.Series:
-    from ..kernels.textstats import winnow_fingerprint
-
-    return texts.map(lambda t: winnow_fingerprint(t or ""))
-
-
-def winnow_fingerprints(documents: DataFrame) -> DataFrame:
-    """Winnowing (rolling k-gram min) fingerprints — robust near-dup keys."""
-    return _spread_doc_text(documents).select(
-        "doc_id",
-        winnow_udf(F.col("text")).alias("winnow"),
-    ).select("doc_id", F.size("winnow").alias("n_grams"), "winnow")
-
-
-def quality_profile(documents: DataFrame) -> DataFrame:
-    """quality_stats + the composite quality score in one projection
-    (one scan, zero joins) — the driver-facing merge of quality_stats
-    and quality_score (round 3)."""
-    s = quality_stats(documents)
-    return s.select(
-        "*",
-        _quality_expr(
-            F.col("words"),
-            F.col("alpha_chars"),
-            F.col("digit_chars"),
-            F.col("punct_chars"),
-            F.col("stop_hits"),
-        ).alias("quality"),
     )

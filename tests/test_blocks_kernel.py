@@ -11,8 +11,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pdf_to_text_spark.kernels.blocks import (
-    chunk_blocks,
-    extract_json_fenced,
     parse_records,
     records_to_csv,
     records_to_pretty_json,
@@ -90,26 +88,6 @@ def test_segmentation_invariants(lines):
     # every block line exists in the input, in order (subsequence)
     it = iter(lines)
     assert all(any(line == cand for cand in it) for line in joined)
-
-
-# ── chunking (src/main.ts:116-124, size boundaries) ─────────────────────────
-
-
-def test_chunk_boundaries():
-    for n, want in [(0, []), (1, [1]), (9, [9]), (10, [10]), (11, [10, 1]), (25, [10, 10, 5])]:
-        blocks = [f"b{i}" for i in range(n)]
-        chunks = chunk_blocks(blocks)
-        assert [len(c) for c in chunks] == want
-        assert [b for c in chunks for b in c] == blocks  # order preserved
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.lists(st.text(max_size=5), max_size=60), st.integers(min_value=1, max_value=12))
-def test_chunk_property(blocks, k):
-    chunks = chunk_blocks(blocks, k)
-    assert [b for c in chunks for b in c] == blocks
-    assert all(len(c) <= k for c in chunks)
-    assert all(len(c) == k for c in chunks[:-1])
 
 
 # ── record parsing + CSV quirks ──────────────────────────────────────────────
@@ -205,15 +183,6 @@ def test_csv_row_count_property(recs):
     # zero records: reference yields 'HEADER\n' + '' (one trailing empty line)
     expected = 2 if not recs else 1 + len(recs) + n_newlines_in_data
     assert len(csv.split("\n")) == expected
-
-
-def test_json_fence_extraction():
-    assert extract_json_fenced('```json [1, 2] ```') == "[1, 2]"
-    assert extract_json_fenced('  {"a": 1}  ') == '{"a": 1}'
-    import pytest
-
-    with pytest.raises(ValueError):
-        extract_json_fenced("not json at all")
 
 
 def test_pretty_json_matches_js_stringify():

@@ -28,11 +28,16 @@ def docs(spark):
     )
 
 
-def test_exact_dedup_catches_case_difference(docs):
+def test_exact_dedup_catches_case_difference(docs, spark):
     groups = dedup.dedup_exact_groups(docs)
     big = groups.where(F.col("group_size") > 1).collect()
     assert len(big) == 1
     assert big[0]["group_size"] == 2 and big[0]["rep_doc_id"] == 0  # 0 and 4
+    # punctuation and whitespace runs normalize away too, not only case
+    pair = spark.createDataFrame(
+        [(0, "Hello, World!"), (1, "hello   world")], "doc_id long, text string"
+    )
+    assert [r["group_size"] for r in dedup.dedup_exact_groups(pair).collect()] == [2]
     kept = dedup.dedup_exact(docs)
     ids = {r["doc_id"] for r in kept.collect()}
     assert 4 not in ids and 0 in ids and len(ids) == 5

@@ -79,37 +79,6 @@ def test_encode_decode_roundtrip_any_pixels(w, h, ch, pix):
     assert decode_png(encode_png(w, h, ch, pix)) == (w, h, ch, pix)
 
 
-def _try_gif(data: bytes):
-    from pdf_to_text_spark.kernels.media import decode_gif
-
-    try:
-        w, h, ch, pixels = decode_gif(data)
-        assert w > 0 and h > 0 and ch == 3 and len(pixels) == w * h * 3
-    except MediaDecodeError:
-        pass
-
-
-@settings(max_examples=200, deadline=2000)
-@given(st.binary(min_size=1, max_size=256), st.floats(0, 1), st.booleans())
-def test_mutated_gif_fails_typed(junk, where, overwrite):
-    from tools.make_media import media_gif
-
-    good = media_gif(9)[0]
-    cut = int(where * len(good))
-    if overwrite:
-        data = good[:cut] + junk + good[cut + len(junk):]
-    else:
-        data = good[:cut] + junk + good[cut:]
-    _try_gif(data)
-
-
-@settings(max_examples=200, deadline=2000)
-@given(st.binary(max_size=2048))
-def test_random_bytes_behind_gif_magic_fail_typed(data):
-    _try_gif(b"GIF89a" + data)
-    _try_gif(b"GIF87a" + data)
-
-
 @settings(max_examples=150, deadline=5000)
 @given(st.binary(min_size=1, max_size=256), st.floats(0, 1), st.booleans())
 def test_mutated_jpeg_fails_typed(junk, where, overwrite):
@@ -129,37 +98,6 @@ def test_mutated_jpeg_fails_typed(junk, where, overwrite):
         assert len(px) == w * h * ch
     except MediaDecodeError:
         pass
-
-
-def _try_y4m(data: bytes):
-    from pdf_to_text_spark.kernels.media import decode_y4m
-
-    try:
-        w, h, nf, frames = decode_y4m(data)
-        assert w > 0 and h > 0 and nf == len(frames)
-        assert all(len(f) == w * h for f in frames)
-    except MediaDecodeError:
-        pass
-
-
-@settings(max_examples=200, deadline=2000)
-@given(st.binary(min_size=1, max_size=256), st.floats(0, 1), st.booleans())
-def test_mutated_y4m_fails_typed(junk, where, overwrite):
-    from tools.make_media import media_y4m
-
-    good = media_y4m(11)[0]
-    cut = int(where * len(good))
-    if overwrite:
-        data = good[:cut] + junk + good[cut + len(junk):]
-    else:
-        data = good[:cut] + junk + good[cut:]
-    _try_y4m(data)
-
-
-@settings(max_examples=150, deadline=2000)
-@given(st.binary(min_size=0, max_size=200))
-def test_arbitrary_bytes_after_y4m_magic_fail_typed(tail):
-    _try_y4m(b"YUV4MPEG2 " + tail)
 
 
 def _try_tiff(data: bytes):
@@ -218,25 +156,3 @@ def test_mutated_bmp_fails_typed(junk, where, overwrite):
     _try_bmp(data)
 
 
-def _try_avi(data: bytes):
-    from pdf_to_text_spark.kernels.media import decode_avi_mjpeg
-
-    try:
-        w, h, nf, frames = decode_avi_mjpeg(data)
-        assert w > 0 and h > 0 and all(len(f) == w * h for f in frames)
-    except MediaDecodeError:
-        pass
-
-
-@settings(max_examples=150, deadline=4000)
-@given(st.binary(min_size=1, max_size=256), st.floats(0, 1), st.booleans())
-def test_mutated_avi_fails_typed(junk, where, overwrite):
-    from tools.make_media import media_avi
-
-    good = media_avi(17)[0]
-    cut = int(where * len(good))
-    if overwrite:
-        data = good[:cut] + junk + good[cut + len(junk):]
-    else:
-        data = good[:cut] + junk + good[cut:]
-    _try_avi(data)

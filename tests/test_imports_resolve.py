@@ -1,10 +1,15 @@
-"""Every repo-local import names a module and a name that exist.
+"""Every repo-local import names a module and a name that exist, and
+the engine holds only what its entry points reach.
 
 A deleted module or function leaves lazy imports behind (inside a
 function body) that fail only when that function is called, so no other
 test notices them. This test parses every tracked .py file and resolves
 each import of ``pdf_to_text_spark.*``, ``tools.*``, ``perfbench.*`` and
 every relative import statically, function-local imports included.
+
+Two reachability guards follow: every engine module is imported from a
+root, and every top-level function or class of such a module is named
+by the code the roots reach (a test alone does not keep code alive).
 """
 
 from __future__ import annotations
@@ -108,15 +113,14 @@ def test_repo_local_imports_resolve():
 # The engine's entry points: code no import chain from these reaches is
 # dead weight (tests alone do not keep a module alive).
 ROOTS = ("pdf_to_text_spark/pipeline.py", "pdf_to_text_spark/run.py",
-         "pdf_to_text_spark/streaming", "perfbench")
+         "perfbench")
 
 # Engine modules no root reaches that stay on purpose, each with its
 # reason. Anything else unreached is deleted, not added here.
 UNREACHED_OK = {
-    # media codecs: only their tests decode media; they go codec by codec
+    # media codecs: only their tests decode media; the rest go whole
+    # (ROADMAP item 7)
     "pdf_to_text_spark.kernels.media",
-    # stand-alone chunk enrichment: whether it stays is still open
-    "pdf_to_text_spark.operators.enrichment",
     # the tests' loader for the generated sf testdata tables
     "pdf_to_text_spark.sources.catalog",
 }
@@ -155,3 +159,82 @@ def test_every_engine_module_is_reachable_from_a_root():
     assert sorted(unreached - UNREACHED_OK) == []
     # an allowlisted module that a root reaches again leaves the list
     assert sorted(UNREACHED_OK - unreached) == []
+
+
+# The entry points a deployment calls by name: every public top-level
+# name of these modules.
+ENTRY_MODULES = ("pdf_to_text_spark.pipeline", "pdf_to_text_spark.run")
+
+# Root-reached definitions that only tests name, kept on purpose, each
+# with its reason. Anything else that only tests name is deleted, not
+# added here.
+UNNAMED_OK = {
+    # the T-table AES's reference: tests compare the fast path against it
+    "pdf_to_text_spark.kernels.crypto._crypt_block",
+    # the join-form MinHash reference of dedup_corpus's hot-bucket test
+    "pdf_to_text_spark.operators.dedup.minhash_dedup_pairs",
+    # the exact n-gram Jaccard that the MinHash estimate is checked against
+    "pdf_to_text_spark.operators.dedup.ngram_jaccard_pairs",
+    # the component operators text_profile's fused pass is checked against
+    "pdf_to_text_spark.operators.text_analysis.token_counts",
+    "pdf_to_text_spark.operators.text_analysis.quality_score",
+    "pdf_to_text_spark.operators.text_analysis.language_id",
+    # the public view of the kernel's shingle rule, which
+    # test_minhash_batch pins against its frozen formula
+    "pdf_to_text_spark.kernels.textstats.word_shingles",
+    # sources/pages.py is in perfbench's pool digest: editing it re-keys
+    # the pool, so its test-only writer waits for a benchmark change
+    "pdf_to_text_spark.sources.pages.write_pages",
+}
+
+
+def _named(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
+    """Identifiers `tree` names (a Name, an attribute, an imported
+    name), leaving out what lies inside `skip`."""
+    out: set[str] = set()
+    stack = [tree]
+    while stack:
+        node = stack.pop()
+        if node is skip:
+            continue
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, ast.alias):
+            out.add(node.name.split(".")[-1])
+        stack.extend(ast.iter_child_nodes(node))
+    return out
+
+
+def unnamed_definitions(root: pathlib.Path) -> set[str]:
+    """'<module>.<name>' for every top-level def/class of a root-reached
+    engine module that no root-reached module and no tools/ module names
+    outside the definition's own body. Public names of ENTRY_MODULES
+    are entry points."""
+    files, trees = _parse_all(root)
+    reached = reachable_modules(root)
+    scope = [m for m in files if m in reached or m.split(".")[0] == "tools"]
+    names_in = {m: _named(trees[m]) for m in scope}
+    bad = set()
+    for mod in sorted(reached):
+        if mod.split(".")[0] != "pdf_to_text_spark":
+            continue
+        for node in trees[mod].body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            if mod in ENTRY_MODULES and not node.name.startswith("_"):
+                continue
+            if node.name in _named(trees[mod], skip=node):
+                continue
+            if any(node.name in names_in[m] for m in scope if m != mod):
+                continue
+            bad.add(f"{mod}.{node.name}")
+    return bad
+
+
+def test_every_engine_definition_is_named_by_the_engine():
+    unnamed = unnamed_definitions(ROOT)
+    assert sorted(unnamed - UNNAMED_OK) == []
+    # an allowlisted definition that the engine names again leaves the list
+    assert sorted(UNNAMED_OK - unnamed) == []

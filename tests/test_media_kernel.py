@@ -180,82 +180,6 @@ def test_wav_sample_cap():
         decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
 
 
-# ── GIF (round 6) ────────────────────────────────────────────────────────────
-
-
-def _tiny_gif(**kw):
-    from tools.make_media import gif_indices_for, gif_palette_for, make_gif
-
-    w, h = 9, 7
-    return make_gif(w, h, gif_indices_for(3, w, h), gif_palette_for(3), **kw), w, h
-
-
-def test_gif_roundtrip_plain_interlaced_local_palette():
-    from pdf_to_text_spark.kernels.media import decode_gif
-    from tools.make_media import gif_indices_for, gif_palette_for
-
-    pal, idx = gif_palette_for(3), gif_indices_for(3, 9, 7)
-    want = b"".join(pal[3 * k : 3 * k + 3] for k in idx)
-    for kw in ({}, {"interlace": True}, {"local_palette": True},
-               {"interlace": True, "local_palette": True, "comment": b"x"}):
-        gif, w, h = _tiny_gif(**kw)
-        assert decode_gif(gif) == (w, h, 3, want), kw
-
-
-def test_gif_dimension_bomb_capped():
-    from pdf_to_text_spark.kernels.media import decode_gif
-
-    gif, _w, _h = _tiny_gif()
-    # rewrite the image descriptor's w/h to a 16 MP frame
-    at = gif.find(b"\x2c")
-    forged = (
-        gif[: at + 5] + struct.pack("<HH", 4000, 4000) + gif[at + 9 :]
-    )
-    with pytest.raises(MediaDecodeError):
-        decode_gif(forged)
-
-
-def test_gif_truncated_lzw_is_short_pixel_data():
-    from pdf_to_text_spark.kernels.media import decode_gif
-
-    gif, _w, _h = _tiny_gif()
-    with pytest.raises(MediaDecodeError):
-        decode_gif(gif[: len(gif) // 2])
-
-
-def test_gif_no_color_table_rejected():
-    from pdf_to_text_spark.kernels.media import decode_gif
-
-    gif, _w, _h = _tiny_gif()
-    # clear the global-color-table flag without supplying a local one
-    mutated = bytearray(gif)
-    mutated[10] &= 0x7F
-    # the (now-orphaned) table bytes are parsed as blocks → typed error
-    with pytest.raises(MediaDecodeError):
-        decode_gif(bytes(mutated))
-
-
-def test_gif_lzw_code_out_of_range_rejected():
-    from pdf_to_text_spark.kernels.media import _gif_lzw_decode
-
-    # width 3 stream: CLEAR(100)=4, then code 7 with an empty table slot
-    # (table holds 0..5 +2 slack): 7 > len(table) → typed error
-    #   bits LSB-first: 100 111 -> 0b00111100 = 0x3C
-    with pytest.raises(MediaDecodeError):
-        _gif_lzw_decode(2, b"\x3c", 100)
-
-
-def test_gif_max_out_clamps_runaway_stream():
-    from pdf_to_text_spark.kernels.media import _gif_lzw_decode
-    from tools.make_media import _gif_lzw_encode
-
-    data = bytes((j * 3) % 4 for j in range(1000))
-    enc = _gif_lzw_encode(2, data)
-    out = _gif_lzw_decode(2, enc, 10)
-    assert len(out) in (10, 11, 12)  # clamped at/just past max_out
-    assert bytes(out[:10]) == data[:10]
-
-
 # ── linear resample (round 6) ────────────────────────────────────────────────
 
 
@@ -513,124 +437,6 @@ def test_jpeg_dht_flood_is_capped():
     with pytest.raises(MediaDecodeError, match="too many DHT"):
         decode_jpeg(flood)
 
-
-# ── Y4M (r6) ─────────────────────────────────────────────────────────────────
-
-
-def test_y4m_roundtrip_all_colorspaces():
-    from pdf_to_text_spark.kernels.media import decode_y4m
-    from tools.make_media import make_y4m
-
-    lumas = [bytes((k * 31 + j) % 256 for j in range(8 * 4)) for k in range(3)]
-    for cs in ("420jpeg", "420mpeg2", "420paldv", "420", "422", "444",
-               "mono", None):
-        data = make_y4m(8, 4, lumas, colorspace=cs)
-        w, h, nf, frames = decode_y4m(data)
-        assert (w, h, nf) == (8, 4, 3)
-        assert frames == lumas, cs
-
-
-def test_y4m_header_variants_and_frame_params():
-    from pdf_to_text_spark.kernels.media import decode_y4m
-    from tools.make_media import make_y4m
-
-    luma = bytes(range(8))
-    data = make_y4m(
-        4, 2, [luma], colorspace="mono", fps=(30000, 1001),
-        interlace="p", xparam="clip", frame_params=True,
-    )
-    assert decode_y4m(data) == (4, 2, 1, [luma])
-    # zero-frame stream: header only, no FRAME markers — valid, empty
-    assert decode_y4m(b"YUV4MPEG2 W4 H2 F25:1\n") == (4, 2, 0, [])
-
-
-def test_y4m_failure_classes():
-    from pdf_to_text_spark.kernels.media import MediaDecodeError, decode_y4m
-    from tools.make_media import corrupt_y4m, make_y4m
-
-    luma = bytes(64)
-    good = make_y4m(8, 8, [luma, luma])
-    cases = [
-        good[:-3],                                      # truncated frame
-        corrupt_y4m(good),                              # tool-made truncation
-        b"YUV4MPEG2 W8 H8\n" + b"FRANE\n" + bytes(96),  # bad marker
-        b"YUV4MPEG2 W8 H8\nFRAMEx\n" + bytes(96),       # params w/o space
-        b"YUV4MPEG2 W7 H8 C420\nFRAME\n",               # odd dim for 4:2:0
-        b"YUV4MPEG2 W8 H8 C410\nFRAME\n",               # unknown colorspace
-        b"YUV4MPEG2 W8 H8 Z9\n",                        # unknown header tag
-        b"YUV4MPEG2 W8 H8 F25\n",                       # malformed ratio
-        b"YUV4MPEG2 W8\n",                              # missing H
-        b"YUV4MPEG2 W8 H8 " + b"X" * 2000,              # unterminated header
-        b"\xffUV4MPEG2 W8 H8\n",                        # wrong magic
-    ]
-    for bad in cases:
-        with pytest.raises(MediaDecodeError):
-            decode_y4m(bad)
-
-
-def test_y4m_bomb_caps():
-    from pdf_to_text_spark.kernels.media import (
-        MAX_FRAMES,
-        MAX_PIXELS,
-        MediaDecodeError,
-        decode_y4m,
-    )
-
-    # single frame past the pixel cap fails on the header alone
-    with pytest.raises(MediaDecodeError, match="pixel cap"):
-        decode_y4m(b"YUV4MPEG2 W4000 H4000 Cmono\n")
-    # cumulative luma across frames is capped without materializing it
-    w, h = 1000, 1000
-    frame = b"FRAME\n" + bytes(w * h)
-    data = b"YUV4MPEG2 W%d H%d Cmono\n" % (w, h) + frame * 5
-    with pytest.raises(MediaDecodeError, match="luma exceeds pixel cap"):
-        decode_y4m(data)
-    # frame-count cap: tiny frames, huge count
-    many = b"YUV4MPEG2 W1 H1 Cmono\n" + (b"FRAME\n\x00" * (MAX_FRAMES + 1))
-    with pytest.raises(MediaDecodeError, match="frame count"):
-        decode_y4m(many)
-    assert MAX_PIXELS >= w * h  # the cumulative case above needs 1 frame legal
-
-
-def test_video_features_contract():
-    from pdf_to_text_spark.kernels.media import (
-        FEATURE_DIM,
-        decode_y4m,
-        video_features,
-    )
-    from tools.make_media import media_y4m
-
-    for i in (2, 11, 17, 35, 59):
-        w, h, nf, frames = decode_y4m(media_y4m(i)[0])
-        feats = video_features(w, h, frames)
-        assert len(feats) == FEATURE_DIM
-        assert all(abs(x) <= 2 for x in feats)
-        assert all(round(x, 6) == x for x in feats)
-    # motion feature is zero for a static clip, positive for a drifting one
-    static = video_features(4, 2, [bytes(8)] * 3)
-    assert static[8] == 0.0
-    drift = video_features(4, 2, [bytes(8), bytes([10] * 8)])
-    assert drift[8] > 0
-
-
-def test_y4m_stride_materializes_only_sampled_frames():
-    from pdf_to_text_spark.kernels.media import decode_y4m
-    from tools.make_media import make_y4m
-
-    lumas = [bytes([k] * 8) for k in range(7)]
-    data = make_y4m(4, 2, lumas, colorspace="mono")
-    w, h, nf, frames = decode_y4m(data, stride=3)
-    assert (w, h, nf) == (4, 2, 7)  # nf is the TOTAL count
-    assert frames == [lumas[0], lumas[3], lumas[6]]
-    # framing of UNSAMPLED frames is still validated
-    from pdf_to_text_spark.kernels.media import MediaDecodeError
-
-    with pytest.raises(MediaDecodeError):
-        decode_y4m(data[:-3], stride=3)  # truncates frame 6 (sampled)
-    with pytest.raises(MediaDecodeError):
-        decode_y4m(data[:-12], stride=3)  # truncates frame 5 (skipped)
-    with pytest.raises(ValueError):
-        decode_y4m(data, stride=0)
 
 
 def test_wav_24bit_scales_into_16bit_domain():
@@ -1052,65 +858,3 @@ def test_bmp_failure_classes():
     struct.pack_into("<ii", forged, 18, 1_000_000, 1_000_000)
     with pytest.raises(MediaDecodeError, match="dimension bomb"):
         decode_bmp(bytes(forged))
-
-
-# ── AVI / MJPEG (r6) ─────────────────────────────────────────────────────────
-
-
-def test_avi_mjpeg_roundtrip_and_stride():
-    from pdf_to_text_spark.kernels.media import decode_avi_mjpeg
-    from tools.make_media import media_avi
-
-    for i in (2, 5, 11, 17, 23):
-        data, w, h, nf = media_avi(i)
-        dw, dh, dnf, frames = decode_avi_mjpeg(data)
-        assert (dw, dh, dnf) == (w, h, nf)
-        assert all(len(f) == w * h for f in frames)
-        # strided: total count kept, only sampled frames decoded
-        _w, _h, dnf2, fr2 = decode_avi_mjpeg(data, stride=2)
-        assert dnf2 == nf and len(fr2) == (nf + 1) // 2
-        assert fr2[0] == frames[0]
-
-
-def test_avi_failure_classes():
-    from pdf_to_text_spark.kernels.media import MediaDecodeError, decode_avi_mjpeg
-    from tools.make_media import _riff_chunk, _riff_list, corrupt_avi, media_avi
-
-    good = media_avi(2)[0]
-    with pytest.raises(MediaDecodeError):
-        decode_avi_mjpeg(corrupt_avi(good))
-    with pytest.raises(MediaDecodeError, match="not an AVI"):
-        decode_avi_mjpeg(b"RIFF\x04\x00\x00\x00WAVE")
-    # no movi list
-    empty = b"RIFF" + struct.pack("<I", 4) + b"AVI "
-    with pytest.raises(MediaDecodeError, match="movi"):
-        decode_avi_mjpeg(empty)
-    # movi with zero frames
-    movi = _riff_list(b"movi", b"")
-    body = b"AVI " + movi
-    with pytest.raises(MediaDecodeError, match="no frames"):
-        decode_avi_mjpeg(b"RIFF" + struct.pack("<I", len(body)) + body)
-    # a non-frame chunk inside movi is typed
-    movi = _riff_list(b"movi", _riff_chunk(b"ix00", b"\x00" * 8))
-    body = b"AVI " + movi
-    with pytest.raises(MediaDecodeError, match="unsupported movi chunk"):
-        decode_avi_mjpeg(b"RIFF" + struct.pack("<I", len(body)) + body)
-    # frames that change geometry are typed
-    from tools.make_media import make_avi, make_jpeg
-
-    f1 = make_jpeg(8, 8, 1, pixels_for(1, 8, 8, 1))
-    f2 = make_jpeg(16, 8, 1, pixels_for(2, 16, 8, 1))
-    with pytest.raises(MediaDecodeError, match="geometry"):
-        decode_avi_mjpeg(make_avi([f1, f2], 8, 8))
-    with pytest.raises(ValueError):
-        decode_avi_mjpeg(media_avi(2)[0], stride=0)
-
-
-def test_rgb_to_luma_bt601():
-    from pdf_to_text_spark.kernels.media import _rgb_to_luma
-
-    assert _rgb_to_luma(bytes([100, 50, 200]), 1) == bytes([100, 50, 200])
-    assert _rgb_to_luma(bytes([255, 255, 255]), 3) == bytes([255])
-    assert _rgb_to_luma(bytes([0, 0, 0, 9]), 4) == bytes([0])
-    # BT.601 integer weights: (77R + 150G + 29B + 128) >> 8
-    assert _rgb_to_luma(bytes([255, 0, 0]), 3) == bytes([(77 * 255 + 128) >> 8])

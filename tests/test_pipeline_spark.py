@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_to_text_spark.kernels.blocks import (
-    chunk_blocks,
     doc_artifacts,
     parse_records,
     records_to_csv,
@@ -20,12 +19,11 @@ from pdf_to_text_spark.kernels.blocks import (
     segment_blocks,
 )
 from pdf_to_text_spark.operators.extraction import (
-    content_type_dispatch,
     dedup_latest_by_url,
     metrics_rollup,
     run_extraction,
 )
-from pdf_to_text_spark.operators.records import blocks_df, chunks_df, with_chunk_id
+from pdf_to_text_spark.operators.records import blocks_df, with_chunk_id
 from pdf_to_text_spark.pipeline import artifacts_from_extracted
 from pdf_to_text_spark.sources.pages import PAGES_SCHEMA, build_pages_pdf, pages_df
 from tools.oracle_extract import extract_any
@@ -111,6 +109,8 @@ def test_parse_status_accounting(extracted, pages):
     assert stats.get("passthrough", 0) >= 1    # pre-extracted text rows
     assert stats.get("empty", 0) >= 1          # null html+text rows
     assert stats["ok"] > 100
+    kinds = {r["content_type"] for r in extracted.select("content_type").distinct().collect()}
+    assert kinds == {"application/pdf", "text/html", None}
 
 
 def test_metrics_rollup(extracted):
@@ -121,12 +121,6 @@ def test_metrics_rollup(extracted):
     assert total["docs"] == extracted.count()
     assert total["fails"] >= 1
     assert m.count() <= 32  # one row per bucket
-
-
-def test_content_type_dispatch(pages):
-    out = content_type_dispatch(pages)
-    kinds = {r["content_type"] for r in out.collect()}
-    assert kinds == {"application/pdf", "text/html", None}
 
 
 def test_blocks_chunks_records_csv_match_kernel(spark):
@@ -146,13 +140,10 @@ def test_blocks_chunks_records_csv_match_kernel(spark):
     assert got_blocks == want_blocks
     assert len(want_blocks) == 26  # 25 terminated + 1 trailing unterminated
 
-    # chunks: 26 blocks → 10/10/6
-    bc = with_chunk_id(blocks)
-    chunks = {r["chunk_id"]: r for r in chunks_df(bc).collect()}
-    want_chunks = chunk_blocks(want_blocks)
-    assert [chunks[i]["n_blocks"] for i in sorted(chunks)] == [len(c) for c in want_chunks]
-    for i, wc in enumerate(want_chunks):
-        assert chunks[i]["chunk_text"] == "\n\n".join(wc)
+    # chunk ids: block_pos // 10, so 26 blocks → 10/10/6
+    bc = with_chunk_id(blocks).collect()
+    assert all(r["chunk_id"] == r["block_pos"] // 10 for r in bc)
+    assert sorted(r["chunk_id"] for r in bc) == [0] * 10 + [1] * 10 + [2] * 6
 
     # records, csv and json through the per-document pass
     art = artifacts_from_extracted(extracted)

@@ -1,4 +1,4 @@
-"""Text-analysis operator semantics + streaming."""
+"""Text-analysis operator semantics."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,78 +37,6 @@ def test_quality_stats_and_score(docs):
     assert 0 <= scores[4] < scores[0] <= 1  # stopword-less gibberish scores lower
 
 
-def test_stratified_sample_per_stratum_rates(spark):
-    rows = [(i, "en" if i % 2 == 0 else "fr") for i in range(2000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = text_analysis.stratified_sample(df, "lang", {"en": 10, "fr": 80}).collect()
-    en = sum(1 for r in out if r["lang"] == "en")
-    fr = sum(1 for r in out if r["lang"] == "fr")
-    assert 40 <= en <= 220      # ~10% of 1000
-    assert 600 <= fr <= 950     # ~80% of 1000
-    # unknown strata default to 0%
-    df2 = spark.createDataFrame([(1, "zz")], "doc_id long, lang string")
-    assert text_analysis.stratified_sample(df2, "lang", {"en": 50}).count() == 0
-
-
-def test_redact_pii_replaces_and_counts(spark):
-    df = spark.createDataFrame(
-        [(1, "mail a.b@c.org or 192.168.0.1, call +44 (20) 794-60000 ok")],
-        "doc_id long, text string",
-    )
-    r = text_analysis.redact_pii(df).collect()[0]
-    assert r["email_hits"] == 1 and r["ipv4_hits"] == 1
-    t = r["redacted_text"]
-    assert "<EMAIL>" in t and "<IPV4>" in t
-    assert "a.b@c.org" not in t and "192.168.0.1" not in t
-    # clean text passes through untouched
-    clean = spark.createDataFrame([(2, "hello plain world")], "doc_id long, text string")
-    assert text_analysis.redact_pii(clean).collect()[0]["redacted_text"] == "hello plain world"
-    # overlapping spans: counts reflect what was ACTUALLY replaced — the
-    # email consumes the phone-shaped substring, so phone_hits stays 0
-    # (review r2b #3: counting on the original text overcounted)
-    overlap = spark.createDataFrame(
-        [(3, "reach me: 1-555-123-4567@x.co")], "doc_id long, text string"
-    )
-    r3 = text_analysis.redact_pii(overlap).collect()[0]
-    assert r3["email_hits"] == 1 and r3["phone_hits"] == 0
-    assert "<PHONE>" not in r3["redacted_text"]
-
-
-def test_repetition_stats_flags_spam(spark):
-    """Gopher repetition signals: a spammy doc (one token dominating)
-    shows high top_word_frac / low distinct_ratio vs natural text."""
-    rows = [
-        (0, "buy now buy now buy now buy now buy now buy now", "en", "s", 1),
-        (1, "the quick brown fox jumps over a lazy dog near rivers", "en", "s", 1),
-        (2, "solo", "en", "s", 1),  # single word → no bigrams
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    out = {r["doc_id"]: r.asDict() for r in
-           text_analysis.repetition_stats(docs).collect()}
-    assert out[0]["words"] == 12 and out[0]["distinct_words"] == 2
-    assert out[0]["top_word_frac"] == 0.5
-    assert out[0]["top_bigram_count"] == 6  # "buy now" ×6
-    assert out[1]["distinct_ratio"] == 1.0 and out[1]["top_word_count"] == 1
-    assert out[2]["top_bigram_count"] == 0 and out[2]["words"] == 1
-
-
-def test_deterministic_sample_nests_and_reproduces(spark):
-    """Content-addressed sampling: same rows on any rerun/partitioning,
-    and pct subsets nest monotonically (1% ⊂ 5% ⊂ 20%)."""
-    df = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
-    s5a = {r["doc_id"] for r in text_analysis.deterministic_sample(df, pct=5).collect()}
-    s5b = {r["doc_id"] for r in
-           text_analysis.deterministic_sample(df.repartition(7), pct=5).collect()}
-    assert s5a == s5b and s5a
-    s1 = {r["doc_id"] for r in text_analysis.deterministic_sample(df, pct=1).collect()}
-    s20 = {r["doc_id"] for r in text_analysis.deterministic_sample(df, pct=20).collect()}
-    assert s1 <= s5a <= s20
-    # roughly proportional (hash-uniform): 20% of 2000 → 400 ± 40%
-    assert 200 <= len(s20) <= 640
-
-
 def test_text_profile_matches_component_operators(docs):
     """The fused single-pass profile must agree column-for-column with the
     three standalone operators it replaces (token_counts, quality_stats +
@@ -141,76 +69,6 @@ def test_language_id(docs):
     out = {r["doc_id"]: r["pred_lang"] for r in text_analysis.language_id(docs).collect()}
     assert out[0] == "en" and out[1] == "es" and out[2] == "de" and out[3] == "fr"
     assert out[4] == "und"
-
-
-def test_fingerprints_normalization(spark):
-    df = spark.createDataFrame(
-        [(0, "Hello, World!", "en", "s", 13), (1, "hello   world", "en", "s", 13)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    fps = [r["fingerprint"] for r in text_analysis.fingerprints(df).collect()]
-    assert fps[0] == fps[1]  # case/punct/ws-insensitive
-
-
-def test_winnow_fingerprints(docs):
-    out = text_analysis.winnow_fingerprints(docs).collect()
-    assert all(r["n_grams"] == len(r["winnow"]) for r in out)
-    assert all(r["n_grams"] > 0 for r in out)
-
-
-# ── streaming ────────────────────────────────────────────────────────────────
-
-
-def test_streaming_extraction_available_now(spark, tmp_path):
-    from pdf_to_text_spark.sources.pages import pages_df
-    from pdf_to_text_spark.streaming.extract_stream import run_available_now
-
-    src = str(tmp_path / "pages_stream")
-    pages_df(spark, 60, num_partitions=2).write.parquet(src)
-    out = str(tmp_path / "extracted_stream")
-    ckpt = str(tmp_path / "ckpt")
-    run_available_now(spark, src, out, ckpt)
-    got = spark.read.parquet(out)
-    want = pages_df(spark, 60, num_partitions=2).count()
-    assert got.count() == want
-    # exactly-once on rerun with same checkpoint: no new rows
-    run_available_now(spark, src, out, ckpt)
-    assert spark.read.parquet(out).count() == want
-    statuses = {r["parse_status"] for r in got.select("parse_status").distinct().collect()}
-    assert "ok" in statuses
-
-
-def test_repetition_stats_keeps_null_text_docs(spark):
-    """explode(NULL) emits nothing — a NULL-text doc must still get a row
-    (the no-silent-vanishing rule; r3 review)."""
-    from pdf_to_text_spark.operators.text_analysis import repetition_stats
-
-    df = spark.createDataFrame(
-        [(1, "a a b"), (2, None)], "doc_id long, text string"
-    )
-    got = {r["doc_id"]: r for r in repetition_stats(df).collect()}
-    assert set(got) == {1, 2}
-    assert got[1]["top_word_count"] == 2
-
-
-def test_null_key_rows_stay_sampleable(spark):
-    """r6 review: md5(NULL key) propagated NULL and `NULL < pct` dropped
-    the row from EVERY sample — pct=100 included — breaking the
-    reproducible-subset contract. NULL keys now hash as ''."""
-    df = spark.createDataFrame(
-        [("a", "en"), (None, "en")], "doc_id string, lang string"
-    )
-    assert text_analysis.deterministic_sample(df, key="doc_id", pct=100).count() == 2
-    kept = text_analysis.stratified_sample(df, "lang", {"en": 100}, key="doc_id")
-    assert kept.count() == 2
-    # monotone nesting still holds for the NULL-key row: it lands in ONE
-    # deterministic bucket (md5('')[:4] = 'd41d' = 54301 → 1 mod 100)
-    assert text_analysis.deterministic_sample(
-        df.where("doc_id IS NULL"), key="doc_id", pct=1
-    ).count() == 0
-    assert text_analysis.deterministic_sample(
-        df.where("doc_id IS NULL"), key="doc_id", pct=2
-    ).count() == 1
 
 
 def test_bpe_tokens_use_the_pinned_whitespace_class(spark):

@@ -252,114 +252,6 @@ def make_wav(
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def _gif_lzw_encode(min_code_size: int, indices: bytes) -> bytes:
-    """Greedy longest-match GIF LZW (the writer is a COMPRESSOR, so it
-    shares no code shape with the kernel's decompressor). LSB-first bit
-    packing; width grows with the table exactly as the spec's decoder
-    mirror requires; CLEAR re-emitted near the 12-bit ceiling."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    acc = bits = 0
-    width = min_code_size + 1
-
-    def emit(code: int) -> None:
-        nonlocal acc, bits
-        acc |= code << bits
-        bits += width
-        while bits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            bits -= 8
-
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    emit(clear)
-    prev = b""
-    for k in indices:
-        cur = prev + bytes([k])
-        if cur in table:
-            prev = cur
-            continue
-        emit(table[prev])
-        table[cur] = next_code
-        next_code += 1
-        # STRICTLY greater (giflib convention): the decoder's table runs
-        # one entry behind the encoder's (it can't learn a pair's entry
-        # until the next code arrives), so the width bump must lag one
-        # insertion too or the streams desynchronize
-        if next_code > (1 << width) and width < 12:
-            width += 1
-        if next_code >= 4094:
-            emit(clear)
-            table = {bytes([j]): j for j in range(clear)}
-            next_code = eoi + 1
-            width = min_code_size + 1
-        prev = bytes([k])
-    if prev:
-        emit(table[prev])
-    emit(eoi)
-    if bits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def make_gif(
-    w: int, h: int, indices: bytes, palette: bytes, *,
-    interlace: bool = False, local_palette: bool = False,
-    comment: bytes | None = None,
-) -> bytes:
-    """GIF89a with one image. `palette` is 3*2^n bytes (n in 1..8);
-    `indices` are w*h palette indices in row-major (pre-interlace)
-    order. `interlace` reorders rows into the 4-pass layout;
-    `local_palette` moves the table onto the image descriptor;
-    `comment` adds an extension block (readers must skip it)."""
-    n_entries = len(palette) // 3
-    size_bits = max(1, (n_entries - 1).bit_length())
-    if len(palette) != 3 * (1 << size_bits):
-        raise ValueError("palette length must be 3 * a power of two")
-    min_code = max(2, size_bits)
-    out = bytearray(b"GIF89a")
-    gpacked = 0 if local_palette else (0x80 | (size_bits - 1))
-    out += struct.pack("<HHBBB", w, h, gpacked, 0, 0)
-    if not local_palette:
-        out += palette
-    if comment is not None:
-        out += b"\x21\xfe" + bytes([len(comment)]) + comment + b"\x00"
-    ipacked = (0x80 | (size_bits - 1)) if local_palette else 0
-    if interlace:
-        ipacked |= 0x40
-        rows = [indices[y * w : (y + 1) * w] for y in range(h)]
-        order = (
-            list(range(0, h, 8)) + list(range(4, h, 8))
-            + list(range(2, h, 4)) + list(range(1, h, 2))
-        )
-        indices = b"".join(rows[y] for y in order)
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, ipacked)
-    if local_palette:
-        out += palette
-    out += bytes([min_code])
-    lzw = _gif_lzw_encode(min_code, indices)
-    for off in range(0, len(lzw), 255):
-        part = lzw[off : off + 255]
-        out += bytes([len(part)]) + part
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-def gif_palette_for(i: int, n: int = 16) -> bytes:
-    """Deterministic 3n-byte palette (n a power of two)."""
-    return bytes(((k * 11 + c * 59 + i * 37) % 256)
-                 for k in range(n) for c in range(3))
-
-
-def gif_indices_for(i: int, w: int, h: int, n: int = 16) -> bytes:
-    """Deterministic palette indices — same lattice idea as pixels_for."""
-    return bytes(
-        ((x * 3 + y * 5 + i) % n) for y in range(h) for x in range(w)
-    )
-
-
 def media_image(i: int) -> tuple[bytes, int, int]:
     """(image_bytes, w, h) for synthetic image row i.
 
@@ -411,34 +303,11 @@ def media_image(i: int) -> tuple[bytes, int, int]:
                     interlace=interlace), w, h
 
 
-def media_gif(i: int) -> tuple[bytes, int, int]:
-    """(gif_bytes, w, h) for synthetic GIF row i — palette size,
-    interlace, local-vs-global table and comment blocks all vary.
-    Variation is keyed by i//12, NOT i: the corpus slice is i%12==9,
-    under which every i-keyed modulus ≤12 is CONSTANT (i%2==1, i%4==1,
-    i%3==0 — r6 review #4: the gate would only ever see one GIF
-    shape)."""
-    w, h = 7 + i % 13, 5 + i % 9
-    j = i // 12
-    npal = [4, 16, 8][j % 3]
-    pal = gif_palette_for(i, npal)
-    idx = gif_indices_for(i, w, h, npal)
-    return (
-        make_gif(
-            w, h, idx, pal,
-            interlace=j % 2 == 1, local_palette=j % 4 < 2,
-            comment=b"c%d" % i if j % 5 == 0 else None,
-        ),
-        w, h,
-    )
-
-
 def media_audio(i: int) -> tuple[bytes, int]:
     """(wav_bytes, rate) for synthetic audio row i. Rate is keyed by
     i//3, NOT i: the audio slice is i%3==1, under which i%3 is CONSTANT
     — the old [..][i%3] pinned every row to 16000, so the gate's
-    audio_resample (target 16000) only ever exercised 'copy' mode (the
-    GIF-slice lesson again, r6)."""
+    audio_resample (target 16000) only ever exercised 'copy' mode (r6)."""
     j = i // 3
     rate = [8000, 16000, 44100][j % 3]
     n = 40 + (i * 13) % 160
@@ -477,7 +346,7 @@ def corrupt_png(data: bytes) -> bytes:
 
 
 # ── JPEG writer (baseline sequential, ITU-T T.81) ────────────────────────────
-# Independent of kernels/media.py's decoder, like the PNG/GIF writers
+# Independent of kernels/media.py's decoder, like the PNG writer
 # above: pure-Python FDCT (math.cos), snake-walk zigzag, and FLAT
 # canonical Huffman tables (every DC symbol 4 bits, every AC symbol
 # 8 bits) — spec-valid DHT segments that sidestep hand-typing Annex
@@ -733,8 +602,8 @@ def make_jpeg(
 
 def media_jpeg(i: int) -> tuple[bytes, int, int]:
     """(jpeg_bytes, w, h) for synthetic JPEG row i — varies gray/color,
-    4:4:4 vs 4:2:0, and a restart-interval slice. Keyed by i//12 like
-    media_gif: the corpus slice fixes every i-modulus ≤ 12. Residues
+    4:4:4 vs 4:2:0, and a restart-interval slice. Keyed by i//12: the
+    corpus slice fixes every i-modulus ≤ 12. Residues
     chosen so the 60-row gate's two surviving ok rows land the HARD
     decoder paths: i=3 (j=0) is color 4:2:0 WITH a restart interval,
     i=15 (j=1) is grayscale; plain 4:4:4 color runs at other j residues
@@ -767,110 +636,6 @@ def corrupt_jpeg(data: bytes) -> bytes:
     if start >= len(data) - 4:
         raise ValueError("corrupt_jpeg: no scan data to truncate")
     return data[: start + max(1, (len(data) - 2 - start) // 3)]
-
-
-# ── Y4M writer (YUV4MPEG2, mjpegtools yuv4mpeg(5)) ───────────────────────────
-# Independent of kernels/media.py's decoder like the writers above:
-# header assembled token by token, planes emitted per frame from a
-# pixel formula the independent test re-states.
-
-
-def y4m_luma_for(i: int, w: int, h: int, k: int) -> bytes:
-    """Deterministic Y plane for frame k of clip i — a drifting gradient
-    so consecutive frames differ (the motion feature is nonzero)."""
-    return bytes(
-        (x * 7 + y * 11 + i * 3 + k * 17) % 256
-        for y in range(h)
-        for x in range(w)
-    )
-
-
-def make_y4m(
-    w: int,
-    h: int,
-    lumas: list[bytes],
-    *,
-    colorspace: str | None = "420jpeg",
-    fps: tuple[int, int] = (25, 1),
-    interlace: str | None = None,
-    xparam: str | None = None,
-    frame_params: bool = False,
-) -> bytes:
-    """Assemble a YUV4MPEG2 stream: stream header, then FRAME marker +
-    Y plane + constant mid-gray chroma planes (skipped by the luma-based
-    decoder but required for frame framing to be right). colorspace=None
-    omits the C tag (readers must default to 4:2:0)."""
-    toks = ["YUV4MPEG2", f"W{w}", f"H{h}", f"F{fps[0]}:{fps[1]}"]
-    if interlace is not None:
-        toks.append(f"I{interlace}")
-    if colorspace is not None:
-        toks.append(f"C{colorspace}")
-    if xparam is not None:
-        toks.append(f"X{xparam}")
-    cs = colorspace or "420"
-    if cs.startswith("420"):
-        if w % 2 or h % 2:
-            # fail loudly like make_wav's range checks: silently flooring
-            # would write a stream whose frame framing the decoder
-            # correctly rejects — fixture garbage
-            raise ValueError(f"make_y4m: odd dims {w}x{h} for C{cs}")
-        cbytes = (w // 2) * (h // 2)
-    elif cs == "422":
-        if w % 2:
-            raise ValueError(f"make_y4m: odd width {w} for C422")
-        cbytes = (w // 2) * h
-    elif cs == "444":
-        cbytes = w * h
-    elif cs == "mono":
-        cbytes = None
-    else:
-        raise ValueError(f"make_y4m: unknown colorspace {cs}")
-    out = bytearray((" ".join(toks)).encode("ascii") + b"\n")
-    for luma in lumas:
-        if len(luma) != w * h:
-            raise ValueError("make_y4m: luma plane size mismatch")
-        out += b"FRAME Xk=1\n" if frame_params else b"FRAME\n"
-        out += luma
-        if cbytes is not None:
-            out += b"\x80" * (2 * cbytes)
-    return bytes(out)
-
-
-def media_y4m(i: int) -> tuple[bytes, int, int, int]:
-    """(y4m_bytes, w, h, n_frames) for synthetic video row i — geometry,
-    colorspace, frame count, interlace/X tags and FRAME params all vary.
-    Keyed by i//3 (j), NOT i: the video slice is i%3==2, under which
-    every i-keyed modulus divisible by 3 is constant (the GIF-slice
-    lesson, r6 review #4)."""
-    j = i // 3
-    w, h = 4 + 2 * (j % 5), 2 + 2 * (j % 4)
-    nf = 1 + j % 5
-    cs = ["420jpeg", "444", "mono", "422", None, "420mpeg2"][j % 6]
-    lumas = [y4m_luma_for(i, w, h, k) for k in range(nf)]
-    return (
-        make_y4m(
-            w, h, lumas,
-            colorspace=cs,
-            fps=[(25, 1), (30, 1), (30000, 1001)][j % 3],
-            # j%4==3, NOT 1: the synth AVI slice took j%4==1, which
-            # would have removed every interlace-tagged Y4M row from
-            # the corpus (r6 review)
-            interlace="p" if j % 4 == 3 else None,
-            xparam=f"clip{i}" if j % 5 == 2 else None,
-            frame_params=j % 7 == 3,
-        ),
-        w, h, nf,
-    )
-
-
-def corrupt_y4m(data: bytes) -> bytes:
-    """Drop the tail of the final frame — header and all earlier frames
-    stay intact, the walk hits 'truncated Y4M frame':
-    decode_status='decode_failed' deterministically."""
-    last = data.rfind(b"FRAME")
-    if last <= 0:
-        raise ValueError("corrupt_y4m: input has no FRAME marker")
-    return data[: len(data) - max(1, (len(data) - last) // 4)]
 
 
 # ── TIFF writer (TIFF 6.0) ───────────────────────────────────────────────────
@@ -1106,77 +871,3 @@ def media_bmp(i: int) -> tuple[bytes, int, int]:
         make_bmp(w, h, pixels_for(i, w, h, 3), top_down=(j // 12) % 4 >= 2),
         w, h,
     )
-
-
-# ── AVI (MJPEG) writer ───────────────────────────────────────────────────────
-
-
-def _riff_chunk(cid: bytes, body: bytes) -> bytes:
-    pad = b"\x00" if len(body) & 1 else b""
-    return cid + struct.pack("<I", len(body)) + body + pad
-
-
-def _riff_list(ltype: bytes, body: bytes) -> bytes:
-    return _riff_chunk(b"LIST", ltype + body)
-
-
-def make_avi(jpeg_frames: list[bytes], w: int, h: int, fps: int = 15) -> bytes:
-    """Assemble an MJPEG AVI: RIFF('AVI ') → hdrl (avih + strl) → movi
-    with one '00dc' chunk per JPEG frame. The header LIST carries
-    plausible values (the engine's reader keys off the movi walk, but a
-    gutted header would make the fixture unrealistic)."""
-    avih = struct.pack(
-        "<14I", 1_000_000 // fps, 0, 0, 0x10, len(jpeg_frames), 0, 1, 0,
-        w, h, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"MJPG"
-        + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, fps, 0,
-                      len(jpeg_frames), 0, 0, 0)
-        + struct.pack("<4H", 0, 0, w, h)
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0x47504A4D, w * h * 3, 0, 0, 0, 0
-    )
-    hdrl = _riff_list(
-        b"hdrl",
-        _riff_chunk(b"avih", avih)
-        + _riff_list(b"strl", _riff_chunk(b"strh", strh)
-                     + _riff_chunk(b"strf", strf)),
-    )
-    movi = _riff_list(
-        b"movi", b"".join(_riff_chunk(b"00dc", f) for f in jpeg_frames)
-    )
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def media_avi(i: int) -> tuple[bytes, int, int, int]:
-    """(avi_bytes, w, h, n_frames) for synthetic MJPEG video row i —
-    frame count, geometry and gray-vs-color keyed by k=j//4: the corpus
-    slice is (i//3)%4==1, under which any function of j%4 (or j%2) is
-    CONSTANT — the first cut froze every synth AVI to one 3-frame 16x8
-    color shape (r6 review; the GIF-slice lesson at the next level)."""
-    j = i // 3
-    k = j // 4
-    w, h = 8 + 8 * (k % 2), 8  # JPEG MCU-friendly small frames
-    nf = 2 + k % 4
-    gray = k % 2 == 0
-    frames = [
-        make_jpeg(
-            w, h, 1 if gray else 3,
-            pixels_for(i + 31 * n, w, h, 1 if gray else 3),
-        )
-        for n in range(nf)
-    ]
-    return make_avi(frames, w, h, fps=[15, 24, 30][k % 3]), w, h, nf
-
-
-def corrupt_avi(data: bytes) -> bytes:
-    """Truncate inside the final frame chunk — the movi walk hits
-    'truncated AVI frame chunk' (or the JPEG scan runs dry):
-    decode_failed deterministically."""
-    last = data.rfind(b"00dc")
-    if last < 0:
-        raise ValueError("corrupt_avi: no frame chunks")
-    return data[: len(data) - max(4, (len(data) - last) // 3)]
