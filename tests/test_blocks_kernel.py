@@ -7,10 +7,15 @@ src/main.ts:39-56.
 import json
 import re
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pdf_to_text_spark.kernels.blocks import (
+    _js_parse_float,
+    _js_parse_int,
+    _to_fixed_2,
+    doc_artifacts,
     parse_records,
     records_to_csv,
     records_to_pretty_json,
@@ -90,6 +95,42 @@ def test_segmentation_invariants(lines):
     assert all(any(line == cand for cand in it) for line in joined)
 
 
+# ── chunking (src/main.ts:116-124,166, size boundaries) ─────────────────────
+
+
+def _doc_with_blocks(sales_per_block: list[int]) -> str:
+    """A document of len(sales_per_block) terminated Sucursal blocks, block
+    i holding sales_per_block[i] sale lines."""
+    lines = ["preamble"]
+    for i, n in enumerate(sales_per_block):
+        lines.append(f"Sucursal {i:03d}")
+        lines += [f"  EAN {i}{j} cantidad {j} importe {j}.50" for j in range(n)]
+        lines.append(END)
+    return "\n".join(lines)
+
+
+def test_chunk_boundaries():
+    for n, want in [(0, []), (1, [1]), (9, [9]), (10, [10]), (11, [10, 1]), (25, [10, 10, 5])]:
+        records, _, _ = doc_artifacts(_doc_with_blocks([1] * n))
+        sizes: dict[int, int] = {}
+        for r in records:
+            sizes[r["chunk_id"]] = sizes.get(r["chunk_id"], 0) + 1
+        assert [sizes[c] for c in sorted(sizes)] == want
+        assert [r["block_pos"] for r in records] == list(range(n))  # order preserved
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.integers(min_value=0, max_value=3), max_size=40))
+def test_chunk_property(sales_per_block):
+    records, csv, _ = doc_artifacts(_doc_with_blocks(sales_per_block))
+    assert [(r["block_pos"], r["record_pos"]) for r in records] == [
+        (b, j) for b, n in enumerate(sales_per_block) for j in range(n)
+    ]
+    assert all(r["chunk_id"] == r["block_pos"] // 10 for r in records)
+    assert all(r["SucursalName"] == f"Sucursal {r['block_pos']:03d}" for r in records)
+    assert len(csv.split("\n")) == 1 + max(len(records), 1)
+
+
 # ── record parsing + CSV quirks ──────────────────────────────────────────────
 
 
@@ -157,6 +198,76 @@ def test_js_infinity_literals():
     assert _to_fixed_2(1.125) == "1.13" and _to_fixed_2(-1.125) == "-1.13"
     recs = [{"SucursalName": "x", "EAN": "1", "CantidadVendida": "2", "Importe": "Infinity"}]
     assert records_to_csv(recs).split("\n")[1] == '"x","1",2,Infinity'
+
+
+# JS values: what parseInt(v, 10) || 0, parseFloat(v) || 0 and
+# Number.prototype.toFixed(2) give for v (src/main.ts:44-45)
+
+
+@pytest.mark.parametrize(
+    "v,want",
+    [
+        ("42", 42),
+        (" \n12\t", 12),      # leading/trailing whitespace trimmed
+        ("42abc", 42),        # longest leading integer prefix
+        ("3.9", 3),           # truncates at the point
+        ("1e3", 1),           # no exponent
+        ("+7", 7),
+        ("-7", -7),
+        ("007", 7),
+        ("-0", 0),            # -0 || 0 → 0
+        ("0x1A", 0),          # radix 10: the x ends the prefix
+        ("+-1", 0),           # NaN || 0
+        ("- 1", 0),
+        ("\u0663", 0),        # ASCII digits only
+        ("", 0),
+        (None, 0),            # a missing field
+    ],
+)
+def test_js_parse_int_matches_js(v, want):
+    assert _js_parse_int(v) == want
+
+
+@pytest.mark.parametrize(
+    "v,want",
+    [
+        ("3.14abc", 3.14),
+        (" \t7.25 ", 7.25),
+        (".5", 0.5),
+        ("5.", 5.0),
+        ("-.5e1", -5.0),
+        ("1E-2", 0.01),
+        ("1e", 1.0),          # a bare exponent marker ends the prefix
+        ("1e+", 1.0),
+        ("1.2.3", 1.2),
+        ("1,5", 1.0),
+        ("0x10", 0.0),
+        ("+.e1", 0.0),        # NaN || 0
+        ("..5", 0.0),
+        ("infinity", 0.0),    # the literal is case-sensitive
+        ("-Infinityx", float("-inf")),
+        ("\u0663.5", 0.0),    # ASCII digits only
+        ("-0", 0.0),
+    ],
+)
+def test_js_parse_float_matches_js(v, want):
+    got = _js_parse_float(v)
+    assert got == want and str(got) == str(want)  # -0 must not survive ||0
+
+
+@pytest.mark.parametrize(
+    "f,want",
+    [
+        (0.0, "0.00"),
+        (-0.0, "0.00"),                 # -0 < 0 is false: no sign
+        (-1e-10, "-0.00"),              # sign kept when the digits round away
+        (0.125, "0.13"),                # exact binary tie → the larger n
+        (123456.789, "123456.79"),
+        (1e20, "100000000000000000000.00"),
+    ],
+)
+def test_to_fixed_2_matches_js(f, want):
+    assert _to_fixed_2(f) == want
 
 
 @settings(max_examples=100, deadline=None)

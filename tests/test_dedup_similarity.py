@@ -1,8 +1,11 @@
 """Dedup operator semantics on crafted corpora."""
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
+from pdf_to_text_spark.kernels.textstats import normalize_text
 from pdf_to_text_spark.operators import dedup
 
 BASE = (
@@ -41,6 +44,42 @@ def test_exact_dedup_catches_case_difference(docs, spark):
     kept = dedup.dedup_exact(docs)
     ids = {r["doc_id"] for r in kept.collect()}
     assert 4 not in ids and 0 in ids and len(ids) == 5
+
+
+# fingerprint_col (JVM) against the Python normalization it is mirrored by
+NORM_CASES = {
+    "empty": "",
+    "punct": "Hello, World!",
+    "ws-run": "hello   world",
+    "trim": "  lead and trail  ",
+    "tab-newline": "tab\tnew\nline",
+    "underscore": "a-b_c",
+    "accents": "ÀÉÎ accents",
+    "kelvin": "\u212a kelvin",      # lowercases to ASCII k
+    "dotted-i": "\u0130stanbul",    # lowercases to i + combining dot
+    "sharp-s": "ß straße",
+    "fullwidth": "ＡＢＣ fullwidth",
+    "arabic-digit": "\u0663 digit",
+    "emoji": "emoji \U0001F600 mid",
+}
+
+
+@pytest.fixture(scope="module")
+def spark_fingerprints(spark):
+    df = spark.createDataFrame(list(NORM_CASES.items()), "case string, text string")
+    return {r["case"]: r["fp"] for r in df.select("case", dedup.fingerprint_col().alias("fp")).collect()}
+
+
+@pytest.mark.parametrize("case", sorted(NORM_CASES))
+def test_fingerprint_col_mirrors_normalize_text(spark_fingerprints, case):
+    want = hashlib.md5(normalize_text(NORM_CASES[case]).encode()).hexdigest()
+    assert spark_fingerprints[case] == want
+
+
+def test_fingerprint_col_null_text_is_empty_text(spark):
+    df = spark.createDataFrame([(None,), ("",)], "text string")
+    fps = [r["fp"] for r in df.select(dedup.fingerprint_col().alias("fp")).collect()]
+    assert fps == [hashlib.md5(b"").hexdigest()] * 2
 
 
 def test_minhash_lsh_finds_near_dups(docs):

@@ -5,6 +5,7 @@ pandas seam (udfs.extract_batches) that in-process replays call."""
 from __future__ import annotations
 
 import datetime as dt
+import pathlib
 
 import pandas as pd
 import pyarrow as pa
@@ -13,6 +14,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from pdf_to_text_spark.functions import udfs
 from pdf_to_text_spark.sources.pages import build_pages_pdf
+
+GOLDEN_PDF = (pathlib.Path(__file__).parent / "golden" / "sucursal_report.pdf").read_bytes()
 
 PAGES_ARROW = pa.schema([
     ("url", pa.string()), ("warc_ts", pa.timestamp("us", tz="UTC")),
@@ -107,3 +110,36 @@ def test_empty_and_null_rows(empty):
     assert [(r[3], r[7], r[8]) for r in got] == [
         ("text/html", "ok", 0), ("application/pdf", "parse_failed", 1), (None, "empty", 0)]
     assert _pandas_rows([pd.DataFrame(rows)]) == got
+
+
+# The content-type rule (udfs._extract_rows, its one definition):
+# application/pdf iff the url ends ".pdf" AND the bytes start "%PDF-",
+# NULL without bytes, else text/html — and the kind picks the kernel.
+@pytest.mark.parametrize(
+    "url,html,text,want",
+    [
+        ("a.pdf", GOLDEN_PDF, None, ("application/pdf", 3, "ok", 0)),
+        ("a.pdf", b"%PDF-1.4 junk", None, ("application/pdf", 0, "parse_failed", 1)),
+        ("a.html", GOLDEN_PDF, None, ("text/html", 1, "ok", 0)),
+        (None, GOLDEN_PDF, None, ("text/html", 1, "ok", 0)),
+        ("a.PDF", GOLDEN_PDF, None, ("text/html", 1, "ok", 0)),      # suffix is case-sensitive
+        ("a.pdf?x=1", GOLDEN_PDF, None, ("text/html", 1, "ok", 0)),  # so is "ends with"
+        ("a.pdf", b" " + GOLDEN_PDF, None, ("text/html", 1, "ok", 0)),
+        ("a.pdf", b"%PDF", None, ("text/html", 1, "ok", 0)),
+        ("a.pdf", b"<p>hi</p>", None, ("text/html", 1, "ok", 0)),
+        ("a.pdf", b"", None, ("text/html", 1, "ok", 0)),             # empty bytes are not NULL
+        ("a.pdf", None, "pre-extracted", (None, 1, "passthrough", 0)),
+        ("a.pdf", None, None, (None, 0, "empty", 0)),
+    ],
+    ids=["pdf", "pdf-junk", "html-url", "null-url", "upper-suffix", "query-suffix",
+         "lead-space", "short-magic", "html-bytes", "empty-bytes", "passthrough", "empty"],
+)
+def test_content_type_rule(url, html, text, want):
+    rows = [{"url": url, "warc_ts": None, "html": html, "text": text, "lang": None}]
+    got = _arrow_rows([pa.RecordBatch.from_pylist(rows, schema=PAGES_ARROW)])
+    assert [(r[3], r[5], r[7], r[8]) for r in got] == [want]
+    # the kind picks the kernel, whatever the bytes hold
+    if want[0] == "text/html":
+        assert got[0][4] == udfs.extract_html_text(html)
+    elif want[2] == "ok":
+        assert got[0][4] == udfs.extract_pdf_text(html)[0]

@@ -109,8 +109,6 @@ def test_parse_status_accounting(extracted, pages):
     assert stats.get("passthrough", 0) >= 1    # pre-extracted text rows
     assert stats.get("empty", 0) >= 1          # null html+text rows
     assert stats["ok"] > 100
-    kinds = {r["content_type"] for r in extracted.select("content_type").distinct().collect()}
-    assert kinds == {"application/pdf", "text/html", None}
 
 
 def test_metrics_rollup(extracted):
@@ -121,6 +119,11 @@ def test_metrics_rollup(extracted):
     assert total["docs"] == extracted.count()
     assert total["fails"] >= 1
     assert m.count() <= 32  # one row per bucket
+
+
+def test_content_type_dispatch(extracted):
+    kinds = {r["content_type"] for r in extracted.select("content_type").distinct().collect()}
+    assert kinds == {"application/pdf", "text/html", None}
 
 
 def test_blocks_chunks_records_csv_match_kernel(spark):

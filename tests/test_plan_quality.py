@@ -78,6 +78,23 @@ def test_filter_pushdown_reaches_scan(spark):
     assert "o_totalprice" not in m.group(1)  # pruned
 
 
+def test_chunk_assembly_single_aggregate_no_window(spark):
+    """Chunk ids must be explode → project: no Window operator and no
+    aggregate (the ordinal comes from posexplode for free)."""
+    import datetime as dt
+
+    from pdf_to_text_spark.operators.extraction import run_extraction
+    from pdf_to_text_spark.operators.records import blocks_df, with_chunk_id
+    from pdf_to_text_spark.sources.pages import PAGES_SCHEMA
+
+    df = spark.createDataFrame(
+        [("u", dt.datetime(2024, 1, 1), b"%PDF-x", None, "en")], schema=PAGES_SCHEMA
+    )
+    plan = _plan(with_chunk_id(blocks_df(run_extraction(df, dedup=False))))
+    assert "Window" not in plan and "Aggregate" not in plan and "Exchange" not in plan
+    assert "Generate posexplode" in plan or "posexplode" in plan
+
+
 def test_artifact_sinks_are_one_python_pass_each(spark, pages, tmp_path):
     """records, csv_docs and json_docs over a parquet-read extracted table
     are each scan → ONE MapInPandas → project/generate/filter: no other
@@ -263,3 +280,14 @@ def test_spread_small_scan_preserves_results(spark, monkeypatch, tmp_path):
         assert on == off
 
 
+def test_merged_profile_queries_stay_single_pass(spark):
+    """The merged quality profile must keep the one-pass shape it was
+    merged FOR: quality_stats(+score) = map-only, zero Exchange."""
+    docs = spark.createDataFrame(
+        [(1, "some text here", "en", "s0", 14)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    from pdf_to_text_spark.operators.text_analysis import quality_score
+
+    qp = quality_score(docs)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in qp and "Join" not in qp
