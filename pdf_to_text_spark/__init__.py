@@ -12,7 +12,7 @@ Layout:
   functions/  Arrow-batched Spark UDF wrappers around the kernels
   operators/  DataFrame-level operators (extraction, records, dedup,
               text analysis)
-  sources/    synthetic pages-table generator + testdata catalog
+  sources/    synthetic pages-table generator + WARC ingress
   plans/      layout (url-hash buckets, small-scan spreading) +
               checkpoint/resume (Iceberg-style
               manifest emulation)

@@ -39,8 +39,6 @@ __all__ = [
     # legacy aliases (pre-round-5 names; same functions, 16- OR 32-byte keys)
     "aes128_cbc_decrypt",
     "aes128_cbc_encrypt",
-    "aes128_decrypt_block",
-    "aes128_encrypt_block",
     "PASSWORD_PAD",
     "file_key",
     "compute_o",
@@ -308,7 +306,9 @@ def _dec_words(key: bytes) -> tuple:
     return tuple(out)
 
 
-def _encrypt_block_fast(key: bytes, block: bytes) -> bytes:
+def aes_encrypt_block(key: bytes, block: bytes) -> bytes:
+    """One-block AES with a 16- or 32-byte key (AES-128 / AES-256). The
+    key must be `bytes`: it keys the cached round-key schedule."""
     w = _enc_words(key)
     nr = len(w) - 1
     rk = w[0]
@@ -349,7 +349,9 @@ def _encrypt_block_fast(key: bytes, block: bytes) -> bytes:
     return bytes(out)
 
 
-def _decrypt_block_fast(key: bytes, block: bytes) -> bytes:
+def aes_decrypt_block(key: bytes, block: bytes) -> bytes:
+    """One-block AES with a 16- or 32-byte key (AES-128 / AES-256). The
+    key must be `bytes`: it keys the cached round-key schedule."""
     w = _dec_words(key)
     nr = len(w) - 1
     rk = w[0]
@@ -390,16 +392,6 @@ def _decrypt_block_fast(key: bytes, block: bytes) -> bytes:
     return bytes(out)
 
 
-def aes_encrypt_block(key: bytes, block: bytes) -> bytes:
-    """One-block AES with a 16- or 32-byte key (AES-128 / AES-256)."""
-    return _encrypt_block_fast(bytes(key), block)
-
-
-def aes_decrypt_block(key: bytes, block: bytes) -> bytes:
-    """One-block AES with a 16- or 32-byte key (AES-128 / AES-256)."""
-    return _decrypt_block_fast(bytes(key), block)
-
-
 def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     """PKCS#7-pad, CBC-encrypt, and PREPEND the IV (the PDF layout).
     16- or 32-byte keys (AESV2 / AESV3)."""
@@ -410,7 +402,7 @@ def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     prev = iv
     for i in range(0, len(data), 16):
         blk = bytes(a ^ b for a, b in zip(data[i : i + 16], prev))
-        prev = _encrypt_block_fast(key, blk)
+        prev = aes_encrypt_block(key, blk)
         out += prev
     return bytes(out)
 
@@ -426,7 +418,7 @@ def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
     out = bytearray()
     for i in range(16, len(data), 16):
         blk = data[i : i + 16]
-        dec = _decrypt_block_fast(key, blk)
+        dec = aes_decrypt_block(key, blk)
         out += bytes(a ^ b for a, b in zip(dec, prev))
         prev = blk
     pad = out[-1]
@@ -439,8 +431,6 @@ def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
 # 32-byte AESV3 keys through the same code paths; the aes_* names state
 # the real contract (ADVICE r4) and these aliases keep old callers
 # working.
-aes128_encrypt_block = aes_encrypt_block
-aes128_decrypt_block = aes_decrypt_block
 aes128_cbc_encrypt = aes_cbc_encrypt
 aes128_cbc_decrypt = aes_cbc_decrypt
 
@@ -544,7 +534,7 @@ def _cbc_nopad_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     prev = iv
     for i in range(0, len(data), 16):
         blk = bytes(a ^ b for a, b in zip(data[i : i + 16], prev))
-        prev = _encrypt_block_fast(key, blk)
+        prev = aes_encrypt_block(key, blk)
         out += prev
     return bytes(out)
 
@@ -557,7 +547,7 @@ def _cbc_nopad_decrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     prev = iv
     for i in range(0, len(data), 16):
         blk = data[i : i + 16]
-        dec = _decrypt_block_fast(key, blk)
+        dec = aes_decrypt_block(key, blk)
         out += bytes(a ^ b for a, b in zip(dec, prev))
         prev = blk
     return bytes(out)
@@ -681,7 +671,7 @@ def make_perms_r6(p: int, encrypt_metadata: bool, file_key: bytes) -> bytes:
         + b"adb"
         + b"pts0"
     )
-    return _encrypt_block_fast(bytes(file_key), blk)
+    return aes_encrypt_block(bytes(file_key), blk)
 
 
 def check_perms_r6(perms: bytes, file_key: bytes) -> bool:
@@ -689,7 +679,7 @@ def check_perms_r6(perms: bytes, file_key: bytes) -> bool:
     signature at bytes 9-11 (P/metadata consistency is advisory)."""
     if len(perms) < 16:
         return False
-    blk = _decrypt_block_fast(bytes(file_key), perms[:16])
+    blk = aes_decrypt_block(bytes(file_key), perms[:16])
     return blk[9:12] == b"adb"
 
 

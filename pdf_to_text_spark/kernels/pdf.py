@@ -148,15 +148,12 @@ def _flate_decode(raw: bytes) -> bytes:
         raise PDFParseError(f"FlateDecode failed: {e}") from None
 
 
-def _lzw_decode(raw: bytes, early: int = 1, max_out: int | None = None) -> bytes:
+def _lzw_decode(raw: bytes, early: int = 1) -> bytes:
     """LZWDecode (§7.4.4): 9→12-bit MSB-first codes, 256=clear, 257=EOD.
 
     `early` is /EarlyChange (default 1): the code width grows one code
     early, matching TIFF/PDF writers. Pinned against the spec's worked
-    example in tests (45×5 65 45×3 66 ⇄ 80 0B 60 50 22 0C 0C 85 01).
-    `max_out` tightens the expansion bound below the module-wide stream
-    cap — the TIFF strip path (kernels/media.py) bounds each strip by
-    its declared geometry (r6 review)."""
+    example in tests (45×5 65 45×3 66 ⇄ 80 0B 60 50 22 0C 0C 85 01)."""
     out = bytearray()
     base = [bytes([i]) for i in range(256)] + [b"", b""]  # 256/257 control
     table = list(base)
@@ -196,7 +193,7 @@ def _lzw_decode(raw: bytes, early: int = 1, max_out: int | None = None) -> bytes
                 else:
                     raise PDFParseError(f"LZW: code {code} out of range")
                 out += entry
-                if len(out) > (max_out or MAX_DECODED_STREAM_BYTES):
+                if len(out) > MAX_DECODED_STREAM_BYTES:
                     raise PDFParseError("LZWDecode: decoded stream exceeds cap")
                 table.append(prev + entry[:1])
                 prev = entry

@@ -29,13 +29,9 @@ __all__ = [
     "minhash_batch",
     "minhash_signature",
     "minhash_bands",
-    "TOKEN_RE",
 ]
 
 _NORM_RE = re.compile(r"[^0-9a-z]+")
-# BPE-ish token regex: letter runs, digit runs, or single non-space symbols
-# (a simplification of the GPT-2 pattern, stdlib-re-compatible).
-TOKEN_RE = re.compile(r"[A-Za-z]+|\d+|[^\sA-Za-z\d]")
 
 _MERSENNE = (1 << 61) - 1
 _N_PERM_DEFAULT = 64

@@ -33,11 +33,12 @@ def blocks_df(extracted: DataFrame) -> DataFrame:
     )
 
 
-def with_chunk_id(blocks: DataFrame, max_per_chunk: int = MAX_BLOCKS_PER_CHUNK) -> DataFrame:
+def with_chunk_id(blocks: DataFrame) -> DataFrame:
     """chunk_id = floor(block_pos / 10) — array position replaces the
-    reference's sequential slicing (src/main.ts:116-124)."""
+    reference's sequential slicing (src/main.ts:116-124). The constant
+    is the one kernels/blocks.doc_artifacts tags records with."""
     return blocks.withColumn(
-        "chunk_id", (F.col("block_pos") / F.lit(max_per_chunk)).cast("int")
+        "chunk_id", (F.col("block_pos") / F.lit(MAX_BLOCKS_PER_CHUNK)).cast("int")
     )
 
 

@@ -35,7 +35,6 @@ BPE_TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\f\r]"
 # differently per engine (r5 review; the module rule is the RE2 ∩ Java
 # common subset).
 _WS_RE = "[ \t\n\f\r]+"
-_PUNCT_RE = "[^A-Za-z0-9 \t\n\f\r]"
 
 LANG_PROFILES = {
     "en": ["the", "of", "and", "to", "in", "is", "that", "it", "for", "was"],
@@ -146,8 +145,9 @@ def _char_class_counts():
     whitespace five, or punct — so
       alpha = len - len(translate(text, ALPHA, ''))
       punct = len - alpha - digit - ws
-    matches regexp_count('[A-Za-z]') / '[0-9]' / _PUNCT_RE (all three
-    classes match single code points; length() counts code points)."""
+    matches regexp_count('[A-Za-z]') / '[0-9]' /
+    '[^A-Za-z0-9 \\t\\n\\f\\r]' (all three classes match single code
+    points; length() counts code points)."""
     ln = F.length("text")
 
     def deleted(chars: str):

@@ -24,13 +24,11 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-SEED = 42
 # Bump whenever _row_payload's OUTPUT changes for any i — .benchdata
 # cache directories embed it, so a stale cache can't silently serve the
 # previous round's corpus (r4 review; replaces the manual delete step).
 PAGES_GEN = 12  # r6 review: Type1 Length2/3 split corrected in embedded-font fixtures
 EPOCH = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
-LANGS = ["en", "es", "de", "fr", "zh"]
 # weights ~40/16/14/16/14 via a 50-slot cycle
 _LANG_CYCLE = (["en"] * 20 + ["es"] * 8 + ["de"] * 7 + ["fr"] * 8 + ["zh"] * 7)
 

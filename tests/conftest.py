@@ -1,4 +1,20 @@
+import os
+
 import pytest
+from pyspark.sql import DataFrame, SparkSession
+
+# The generated sf testdata tables (FIXTURES.md §6), read-only.
+TABLES = (
+    "region nation customer supplier part orders lineitem events documents embeddings"
+).split()
+
+DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}")
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 @pytest.fixture(scope="session")

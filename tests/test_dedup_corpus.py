@@ -10,10 +10,10 @@ perfbench.oracle.check_dedup; both are imported read-only.
 import os
 
 import pytest
+from conftest import DEFAULT_SF_DIR
 
 from pdf_to_text_spark.kernels.textstats import minhash_signature
 from pdf_to_text_spark.operators import dedup
-from pdf_to_text_spark.sources.catalog import DEFAULT_SF_DIR
 
 # the smallest generated table set, beside the default one
 SF = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001", "documents.parquet")

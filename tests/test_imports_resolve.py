@@ -8,8 +8,9 @@ each import of ``pdf_to_text_spark.*``, ``tools.*``, ``perfbench.*`` and
 every relative import statically, function-local imports included.
 
 Two reachability guards follow: every engine module is imported from a
-root, and every top-level function or class of such a module is named
-by the code the roots reach (a test alone does not keep code alive).
+root, and every top-level function, class or module-level name of such
+a module is named by the code the roots reach (a test alone does not
+keep code alive).
 """
 
 from __future__ import annotations
@@ -115,17 +116,6 @@ def test_repo_local_imports_resolve():
 ROOTS = ("pdf_to_text_spark/pipeline.py", "pdf_to_text_spark/run.py",
          "perfbench")
 
-# Engine modules no root reaches that stay on purpose, each with its
-# reason. Anything else unreached is deleted, not added here.
-UNREACHED_OK = {
-    # media codecs: only their tests decode media; the rest go whole
-    # (ROADMAP item 7)
-    "pdf_to_text_spark.kernels.media",
-    # the tests' loader for the generated sf testdata tables
-    "pdf_to_text_spark.sources.catalog",
-}
-
-
 def reachable_modules(root: pathlib.Path) -> set[str]:
     """Repo-local modules reachable by import from ROOTS: each import
     pulls in the named module, its parent packages and, for
@@ -155,19 +145,16 @@ def reachable_modules(root: pathlib.Path) -> set[str]:
 def test_every_engine_module_is_reachable_from_a_root():
     files, _ = _parse_all(ROOT)
     engine = {m for m in files if m.split(".")[0] == "pdf_to_text_spark"}
-    unreached = engine - reachable_modules(ROOT)
-    assert sorted(unreached - UNREACHED_OK) == []
-    # an allowlisted module that a root reaches again leaves the list
-    assert sorted(UNREACHED_OK - unreached) == []
+    assert sorted(engine - reachable_modules(ROOT)) == []
 
 
 # The entry points a deployment calls by name: every public top-level
 # name of these modules.
 ENTRY_MODULES = ("pdf_to_text_spark.pipeline", "pdf_to_text_spark.run")
 
-# Root-reached definitions that only tests name, kept on purpose, each
-# with its reason. Anything else that only tests name is deleted, not
-# added here.
+# Root-reached definitions and module-level names that only tests name,
+# kept on purpose, each with its reason. Anything else that only tests
+# name is deleted, not added here.
 UNNAMED_OK = {
     # the T-table AES's reference: tests compare the fast path against it
     "pdf_to_text_spark.kernels.crypto._crypt_block",
@@ -179,11 +166,15 @@ UNNAMED_OK = {
     "pdf_to_text_spark.operators.text_analysis.token_counts",
     "pdf_to_text_spark.operators.text_analysis.quality_score",
     "pdf_to_text_spark.operators.text_analysis.language_id",
+    # the regex that test_text_analysis checks the decomposed BPE token
+    # count against
+    "pdf_to_text_spark.operators.text_analysis.BPE_TOKEN_RE",
     # the public view of the kernel's shingle rule, which
     # test_minhash_batch pins against its frozen formula
     "pdf_to_text_spark.kernels.textstats.word_shingles",
-    # sources/pages.py is in perfbench's pool digest: editing it re-keys
-    # the pool, so its test-only writer waits for a benchmark change
+    # the test-only parquet writer over pages_df, and the engine's only
+    # name for it: the synthetic generator that tests and the verify
+    # recipe drive
     "pdf_to_text_spark.sources.pages.write_pages",
 }
 
@@ -207,11 +198,26 @@ def _named(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
     return out
 
 
+def _definitions(tree: ast.Module):
+    """(name, statement) for every top-level def/class and every
+    non-dunder target of a top-level assignment."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            yield node.name, node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name) and not (
+                            n.id.startswith("__") and n.id.endswith("__")):
+                        yield n.id, node
+
+
 def unnamed_definitions(root: pathlib.Path) -> set[str]:
-    """'<module>.<name>' for every top-level def/class of a root-reached
-    engine module that no root-reached module and no tools/ module names
-    outside the definition's own body. Public names of ENTRY_MODULES
-    are entry points."""
+    """'<module>.<name>' for every top-level def/class or module-level
+    name of a root-reached engine module that no root-reached module and
+    no tools/ module names outside the defining statement. Public names
+    of ENTRY_MODULES are entry points."""
     files, trees = _parse_all(root)
     reached = reachable_modules(root)
     scope = [m for m in files if m in reached or m.split(".")[0] == "tools"]
@@ -220,16 +226,14 @@ def unnamed_definitions(root: pathlib.Path) -> set[str]:
     for mod in sorted(reached):
         if mod.split(".")[0] != "pdf_to_text_spark":
             continue
-        for node in trees[mod].body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        for name, node in _definitions(trees[mod]):
+            if mod in ENTRY_MODULES and not name.startswith("_"):
                 continue
-            if mod in ENTRY_MODULES and not node.name.startswith("_"):
+            if name in _named(trees[mod], skip=node):
                 continue
-            if node.name in _named(trees[mod], skip=node):
+            if any(name in names_in[m] for m in scope if m != mod):
                 continue
-            if any(node.name in names_in[m] for m in scope if m != mod):
-                continue
-            bad.add(f"{mod}.{node.name}")
+            bad.add(f"{mod}.{name}")
     return bad
 
 

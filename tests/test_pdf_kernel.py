@@ -202,6 +202,25 @@ def test_each_stream_filter_roundtrips(filt):
     assert text == "\n".join(lines) and n == 1
 
 
+@pytest.mark.parametrize("filt, decode", [
+    ("FlateDecode", "_flate_decode"),
+    ("LZWDecode", "_lzw_decode"),
+    ("RunLengthDecode", "_runlength_decode"),
+])
+def test_expanding_filters_stop_at_decoded_stream_cap(monkeypatch, filt, decode):
+    """Each expanding filter decodes a stream of exactly
+    MAX_DECODED_STREAM_BYTES and raises on one that decodes past it."""
+    from tools.make_pdf import STREAM_FILTERS
+
+    cap = 1000
+    monkeypatch.setattr(_pdf, "MAX_DECODED_STREAM_BYTES", cap)
+    encode, dec = STREAM_FILTERS[filt], getattr(_pdf, decode)
+    data = bytes((i * 7 + i // 13) & 0xFF for i in range(cap + 1))
+    assert dec(encode(data[:cap])) == data[:cap]
+    with pytest.raises(PDFParseError, match="exceeds cap"):
+        dec(encode(data))
+
+
 def test_differences_encoding_maps_codes():
     text, _ = extract_pdf_text(FIXTURES["differences_encoding"]())
     assert text == "café señor — ΓBC Δx"
@@ -515,16 +534,13 @@ def test_inline_image_binary_cannot_swallow_show_ops():
 def test_aes_fips197_vectors_both_directions():
     """The block cipher is pinned to FIPS-197 appendix C.1 so the kernel
     and the fixture writer cannot share a hidden cipher bug."""
-    from pdf_to_text_spark.kernels.crypto import (
-        aes128_decrypt_block,
-        aes128_encrypt_block,
-    )
+    from pdf_to_text_spark.kernels.crypto import aes_decrypt_block, aes_encrypt_block
 
     key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     ct = bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")
-    assert aes128_encrypt_block(key, pt) == ct
-    assert aes128_decrypt_block(key, ct) == pt
+    assert aes_encrypt_block(key, pt) == ct
+    assert aes_decrypt_block(key, ct) == pt
 
 
 def test_rc4_known_vectors():

@@ -66,7 +66,7 @@ def test_no_payload_shuffle_before_kernel(pages):
 
 
 def test_filter_pushdown_reaches_scan(spark):
-    from pdf_to_text_spark.sources.catalog import load
+    from conftest import load
 
     sf = "/root/testdata/sf0.001"
     df = load(spark, "orders", sf).where(
@@ -135,7 +135,7 @@ def test_lsh_band_join_is_hash_keyed_not_cartesian(spark):
     """MinHash and n-gram candidate joins must hash-join on their keys —
     a cartesian/BNLJ here is corpus² and would be fatal at scale."""
     from pdf_to_text_spark.operators import dedup
-    from pdf_to_text_spark.sources.catalog import load
+    from conftest import load
 
     docs = load(spark, "documents", "/root/testdata/sf0.001")
     for df in (
@@ -156,7 +156,7 @@ def test_dedup_corpus_is_one_linear_kernel_pass(spark):
     import os
 
     from pdf_to_text_spark.operators import dedup
-    from pdf_to_text_spark.sources.catalog import DEFAULT_SF_DIR, load
+    from conftest import DEFAULT_SF_DIR, load
 
     # the smallest generated table set, beside the default one
     docs = load(spark, "documents", os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001"))
@@ -177,7 +177,7 @@ def test_strip_duplicate_lines_is_one_linear_plan(spark):
     import os
 
     from pdf_to_text_spark.operators import dedup
-    from pdf_to_text_spark.sources.catalog import DEFAULT_SF_DIR, load
+    from conftest import DEFAULT_SF_DIR, load
 
     # the smallest generated table set, beside the default one
     docs = load(spark, "documents", os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001"))
@@ -194,7 +194,7 @@ def test_ngram_jaccard_candidates_path_is_keyed(spark):
     """ngram_jaccard_pairs(candidates=...) — the 100 TB LSH-then-verify
     composition — must stay equi-join-keyed, never all-pairs."""
     from pdf_to_text_spark.operators import dedup
-    from pdf_to_text_spark.sources.catalog import load
+    from conftest import load
 
     docs = load(spark, "documents", "/root/testdata/sf0.001")
     cand = dedup.minhash_candidate_pairs(dedup.minhash_signatures(docs))
