@@ -275,6 +275,8 @@ def _ascii85_decode_strict(compact: bytes) -> bytes:
         v = 0
         for g in group:
             v = v * 85 + g
+        if v > 0xFFFFFFFF:  # as the fast path reports it
+            raise PDFParseError("ASCII85Decode: group overflow")
         out += v.to_bytes(4, "big")[: k - 1]
     return bytes(out)
 
@@ -288,8 +290,6 @@ def _runlength_decode(raw: bytes) -> bytes:
     i = 0
     n = len(raw)
     while i < n:
-        if len(out) > MAX_DECODED_STREAM_BYTES:
-            raise PDFParseError("RunLengthDecode: decoded stream exceeds cap")
         length = raw[i]
         i += 1
         if length == 128:  # EOD
@@ -305,6 +305,9 @@ def _runlength_decode(raw: bytes) -> bytes:
                 raise PDFParseError("RunLengthDecode: repeat run truncated")
             out += bytes([raw[i]]) * (257 - length)
             i += 1
+        # after every run, so a stream with no EOD stops at the cap too
+        if len(out) > MAX_DECODED_STREAM_BYTES:
+            raise PDFParseError("RunLengthDecode: decoded stream exceeds cap")
     return bytes(out)  # missing EOD: tolerate
 
 
@@ -315,6 +318,10 @@ def _apply_predictor(data: bytes, predictor: int, colors: int, bpc: int,
     stream in the wild."""
     if predictor <= 1:
         return data
+    if colors < 1 or bpc < 1 or columns < 1:
+        # a row length of zero or less divides by zero or skips every row
+        raise PDFParseError("predictor: /Colors, /BitsPerComponent and "
+                            "/Columns must be positive")
     bpp = max(1, (colors * bpc) // 8)
     row_len = (columns * colors * bpc + 7) // 8
     if predictor == 2:
