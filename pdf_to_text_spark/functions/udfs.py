@@ -1,13 +1,14 @@
 """Arrow-batched Spark UDFs wrapping the pure-Python kernels.
 
 Design rules (BASELINE.json input_hint: "no per-row Python"):
-  * every UDF is a pandas/Arrow batch function — the JVM↔Python boundary
-    is crossed once per batch, never per row;
-  * extraction is one mapInArrow (extract_arrow_batches): each Arrow
-    batch is read once into Python lists, url/warc_ts/lang pass through
-    as Arrow arrays, and the kernel columns become Arrow arrays with no
-    pandas round trip. extract_batches runs the same row loop over
-    pandas frames for in-process replays;
+  * every engine UDF is a mapInArrow batch function — the JVM↔Python
+    boundary is crossed once per batch, never per row, with no pandas;
+  * extraction (extract_arrow_batches): each Arrow batch is read once
+    into Python lists, url/warc_ts/lang pass through as Arrow arrays, and
+    the kernel columns become Arrow arrays. extract_batches runs the same
+    row loop over pandas frames for in-process replays only;
+  * artifacts (doc_artifacts_batches): one kernels.blocks.doc_artifacts
+    call per document gives its blocks, records, CSV and JSON;
   * extraction yields output in byte-capped slices (UTF-8 bytes of the
     text column) so a batch of megabyte PDFs can't blow the Arrow IPC
     buffer (SURVEY.md §4 "byte-capped batch yielding");
@@ -21,11 +22,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import ARROW_MAX_BATCH_BYTES
-from ..kernels.blocks import doc_artifacts, segment_blocks
+from ..kernels.blocks import doc_artifacts
 from ..kernels.html import HTMLParseFailed, extract_html_text
 from ..kernels.pdf import (
     PDFEncryptedError,
@@ -189,32 +189,45 @@ def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             )
 
 
-# ── segmentation / per-document artifacts ───────────────────────────────────
+# ── per-document artifacts (mapInArrow, one pass over the text) ─────────────
+
+_INTS = ("chunk_id", "block_pos", "record_pos")
+_STRS = ("SucursalName", "EAN", "CantidadVendida", "Importe")
+DOC_ARTIFACTS_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("records", T.ArrayType(T.StructType(
+        [T.StructField(c, T.IntegerType()) for c in _INTS]
+        + [T.StructField(c, T.StringType()) for c in _STRS]))),
+    T.StructField("csv", T.StringType()),
+    T.StructField("json", T.StringType()),
+    T.StructField("blocks", T.ArrayType(T.StructType([
+        T.StructField("block_pos", T.IntegerType()),
+        T.StructField("block", T.StringType()),
+        T.StructField("chunk_id", T.IntegerType())]))),
+])
+
+# DOC_ARTIFACTS_SCHEMA as Arrow (pinned equal to pyspark's to_arrow_schema of it)
+DOC_ARTIFACTS_ARROW_SCHEMA = pa.schema([
+    ("url", pa.string()),
+    ("records", pa.list_(pa.struct(
+        [(c, pa.int32()) for c in _INTS] + [(c, pa.string()) for c in _STRS]))),
+    ("csv", pa.string()),
+    ("json", pa.string()),
+    ("blocks", pa.list_(pa.struct(
+        [("block_pos", pa.int32()), ("block", pa.string()), ("chunk_id", pa.int32())]))),
+])
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def segment_blocks_udf(texts: pd.Series) -> pd.Series:
-    """extracted_text → ordered Sucursal block array (src/main.ts:70-109)."""
-    return texts.map(lambda t: segment_blocks(t) if t else [])
-
-
-DOC_ARTIFACTS_SCHEMA = (
-    "url string, records array<struct<chunk_id int, block_pos int, record_pos int, "
-    "SucursalName string, EAN string, CantidadVendida string, Importe string>>, "
-    "csv string, json string"
-)
-
-
-def doc_artifacts_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: (url, extracted_text) rows → one
-    (url, records, csv, json) row each (kernels.blocks.doc_artifacts)."""
+def doc_artifacts_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel: (url, extracted_text) batches → one
+    (url, records, csv, json, blocks) row per row
+    (kernels.blocks.doc_artifacts). url passes through as the input
+    column."""
+    fields = list(DOC_ARTIFACTS_ARROW_SCHEMA)[1:]
     for b in batches:
-        out = [doc_artifacts(t) for t in b["extracted_text"].tolist()]
-        yield pd.DataFrame(
-            {
-                "url": b["url"],
-                "records": [o[0] for o in out],
-                "csv": [o[1] for o in out],
-                "json": [o[2] for o in out],
-            }
+        out = [doc_artifacts(t) for t in b.column("extracted_text").to_pylist()]
+        yield pa.RecordBatch.from_arrays(
+            [b.column("url"),
+             *(pa.array([o[i] for o in out], f.type) for i, f in enumerate(fields))],
+            schema=DOC_ARTIFACTS_ARROW_SCHEMA,
         )

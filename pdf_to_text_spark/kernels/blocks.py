@@ -12,10 +12,10 @@ Pure-Python re-statements of the reference's downstream dataflow:
                        `.toFixed(2)`, quotes NOT escaped, no trailing newline
   * records_to_pretty_json — JSON.stringify(data, null, 2) equivalent
                        (src/main.ts:242)
-  * doc_artifacts    — one upload's records, CSV and JSON in one pass
-                       (src/main.ts:133-263), records tagged with their
-                       chunk of 10 blocks (src/main.ts:116-124,166); the
-                       only CSV/JSON serializer the Spark artifacts use
+  * doc_artifacts    — one upload's blocks, records, CSV and JSON in one
+                       pass (src/main.ts:133-263), tagged with their chunk
+                       of 10 blocks (src/main.ts:116-124,166); the only
+                       segmenter and serializer the Spark artifacts use
 """
 
 from __future__ import annotations
@@ -207,26 +207,25 @@ def records_to_pretty_json(records: list[dict]) -> str:
     return json.dumps(records, indent=2, ensure_ascii=False, separators=(",", ": "))
 
 
-def doc_artifacts(text: str | None) -> tuple[list[dict], str, str]:
-    """One extracted document → (records, csv, json), the reference's
-    per-upload artifacts in one pass (src/main.ts:133-263).
+def doc_artifacts(text: str | None) -> tuple[list[dict], str, str, list[tuple]]:
+    """One extracted document → (records, csv, json, blocks), the
+    reference's per-upload artifacts in one pass (src/main.ts:133-263).
 
-    records: parse_records over segment_blocks, each record tagged with
-    its chunk_id (block_pos // 10, src/main.ts:166), block_pos and
-    record_pos. csv/json serialize the untagged records in that order,
-    so a document without records gets the header-only CSV and '[]'.
+    blocks: segment_blocks as (block_pos, block, chunk_id), chunk_id =
+    block_pos // 10 (src/main.ts:116-124,166) — the one place the chunk
+    rule lives. records: parse_records over those blocks, each record
+    tagged with its block's chunk_id, block_pos and record_pos. csv/json
+    serialize the untagged records in that order, so a document without
+    records gets the header-only CSV and '[]'.
     """
+    blocks: list[tuple] = []
     tagged: list[dict] = []
     plain: list[dict] = []
     for block_pos, block in enumerate(segment_blocks(text) if text else []):
+        chunk_id = block_pos // MAX_BLOCKS_PER_CHUNK
+        blocks.append((block_pos, block, chunk_id))
         for record_pos, rec in enumerate(parse_records(block)):
             plain.append(rec)
-            tagged.append(
-                {
-                    "chunk_id": block_pos // MAX_BLOCKS_PER_CHUNK,
-                    "block_pos": block_pos,
-                    "record_pos": record_pos,
-                    **rec,
-                }
-            )
-    return tagged, records_to_csv(plain), records_to_pretty_json(plain)
+            tagged.append({"chunk_id": chunk_id, "block_pos": block_pos,
+                           "record_pos": record_pos, **rec})
+    return tagged, records_to_csv(plain), records_to_pretty_json(plain), blocks

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators.extraction import metrics_rollup, run_extraction
-from .operators.records import blocks_df, doc_artifacts_df, with_chunk_id
+from .operators.records import blocks_df, doc_artifacts_df
 
 
 def run_reference_pipeline(pages: DataFrame, *, dedup: bool = True) -> dict[str, DataFrame]:
@@ -45,14 +45,15 @@ def artifacts_from_extracted(extracted: DataFrame) -> dict[str, DataFrame]:
     frame — pass a re-read of a written extracted/ table so the PDF/HTML
     kernel runs once, not once per sink.
 
-    records, csv_docs and json_docs are projections of one per-document
-    pass (doc_artifacts_df): each sink re-runs that one Python pass over
-    the text — no shuffle, join or cache. csv_docs has one row per
-    extracted row (header-only when it parsed no records, main.ts:55);
-    json_docs only rows with at least one record."""
+    blocks, records, csv_docs and json_docs are JVM projections of one
+    per-document mapInArrow pass (doc_artifacts_df): each sink re-runs
+    that one Python pass over the text — no second Python stage,
+    shuffle, join or cache. csv_docs has one row per extracted row
+    (header-only when it parsed no records, main.ts:55); json_docs only
+    rows with at least one record."""
     docs = doc_artifacts_df(extracted)
     return {
-        "blocks": with_chunk_id(blocks_df(extracted)),
+        "blocks": blocks_df(extracted),
         "records": docs.select("url", F.inline("records")),
         "csv_docs": docs.select("url", "csv"),
         "json_docs": docs.where(F.size("records") > 0).select("url", "json"),

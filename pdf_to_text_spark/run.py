@@ -27,35 +27,28 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = build_spark("pdf_to_text_spark.run", master=args.master)
     try:
+        from .pipeline import artifacts_from_extracted
+
         pages = spark.read.parquet(args.input)
         if args.resume:
-            from .pipeline import artifacts_from_extracted
             from .plans.checkpoint import run_resumable_extraction
 
             mt = run_resumable_extraction(
                 spark, pages, f"{args.output}/extracted",
                 dedup=not args.no_dedup,  # r5 review: was silently ignored
             )
-            # SAME five-artifact contract as the non-resume branch (r6
-            # review: --resume used to stop at extracted+metrics, so a
-            # crash-then-resume run silently never produced records/
-            # csv_docs/json_docs). metrics/ keeps one schema across both
-            # modes (metrics_rollup); the snapshot-stamped lineage rows
-            # go to metrics_lineage/ — resume's extra artifact, additive.
-            out = artifacts_from_extracted(mt.read(spark))
-            for name in ("records", "csv_docs", "json_docs", "metrics"):
-                out[name].write.mode("overwrite").parquet(f"{args.output}/{name}")
+            extracted = mt.read(spark)
+            # the snapshot-stamped lineage rows: resume's extra artifact
             mt.metrics(spark).write.mode("overwrite").parquet(
                 f"{args.output}/metrics_lineage"
             )
             # doc count from the manifests already parsed in-process — a
             # .count() here re-scanned every committed file for one log
             # line (r6 review)
-            n = sum(m["docs"] for s in mt.snapshots() for m in s["metrics"])
-            print(f"extracted (resumable): {n} docs, "
-                  f"{len(mt.snapshots())} snapshots; wrote extracted/"
-                  "records/csv_docs/json_docs/metrics/metrics_lineage "
-                  f"under {args.output}", file=sys.stderr)
+            snaps = mt.snapshots()
+            n = sum(m["docs"] for s in snaps for m in s["metrics"])
+            done = (f"extracted (resumable): {n} docs, {len(snaps)} snapshots; "
+                    "wrote extracted/records/csv_docs/json_docs/metrics/metrics_lineage")
         else:
             # write extracted/ FIRST and re-read it: every downstream
             # artifact shares the extraction lineage, and the four lazy
@@ -63,17 +56,19 @@ def main(argv: list[str] | None = None) -> int:
             # cost — once per write. One kernel pass, then cheap
             # derivations from columnar parquet (r5 review).
             from .operators.extraction import run_extraction
-            from .pipeline import artifacts_from_extracted
 
             run_extraction(pages, dedup=not args.no_dedup).write.mode(
                 "overwrite"
             ).parquet(f"{args.output}/extracted")
             extracted = spark.read.parquet(f"{args.output}/extracted")
-            out = artifacts_from_extracted(extracted)
-            for name in ("records", "csv_docs", "json_docs", "metrics"):
-                out[name].write.mode("overwrite").parquet(f"{args.output}/{name}")
-            print("wrote extracted/records/csv_docs/json_docs/metrics "
-                  f"under {args.output}", file=sys.stderr)
+            done = "wrote extracted/records/csv_docs/json_docs/metrics"
+        # the SAME five-artifact contract in both modes: one write path,
+        # so --resume cannot stop at extracted+metrics; metrics/ keeps
+        # one schema across both (metrics_rollup)
+        out = artifacts_from_extracted(extracted)
+        for name in ("records", "csv_docs", "json_docs", "metrics"):
+            out[name].write.mode("overwrite").parquet(f"{args.output}/{name}")
+        print(f"{done} under {args.output}", file=sys.stderr)
     finally:
         spark.stop()
     return 0

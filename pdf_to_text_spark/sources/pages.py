@@ -242,7 +242,7 @@ def pages_df(spark, n_rows: int, num_partitions: int | None = None):
             # ids arrive consecutive from spark.range, so at most one
             # ~1 MB mega row (every MEGA_EVERY-th id) lands per slice.
             # A denser mega cadence or non-consecutive id source would
-            # need true byte accounting like udfs.extract_batches
+            # need true byte accounting like udfs._capped
             step = 64
             for s in range(0, len(ids), step):
                 yield build_pages_pdf(ids[s : s + step])

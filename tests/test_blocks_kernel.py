@@ -111,7 +111,7 @@ def _doc_with_blocks(sales_per_block: list[int]) -> str:
 
 def test_chunk_boundaries():
     for n, want in [(0, []), (1, [1]), (9, [9]), (10, [10]), (11, [10, 1]), (25, [10, 10, 5])]:
-        records, _, _ = doc_artifacts(_doc_with_blocks([1] * n))
+        records, _, _, _ = doc_artifacts(_doc_with_blocks([1] * n))
         sizes: dict[int, int] = {}
         for r in records:
             sizes[r["chunk_id"]] = sizes.get(r["chunk_id"], 0) + 1
@@ -122,7 +122,11 @@ def test_chunk_boundaries():
 @settings(max_examples=100, deadline=None)
 @given(st.lists(st.integers(min_value=0, max_value=3), max_size=40))
 def test_chunk_property(sales_per_block):
-    records, csv, _ = doc_artifacts(_doc_with_blocks(sales_per_block))
+    text = _doc_with_blocks(sales_per_block)
+    records, csv, _, blocks = doc_artifacts(text)
+    # blocks: segment_blocks in order, tagged with the same chunk rule
+    assert [b for _, b, _ in blocks] == segment_blocks(text)
+    assert [(p, c) for p, _, c in blocks] == [(p, p // 10) for p in range(len(sales_per_block))]
     assert [(r["block_pos"], r["record_pos"]) for r in records] == [
         (b, j) for b, n in enumerate(sales_per_block) for j in range(n)
     ]
@@ -325,7 +329,7 @@ def test_doc_artifacts_tags_records_and_serializes_once():
         f"Sucursal {i}\nEAN {i} cantidad {i} importe 1\nEAN 0 cantidad 0 importe 0"
         for i in range(12)
     )
-    recs, csv, js = doc_artifacts(text)
+    recs, csv, js, _ = doc_artifacts(text)
     plain = [r for b in segment_blocks(text) for r in parse_records(b)]
     assert [(r["chunk_id"], r["block_pos"], r["record_pos"]) for r in recs] == [
         (b // 10, b, p) for b in range(12) for p in range(2)
@@ -333,4 +337,4 @@ def test_doc_artifacts_tags_records_and_serializes_once():
     assert [{k: r[k] for k in plain[0]} for r in recs] == plain
     assert csv == records_to_csv(plain) and js == records_to_pretty_json(plain)
     for empty in (None, "", "no sucursal here"):
-        assert doc_artifacts(empty) == ([], records_to_csv([]), "[]")
+        assert doc_artifacts(empty) == ([], records_to_csv([]), "[]", [])

@@ -42,6 +42,62 @@ def test_kill_and_resume_no_duplicates(spark, pages, tmp_path):
     assert out.count() == want
 
 
+def _assert_resume_commits_every_url_once(spark, pages, table):
+    mt = run_resumable_extraction(spark, pages, table, buckets_per_commit=8)
+    out = mt.read(spark)
+    dupes = out.groupBy("url").count().where(F.col("count") > 1).count()
+    assert dupes == 0
+    want = {r["url"] for r in pages.select("url").distinct().collect()}
+    assert {r["url"] for r in out.select("url").collect()} == want
+    assert out.count() == len(want)
+
+
+def test_crash_after_wave_files_before_commit(spark, pages, tmp_path, monkeypatch):
+    """Wave 2's files are written, then the job dies before its commit:
+    the files stay orphaned and the resume commits every url once."""
+    from pdf_to_text_spark.plans import checkpoint
+
+    write_wave, waves = checkpoint._write_wave, []
+
+    def write_then_crash(extracted, dest):
+        files = write_wave(extracted, dest)
+        waves.append(files)
+        if len(waves) == 2:
+            raise RuntimeError("crash after writing wave 2")
+        return files
+
+    table = str(tmp_path / "extracted")
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "_write_wave", write_then_crash)
+        with pytest.raises(RuntimeError, match="after writing wave 2"):
+            run_resumable_extraction(spark, pages, table, buckets_per_commit=8)
+    assert waves[1] and len(ManifestTable(table).snapshots()) == 1
+    _assert_resume_commits_every_url_once(spark, pages, table)
+
+
+def test_crash_after_manifest_link_before_commit_returns(
+    spark, pages, tmp_path, monkeypatch
+):
+    """Wave 2's manifest is linked into place, then the job dies before
+    commit returns: the resume treats wave 2 as committed and commits
+    every url once."""
+    commit, calls = ManifestTable.commit, []
+
+    def commit_then_crash(self, *args, **kwargs):
+        calls.append(commit(self, *args, **kwargs))
+        if len(calls) == 2:
+            raise RuntimeError("crash after linking manifest 2")
+        return calls[-1]
+
+    table = str(tmp_path / "extracted")
+    with monkeypatch.context() as m:
+        m.setattr(ManifestTable, "commit", commit_then_crash)
+        with pytest.raises(RuntimeError, match="after linking manifest 2"):
+            run_resumable_extraction(spark, pages, table, buckets_per_commit=8)
+    assert len(ManifestTable(table).snapshots()) == 2
+    _assert_resume_commits_every_url_once(spark, pages, table)
+
+
 def test_orphan_files_invisible(spark, pages, tmp_path):
     """Snapshot isolation: uncommitted attempt files must not be read."""
     table = str(tmp_path / "extracted")

@@ -23,7 +23,7 @@ from pdf_to_text_spark.operators.extraction import (
     metrics_rollup,
     run_extraction,
 )
-from pdf_to_text_spark.operators.records import blocks_df, with_chunk_id
+from pdf_to_text_spark.operators.records import blocks_df
 from pdf_to_text_spark.pipeline import artifacts_from_extracted
 from pdf_to_text_spark.sources.pages import PAGES_SCHEMA, build_pages_pdf, pages_df
 from tools.oracle_extract import extract_any
@@ -144,7 +144,7 @@ def test_blocks_chunks_records_csv_match_kernel(spark):
     assert len(want_blocks) == 26  # 25 terminated + 1 trailing unterminated
 
     # chunk ids: block_pos // 10, so 26 blocks → 10/10/6
-    bc = with_chunk_id(blocks).collect()
+    bc = blocks.collect()
     assert all(r["chunk_id"] == r["block_pos"] // 10 for r in bc)
     assert sorted(r["chunk_id"] for r in bc) == [0] * 10 + [1] * 10 + [2] * 6
 
@@ -199,7 +199,7 @@ def test_doc_artifacts_pass_matches_kernel_per_row(spark):
         assert set(csvs) == set(texts)
         n_with = 0
         for url, text in texts.items():
-            want_recs, want_csv, want_json = doc_artifacts(text)
+            want_recs, want_csv, want_json, _ = doc_artifacts(text)
             got_recs = sorted(
                 recs.get(url, []),
                 key=lambda d: (d["chunk_id"], d["block_pos"], d["record_pos"]),
@@ -222,7 +222,7 @@ def test_null_url_document_keeps_its_csv_rows(spark):
     same ones its json_docs row holds — not a header-only CSV."""
     text = "Sucursal Sur\nEAN 779 cantidad 3 importe 4.5"
     art = artifacts_from_extracted(_text_rows(spark, [(None, text)]))
-    want_recs, want_csv, want_json = doc_artifacts(text)
+    want_recs, want_csv, want_json, _ = doc_artifacts(text)
     assert len(want_recs) == 1
     [csv_row] = art["csv_docs"].collect()
     [json_row] = art["json_docs"].collect()

@@ -5,7 +5,7 @@ These tests pin the plan shapes that matter at scale:
   * no Exchange (shuffle) of raw payloads before the extraction kernel;
   * small dims broadcast in the join chain;
   * filters are pushed into the parquet scan;
-  * the chunk operator needs no window Exchange (posexplode ordinals).
+  * the chunk operator needs no window Exchange (kernel-tagged ordinals).
 Plans regress silently; grepping .explain output is how we notice.
 """
 
@@ -80,26 +80,27 @@ def test_filter_pushdown_reaches_scan(spark):
 
 def test_chunk_assembly_single_aggregate_no_window(spark):
     """Chunk ids must be explode → project: no Window operator and no
-    aggregate (the ordinal comes from posexplode for free)."""
+    aggregate (the kernel tags each block with its ordinal and chunk)."""
     import datetime as dt
 
     from pdf_to_text_spark.operators.extraction import run_extraction
-    from pdf_to_text_spark.operators.records import blocks_df, with_chunk_id
+    from pdf_to_text_spark.operators.records import blocks_df
     from pdf_to_text_spark.sources.pages import PAGES_SCHEMA
 
     df = spark.createDataFrame(
         [("u", dt.datetime(2024, 1, 1), b"%PDF-x", None, "en")], schema=PAGES_SCHEMA
     )
-    plan = _plan(with_chunk_id(blocks_df(run_extraction(df, dedup=False))))
+    plan = _plan(blocks_df(run_extraction(df, dedup=False)))
     assert "Window" not in plan and "Aggregate" not in plan and "Exchange" not in plan
-    assert "Generate posexplode" in plan or "posexplode" in plan
+    # the formatted plan names the node "Generate" and its generator below
+    assert re.search(r"\) Generate[^\n]*\nInput[^\n]*\nArguments: inline\(blocks", plan), plan
 
 
 def test_artifact_sinks_are_one_python_pass_each(spark, pages, tmp_path):
-    """records, csv_docs and json_docs over a parquet-read extracted table
-    are each scan → ONE MapInPandas → project/generate/filter: no other
-    Python eval, no Exchange, join or cached relation; building the three
-    frames launches no Spark job."""
+    """blocks, records, csv_docs and json_docs over a parquet-read
+    extracted table are each scan → ONE MapInArrow → project/generate/
+    filter: no pandas node or other Python eval, no Exchange, join or
+    cached relation; building the four frames launches no Spark job."""
     from pdf_to_text_spark.operators.extraction import run_extraction
     from pdf_to_text_spark.pipeline import artifacts_from_extracted
 
@@ -116,14 +117,15 @@ def test_artifact_sinks_are_one_python_pass_each(spark, pages, tmp_path):
     try:
         sc.setJobGroup("artifacts", "build the artifact frames")
         art = artifacts_from_extracted(extracted)
-        sinks = [art[k] for k in ("records", "csv_docs", "json_docs")]
+        sinks = [art[k] for k in ("blocks", "records", "csv_docs", "json_docs")]
         assert jobs("artifacts") == 0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     for df in sinks:
         plan = _plan(df)
         tree = plan.split("\n\n", 1)[0]  # the operator tree, one line per node
-        assert len(re.findall(r"\bMapInPandas\b", tree)) == 1, plan
+        assert len(re.findall(r"\bMapInArrow\b", tree)) == 1, plan
+        assert "MapInPandas" not in plan, plan
         assert not re.search(r"ArrowEvalPython|BatchEvalPython", plan), plan
         assert "Exchange" not in plan, plan
         assert "Join" not in tree, plan

@@ -66,3 +66,19 @@ def test_cli_resume_mode_writes_same_contract_plus_lineage(cli_env, spark):
     # resume rerun is a no-op that still leaves all artifacts in place
     assert main(["--input", inp, "--output", out, "--resume"]) == 0
     assert spark.read.parquet(f"{out}/extracted/data/*/").count() > 0
+
+
+def test_cli_modes_write_the_same_artifact_rows(cli_env, spark):
+    """Both modes feed one artifact-write path: the records, csv_docs and
+    json_docs rows they write are the same, compared as sorted rows."""
+    from pdf_to_text_spark.run import main
+
+    inp, out = cli_env
+    assert main(["--input", inp, "--output", f"{out}/default"]) == 0
+    assert main(["--input", inp, "--output", f"{out}/resume", "--resume"]) == 0
+    for name in ("records", "csv_docs", "json_docs"):
+        default, resume = (
+            sorted(spark.read.parquet(f"{out}/{mode}/{name}").collect(), key=repr)
+            for mode in ("default", "resume")
+        )
+        assert default and default == resume, name

@@ -124,11 +124,13 @@ def test_nothing_patched_on_cpython_3_13(monkeypatch):
 def test_worker_rereads_no_zip_directory_after_an_engine_task(spark):
     from pyspark.sql import functions as F
 
-    from pdf_to_text_spark.functions.udfs import segment_blocks_udf
+    from pdf_to_text_spark.operators.records import doc_artifacts_df
 
-    # one engine pandas_udf task per partition: each worker it lands on
+    # one engine mapInArrow task per partition: each worker it lands on
     # imports the engine, which installs the replacement
-    spark.range(0, 4, 1, 4).select(segment_blocks_udf(F.lit("x"))).collect()
+    texts = spark.range(0, 4, 1, 4).select(
+        F.col("id").cast("string").alias("url"), F.lit("x").alias("extracted_text"))
+    doc_artifacts_df(texts).collect()
 
     def probe(batches):
         import importlib
