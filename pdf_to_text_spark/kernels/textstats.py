@@ -4,18 +4,22 @@ Pure Python + numpy, deterministic (fixed hash seeds), used inside
 Arrow-batched Spark UDFs. The Spark-side operators live in
 pdf_to_text_spark.operators.dedup; where the math is SQL-expressible it
 is ALSO written with built-in functions so the hot path stays JVM-side —
-these kernels back only the genuinely non-SQL part (MinHash signatures).
+these kernels back only the genuinely non-SQL part (MinHash signatures),
+plus the exact-dup fingerprint taken from the words they normalize anyway.
 
 MinHash is one batch kernel, ``minhash_batch``: per batch of texts it
-hashes each doc's distinct shingles once, runs the n_perm universal
-hashes as row-chunked numpy matrix ops and hashes the LSH bands, so the
-Python work per shingle is one blake2b digest. ``minhash_signature`` and
-``minhash_bands`` are its one-row views; their values are the ones the
-per-shingle formula (documented on ``minhash_batch``) has always given.
+normalizes each text once into words, which give both the exact-dup
+fingerprint and the shingles; it hashes each doc's distinct shingles
+once, runs the n_perm universal hashes as row-chunked numpy matrix ops
+and hashes the LSH bands, so the Python work per shingle is one blake2b
+digest. ``minhash_signature`` and ``minhash_bands`` are its one-row
+views; their values are the ones the per-shingle formula (documented on
+``minhash_batch``) has always given.
 """
 
 from __future__ import annotations
 
+import collections
 import hashlib
 import itertools
 import re
@@ -48,7 +52,7 @@ def normalize_text(text: str) -> str:
 
 def word_shingles(text: str, k: int = 5) -> set[bytes]:
     """Set of k-word shingles (utf-8 bytes) over the normalized text."""
-    return set(_shingles(text, k))
+    return set(_shingles(_words(text), k))
 
 
 def _hasher(seed: int):
@@ -88,35 +92,52 @@ def _mod_p(x: np.ndarray) -> np.ndarray:
     return x
 
 
-def _shingles(text: str | None, k: int) -> list[bytes]:
-    """The k-word shingles of normalize_text(text) as utf-8 bytes, repeats
-    kept (a text of 1..k-1 words is one shingle). ``lower()`` then the
-    ASCII byte map splits exactly where normalize_text's regex does."""
-    words = (text or "").lower().encode("ascii", "replace").translate(_ASCII_FOLD).split()
+def _words(text: str | None) -> list[bytes]:
+    """normalize_text(text).split() as ASCII bytes; None reads as "".
+    ``lower()`` then the ASCII byte map splits exactly where
+    normalize_text's regex does, so b" ".join(words) is
+    normalize_text(text).encode()."""
+    return (text or "").lower().encode("ascii", "replace").translate(_ASCII_FOLD).split()
+
+
+def _shingles(words: list[bytes], k: int) -> list[bytes]:
+    """The k-word shingles of a _words list, repeats kept (1..k-1 words
+    are one shingle)."""
     if len(words) <= k:
         return [b" ".join(words)] if words else []
     return list(map(b" ".join, zip(*[words[i:] for i in range(k)])))
 
 
-def _signatures(texts, n_perm: int, k: int) -> np.ndarray:
-    """uint64[len(texts), n_perm]: every text's MinHash signature (see
-    minhash_batch). The batch's distinct-per-doc shingles form one flat
-    run of base hashes, doc after doc; each chunk of it is hashed n_perm
-    ways and min-reduced per doc segment."""
+def _digests(messages: list[bytes], seed: int) -> bytes:
+    """The _hasher(seed) digests of every message, concatenated. The
+    copy, update and digest calls run as C-level maps over _CHUNK_ROWS
+    hashers (~0.5 MB) at a time, so no Python function runs per message:
+    over the shingles of one 232-doc batch that measured 1.3-2x faster
+    than a per-message function (4-vCPU Xeon VM, CPython 3.11)."""
+    h = _hasher(seed)
+    cls = type(h)
+    out = []
+    for c0 in range(0, len(messages), _CHUNK_ROWS):
+        part = messages[c0 : c0 + _CHUNK_ROWS]
+        hashers = list(map(cls.copy, itertools.repeat(h, len(part))))
+        collections.deque(map(cls.update, hashers, part), maxlen=0)
+        out.append(b"".join(map(cls.digest, hashers)))
+    return b"".join(out)
+
+
+def _signatures(word_lists, n_perm: int, k: int) -> np.ndarray:
+    """uint64[len(word_lists), n_perm]: every text's MinHash signature,
+    from its _words list (see minhash_batch). The batch's
+    distinct-per-doc shingles form one flat run of base hashes, doc after
+    doc; each chunk of it is hashed n_perm ways and min-reduced per doc
+    segment."""
     if n_perm not in _PERM_CACHE:
         _PERM_CACHE[n_perm] = _perm_params(n_perm)
     a, b = _PERM_CACHE[n_perm]
-    distinct = [set(_shingles(t, k)) for t in texts]
+    distinct = [set(_shingles(w, k)) for w in word_lists]
     out = np.full((len(distinct), n_perm), _EMPTY, dtype=np.uint64)
-    new = _hasher(0).copy
-
-    def digest(s: bytes) -> bytes:
-        h = new()
-        h.update(s)
-        return h.digest()
-
     base = _mod_p(np.frombuffer(
-        b"".join(map(digest, itertools.chain.from_iterable(distinct))), "<u8").copy())
+        _digests(list(itertools.chain.from_iterable(distinct)), 0), "<u8").copy())
     owner = np.repeat(np.arange(len(distinct)), [len(d) for d in distinct])
     for c0 in range(0, len(base), _CHUNK_ROWS):
         # perm-major (n_perm × rows): each doc's rows are one contiguous run
@@ -135,7 +156,7 @@ def _rows_per_band(n_perm: int, n_bands: int) -> int:
     # bucket key, degrading recall below the banding threshold math
     if n_perm % n_bands:
         raise ValueError(
-            f"minhash_bands: n_perm={n_perm} is not a multiple of "
+            f"n_perm={n_perm} is not a multiple of "
             f"n_bands={n_bands}; {n_perm % n_bands} trailing permutations "
             f"would never influence any bucket"
         )
@@ -162,9 +183,14 @@ def _band_keys(sigs: np.ndarray, n_bands: int) -> np.ndarray:
 
 def minhash_batch(
     texts, n_perm: int = _N_PERM_DEFAULT, n_bands: int = 16, k: int = 5
-) -> tuple[np.ndarray, np.ndarray]:
-    """MinHash signatures and LSH band keys for a batch of texts →
-    (uint64[n, n_perm], int64[n, n_bands]); None reads as "".
+) -> tuple[np.ndarray, np.ndarray, list[str]]:
+    """MinHash signatures, LSH band keys and exact-dup fingerprints for a
+    batch of texts → (uint64[n, n_perm], int64[n, n_bands], n hex
+    strings); None reads as "".
+
+    Fingerprint: md5(normalize_text(t)).hexdigest(), taken from the same
+    normalized words as the shingles — the value operators/dedup's
+    fingerprint_col computes in the JVM.
 
     Shingles: the k-word windows of normalize_text(t) (a text of fewer
     words is one shingle), each hashed once per doc to
@@ -187,14 +213,16 @@ def minhash_batch(
     bands, or it raises ValueError before any hashing.
     """
     _rows_per_band(n_perm, n_bands)
-    sigs = _signatures(texts, n_perm, k)
-    return sigs, _band_keys(sigs, n_bands)
+    word_lists = [_words(t) for t in texts]
+    sigs = _signatures(word_lists, n_perm, k)
+    fingerprints = [hashlib.md5(b" ".join(w)).hexdigest() for w in word_lists]
+    return sigs, _band_keys(sigs, n_bands), fingerprints
 
 
 def minhash_signature(text: str, n_perm: int = _N_PERM_DEFAULT, k: int = 5) -> np.ndarray:
     """uint64[n_perm] MinHash signature of one text: row 0 of
     minhash_batch([text])'s signatures."""
-    return _signatures([text], n_perm, k)[0]
+    return _signatures([_words(text)], n_perm, k)[0]
 
 
 def minhash_bands(sig: np.ndarray, n_bands: int = 16) -> list[int]:

@@ -3,12 +3,13 @@
 The curation stage runs two of them, each one lazy, linear plan:
 
   * dedup_corpus          — the keep-list: exact dedup (md5 of the
-                            normalized text) plus MinHash-LSH near-dup
-                            (kernels.textstats.minhash_batch, one call
-                            per Arrow batch). One read of the text, one
-                            kernel pass, three keyed shuffles, no persist
-                            and no join. It folds each LSH bucket in place
-                            instead of forming the band self-join's pairs.
+                            normalized text) plus MinHash-LSH near-dup,
+                            both keyed by kernels.textstats.minhash_batch
+                            (one call per Arrow batch). One read of the
+                            text, one kernel pass, three keyed shuffles,
+                            no persist and no join. It folds each LSH
+                            bucket in place instead of forming the band
+                            self-join's pairs.
   * strip_duplicate_lines — C4 line dedup: a line of ≥ min_words words
                             keeps only its first corpus occurrence. Two
                             keyed shuffles, no persist, window or join.
@@ -19,10 +20,12 @@ band self-join, hot buckets capped by _cap_buckets and counted by
 _bucket_stats) → _verify_candidate_pairs, composed by
 minhash_dedup_pairs; and ngram_jaccard_pairs, exact word-n-gram Jaccard
 via a shingle self-join, the exact reference for the MinHash estimate.
-Both verify paths use the one signature estimate, _sig_estimate.
+Both verify paths format the one signature estimate, _SIG_ESTIMATE.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,11 +36,13 @@ from pyspark.sql.window import Window
 
 
 def fingerprint_col(text_col: str = "text"):
-    """md5(normalized text) — THE exact-dedup key. One definition shared
-    by every operator (and mirrored by kernels/textstats.normalize_text
-    + the SQL oracles), so the normalization can never drift between
-    copies. NULL text normalizes like '' (a doc must never silently
-    vanish from a keep-list because extraction failed)."""
+    """md5(normalized text), the exact-dedup key, as a JVM expression:
+    the join-form references key on it. dedup_corpus takes the same key
+    from its kernel pass (kernels/textstats.minhash_batch); the two are
+    pinned equal, and equal to md5(normalize_text(t)), by
+    tests/test_dedup_similarity.py. NULL text normalizes like '' (a doc
+    must never silently vanish from a keep-list because extraction
+    failed)."""
     norm = F.trim(
         F.regexp_replace(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"[^0-9a-z]+", " ")
     )
@@ -70,66 +75,70 @@ def dedup_exact(documents: DataFrame) -> DataFrame:
 
 # ── MinHash + LSH ────────────────────────────────────────────────────────────
 
-def _minhash_batches(n_perm: int, n_bands: int, extra: tuple[str, ...] = ()):
-    """The one mapInArrow body for MinHash: (doc_id, *extra, text)
-    batches → (doc_id, *extra, sig, bands), one textstats.minhash_batch
-    call per Arrow batch. doc_id is widened to long (as the old pandas
-    path silently did), `extra` columns pass through as they are. Both
-    matrices become Arrow ListArrays via offsets over their flat buffer —
-    no per-row Python lists. sig is stored signed: x − 2^63 == the top
-    bit flipped, reinterpreted, so the bits are the kernel's."""
-    keep = ("doc_id", *extra)
+def _minhash_arrow(batches, n_perm: int, n_bands: int):
+    """The one mapInArrow body for MinHash: (doc_id, text) batches →
+    (doc_id, fingerprint, sig, bands), one textstats.minhash_batch call
+    per Arrow batch. doc_id is widened to long (as the old pandas path
+    silently did). Both matrices become Arrow ListArrays via offsets over
+    their flat buffer — no per-row Python lists. sig is stored signed:
+    x − 2^63 == the top bit flipped, reinterpreted, so the bits are the
+    kernel's. Module-level, so a functools.partial of it pickles by
+    reference."""
+    import numpy as np
+    import pyarrow as pa
 
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
+    from ..kernels.textstats import minhash_batch
 
-        from ..kernels.textstats import minhash_batch
+    def list_arr(mat):
+        n, width = mat.shape
+        offs = pa.array(np.arange(0, (n + 1) * width, width, dtype=np.int32))
+        return pa.ListArray.from_arrays(offs, pa.array(mat.reshape(-1), type=pa.int64()))
 
-        def list_arr(mat):
-            n, width = mat.shape
-            offs = pa.array(np.arange(0, (n + 1) * width, width, dtype=np.int32))
-            return pa.ListArray.from_arrays(offs, pa.array(mat.reshape(-1), type=pa.int64()))
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        sigs, bands, fps = minhash_batch(
+            rb.column(rb.schema.get_field_index("text")).to_pylist(), n_perm, n_bands
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                rb.column(rb.schema.get_field_index("doc_id")).cast(pa.int64()),
+                pa.array(fps, pa.string()),
+                list_arr((sigs ^ np.uint64(1 << 63)).view(np.int64)),
+                list_arr(bands),
+            ],
+            ["doc_id", "fingerprint", "sig", "bands"],
+        )
 
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            sigs, bands = minhash_batch(
-                rb.column(rb.schema.get_field_index("text")).to_pylist(), n_perm, n_bands
-            )
-            cols = [rb.column(rb.schema.get_field_index(c)) for c in keep]
-            cols[0] = cols[0].cast(pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [*cols, list_arr((sigs ^ np.uint64(1 << 63)).view(np.int64)), list_arr(bands)],
-                [*keep, "sig", "bands"],
-            )
 
-    return gen
+def _minhash(documents: DataFrame, n_perm: int, n_bands: int) -> DataFrame:
+    """(doc_id, text) → (doc_id, fingerprint, sig, bands): the one kernel
+    pass of dedup_corpus and minhash_signatures."""
+    return documents.select("doc_id", "text").mapInArrow(
+        functools.partial(_minhash_arrow, n_perm=n_perm, n_bands=n_bands),
+        schema="doc_id long, fingerprint string, sig array<long>, bands array<long>",
+    )
 
 
 def minhash_signatures(documents: DataFrame, n_perm: int = 64, n_bands: int = 16) -> DataFrame:
     """doc_id → minhash signature + LSH band keys: one batched kernel
-    call per Arrow batch (_minhash_batches, shared with dedup_corpus), the
+    call per Arrow batch (_minhash, shared with dedup_corpus), the
     signatures bit-identical to kernels.textstats.minhash_signature."""
     from ..plans.layout import spread_small_scan
 
     base = spread_small_scan(documents.select("doc_id", "text"))
-    return base.mapInArrow(
-        _minhash_batches(n_perm, n_bands),
-        schema="doc_id long, sig array<long>, bands array<long>",
-    )
+    return _minhash(base, n_perm, n_bands).select("doc_id", "sig", "bands")
 
 
-def _sig_estimate(sig_a, sig_b):
-    """round(fraction of equal signature positions, 4): THE signature
-    Jaccard estimate, shared by the LSH pair verify and dedup_corpus's
-    bucket fold so the two paths cannot drift."""
-    est = F.aggregate(
-        F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.size(sig_a)
-    return F.round(est, 4)
+# round(fraction of equal signature positions, 4): THE signature Jaccard
+# estimate as SQL over two signature expressions {a} and {b}, formatted by
+# the LSH pair verify and by dedup_corpus's bucket fold so the two paths
+# cannot drift. SQL text, not Python lambdas: each lambda of a Column-API
+# higher-order function costs dozens of gateway round trips to build.
+_SIG_ESTIMATE = (
+    "round(aggregate(zip_with({a}, {b}, (x, y) -> cast(x = y AS int)), 0,"
+    " (acc, v) -> acc + v) / size({a}), 4)"
+)
 
 
 # Hot-bucket guard for every LSH band self-join (VERDICT r2 "what's
@@ -261,7 +270,7 @@ def _verify_candidate_pairs(sigs: DataFrame, threshold: float,
     return (
         pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .withColumn("est_jaccard", _sig_estimate(F.col("sig_a"), F.col("sig_b")))
+        .withColumn("est_jaccard", F.expr(_SIG_ESTIMATE.format(a="sig_a", b="sig_b")))
         .where(F.col("est_jaccard") >= threshold)
         .select("doc_a", "doc_b", "est_jaccard")
     )
@@ -315,11 +324,17 @@ def dedup_corpus(
     closed, but one bucket-local pass instead of a connected-components
     iteration. Everything else is 'kept'.
 
+    Raises ValueError, before building any plan, unless n_perm is a
+    multiple of n_bands, near_threshold is in [0, 1] and max_bucket is
+    an int ≥ 1 (the last two are formatted into the fold's SQL).
+
     One lazy, linear plan: no persist, no join, and `text` is read once.
-      1. scan → (doc_id, fingerprint_col(), text) → one mapInArrow
-         (_minhash_batches) → (doc_id, fingerprint, sig, bands). Every
-         doc is hashed, exact dups included (they are few; hashing them
-         saves a second read of the text).
+      1. scan → (doc_id, text) → one mapInArrow (_minhash_arrow) →
+         (doc_id, fingerprint, sig, bands). The kernel normalizes each
+         text once: its words give the exact-dup fingerprint (md5 of
+         the normalized text, fingerprint_col's value) and the shingles.
+         Every doc is hashed, exact dups included (they are few; hashing
+         them saves a second read of the text).
       2. rep_doc_id = min(doc_id) over (partition by fingerprint):
          shuffle 1, keyed by fingerprint, ~1 KB rows (sig + bands).
       3. Each survivor explodes its n_bands (band_idx, band_hash) keys,
@@ -329,9 +344,11 @@ def dedup_corpus(
          n_bands rows of a survivor (~8 KB of shuffle per doc at 64/16,
          the price of not joining the signatures back).
       4. collect_list per bucket; a member is near when some member with
-         a smaller doc_id reaches _sig_estimate ≥ near_threshold.
+         a smaller doc_id reaches _SIG_ESTIMATE ≥ near_threshold.
       5. Shuffle 3, keyed by doc_id, tiny rows: fold each doc's flags
          into keep/reason.
+    Steps 2-5 are SQL expressions (_keep_list), which the driver builds
+    in a few gateway round trips.
 
     Skew. A hot bucket (more than max_bucket members, boilerplate the
     exact stage missed) forms no pairs, the cap of
@@ -343,59 +360,52 @@ def dedup_corpus(
     partition of shuffle 1, which Spark buffers and spills past
     spark.sql.windowExec.buffer.spill.threshold; each copy then leaves
     with one private key, so nothing downstream is hot."""
-    sigs = documents.select(
-        "doc_id", fingerprint_col().alias("fingerprint"), "text"
-    ).mapInArrow(
-        _minhash_batches(n_perm, n_bands, extra=("fingerprint",)),
-        schema="doc_id long, fingerprint string, sig array<long>, bands array<long>",
-    )
-    tagged = sigs.withColumn(
-        "rep_doc_id", F.min("doc_id").over(Window.partitionBy("fingerprint"))
-    )
-    keys = F.when(
-        F.col("doc_id") == F.col("rep_doc_id"),
-        F.transform("bands", lambda h, i: F.struct(i.alias("band_idx"), h.alias("band_hash"))),
-    ).otherwise(
-        F.array(F.struct(F.lit(-1).alias("band_idx"), F.col("doc_id").alias("band_hash")))
+    from ..kernels.textstats import _rows_per_band
+
+    _rows_per_band(n_perm, n_bands)
+    # NaN fails the range test too
+    if isinstance(near_threshold, bool) or not isinstance(near_threshold, (int, float)) \
+            or not 0 <= near_threshold <= 1:
+        raise ValueError(f"near_threshold={near_threshold!r} is not a number in [0, 1]")
+    if isinstance(max_bucket, bool) or not isinstance(max_bucket, int) or max_bucket < 1:
+        raise ValueError(f"max_bucket={max_bucket!r} is not an int >= 1")
+    return _keep_list(_minhash(documents, n_perm, n_bands), float(near_threshold), max_bucket)
+
+
+def _keep_list(sigs: DataFrame, near_threshold: float, max_bucket: int) -> DataFrame:
+    """dedup_corpus steps 2-5 over its kernel pass's (doc_id, fingerprint,
+    sig, bands); the arguments are validated by the caller."""
+    est = _SIG_ESTIMATE.format(a="o.sig", b="m.sig")
+    near = (
+        f"CASE WHEN size(members) > {max_bucket} THEN false ELSE exists(members,"
+        f" o -> o.doc_id < m.doc_id AND {est} >= {near_threshold!r}D) END"
     )
     buckets = (
-        tagged.select(F.explode(keys).alias("key"), F.struct("doc_id", "rep_doc_id", "sig").alias("m"))
+        sigs.selectExpr(
+            "doc_id", "sig", "bands", "min(doc_id) OVER (PARTITION BY fingerprint) AS rep_doc_id"
+        )
+        .selectExpr(
+            "explode(CASE WHEN doc_id = rep_doc_id"
+            " THEN transform(bands, (h, i) -> named_struct('band_idx', i, 'band_hash', h))"
+            " ELSE array(named_struct('band_idx', -1, 'band_hash', doc_id)) END) AS key",
+            "struct(doc_id, rep_doc_id, sig) AS m",
+        )
         .groupBy("key")
-        .agg(F.collect_list("m").alias("members"))
+        .agg(F.expr("collect_list(m) AS members"))
     )
-
-    def near(m):
-        return F.when(F.size("members") > max_bucket, F.lit(False)).otherwise(
-            F.exists(
-                "members",
-                lambda o: (o["doc_id"] < m["doc_id"])
-                & (_sig_estimate(o["sig"], m["sig"]) >= near_threshold),
-            )
+    flags = buckets.selectExpr(
+        "inline(transform(members, m -> named_struct("
+        f"'doc_id', m.doc_id, 'rep_doc_id', m.rep_doc_id, 'near', {near})))"
+    )
+    return (
+        flags.groupBy("doc_id")
+        .agg(F.expr("min(rep_doc_id) AS rep_doc_id"), F.expr("max(near) AS near"))
+        .selectExpr(
+            "doc_id",
+            "CASE WHEN doc_id != rep_doc_id OR near THEN 0 ELSE 1 END AS keep",
+            "CASE WHEN doc_id != rep_doc_id THEN 'exact_dup'"
+            " WHEN near THEN 'near_dup' ELSE 'kept' END AS reason",
         )
-
-    flags = buckets.select(
-        F.inline(
-            F.transform(
-                "members",
-                lambda m: F.struct(
-                    m["doc_id"].alias("doc_id"),
-                    m["rep_doc_id"].alias("rep_doc_id"),
-                    near(m).alias("near"),
-                ),
-            )
-        )
-    )
-    verdict = flags.groupBy("doc_id").agg(
-        F.min("rep_doc_id").alias("rep_doc_id"), F.max("near").alias("near")
-    )
-    exact = F.col("doc_id") != F.col("rep_doc_id")
-    return verdict.select(
-        "doc_id",
-        F.when(exact | F.col("near"), F.lit(0)).otherwise(F.lit(1)).alias("keep"),
-        F.when(exact, F.lit("exact_dup"))
-        .when(F.col("near"), F.lit("near_dup"))
-        .otherwise(F.lit("kept"))
-        .alias("reason"),
     )
 
 

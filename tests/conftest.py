@@ -1,3 +1,4 @@
+import contextlib
 import os
 
 import pytest
@@ -24,3 +25,29 @@ def spark():
     s = build_spark("pdf_to_text_spark-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@contextlib.contextmanager
+def gateway_calls(spark: SparkSession):
+    """Count the py4j round trips (``send_command`` calls) made while the
+    block runs; yields a one-item list that holds the count. Commands
+    that release JVM handles of garbage-collected Python objects are
+    left out: py4j sends them in bursts whenever the collector runs, not
+    for the work inside the block."""
+    from py4j import protocol
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(release):
+            calls[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield calls
+    finally:
+        del client.send_command

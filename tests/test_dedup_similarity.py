@@ -82,6 +82,67 @@ def test_fingerprint_col_null_text_is_empty_text(spark):
     assert fps == [hashlib.md5(b"").hexdigest()] * 2
 
 
+# dedup_corpus's exact-dup key comes from its kernel pass; fingerprint_col
+# is its JVM mirror
+KERNEL_CASES = [*NORM_CASES.items(), ("null", None)]
+
+
+@pytest.fixture(scope="module")
+def kernel_and_jvm_fingerprints(spark):
+    df = spark.createDataFrame(
+        [(i, t) for i, (_, t) in enumerate(KERNEL_CASES)], "doc_id long, text string"
+    )
+    kernel = {r["doc_id"]: r["fingerprint"] for r in dedup._minhash(df, 64, 16).collect()}
+    jvm = {r["doc_id"]: r["fp"] for r in
+           df.select("doc_id", dedup.fingerprint_col().alias("fp")).collect()}
+    return {case: (kernel[i], jvm[i]) for i, (case, _) in enumerate(KERNEL_CASES)}
+
+
+@pytest.mark.parametrize("case", [c for c, _ in KERNEL_CASES])
+def test_kernel_fingerprint_mirrors_fingerprint_col(kernel_and_jvm_fingerprints, case):
+    kernel, jvm = kernel_and_jvm_fingerprints[case]
+    want = hashlib.md5(normalize_text(dict(KERNEL_CASES)[case] or "").encode()).hexdigest()
+    assert kernel == jvm == want
+
+
+# (signature a, signature b, est): equal, disjoint, half equal, and
+# k/n on a 4-decimal rounding edge — Spark's round is HALF_UP, so
+# 1/32 = 0.03125 reads 0.0313 where Python's round gives 0.0312
+EST_PAIRS = [
+    (list(range(64)), list(range(64)), 1.0),
+    (list(range(64)), list(range(64, 128)), 0.0),
+    (list(range(64)), list(range(32)) + list(range(100, 132)), 0.5),
+    (list(range(32)), [0] + list(range(100, 131)), 0.0313),
+    (list(range(32)), list(range(5)) + list(range(100, 127)), 0.1563),
+    (list(range(64)), list(range(21)) + list(range(100, 143)), 0.3281),
+    (list(range(64)), list(range(3)) + list(range(100, 161)), 0.0469),
+]
+
+
+def test_sig_estimate_is_one_definition_in_both_paths(spark):
+    """The LSH pair verify and dedup_corpus's bucket fold format the one
+    _SIG_ESTIMATE. The verify's est_jaccard reads the expected value of
+    every pair; at each pair's estimate, and half a 4-decimal step above
+    it, the fold flags exactly the pairs whose verify estimate reaches
+    the threshold — so its estimates are the same numbers."""
+    rows = []
+    for p, (a, b, _) in enumerate(EST_PAIRS):
+        # each pair alone in its own bucket, distinct fingerprints
+        rows += [(2 * p, f"fp{2 * p}", a, [p]), (2 * p + 1, f"fp{2 * p + 1}", b, [p])]
+    sigs = spark.createDataFrame(
+        rows, "doc_id long, fingerprint string, sig array<long>, bands array<long>"
+    )
+    verified = {r["doc_a"] // 2: r["est_jaccard"] for r in
+                dedup._verify_candidate_pairs(sigs, 0.0, dedup.DEFAULT_MAX_BUCKET).collect()}
+    assert verified == {p: est for p, (_, _, est) in enumerate(EST_PAIRS)}
+    steps = {e + d for e in verified.values() for d in (0, 0.00005)}
+    for t in sorted(t for t in steps if t <= 1):
+        got = {r["doc_id"]: r["reason"] for r in
+               dedup._keep_list(sigs, t, dedup.DEFAULT_MAX_BUCKET).collect()}
+        near = {p for p in verified if got[2 * p + 1] == "near_dup"}
+        assert near == {p for p, est in verified.items() if est >= t}, t
+
+
 def test_minhash_lsh_finds_near_dups(docs):
     pairs = {(r["doc_a"], r["doc_b"]) for r in
              dedup.minhash_dedup_pairs(docs, threshold=0.5).collect()}

@@ -60,14 +60,20 @@ def _ref_bands(sig: np.ndarray, n_bands: int = 16) -> list:
     ]
 
 
+def _ref_fingerprint(text: str) -> str:
+    return hashlib.md5(re.sub(r"[^0-9a-z]+", " ", text.lower()).strip().encode()).hexdigest()
+
+
 def _assert_identical(texts, n_perm=64, n_bands=16, k=5):
-    sigs, bands = minhash_batch(texts, n_perm, n_bands, k)
+    sigs, bands, fps = minhash_batch(texts, n_perm, n_bands, k)
     assert sigs.dtype == np.uint64 and sigs.shape == (len(texts), n_perm)
     assert bands.dtype == np.int64 and bands.shape == (len(texts), n_bands)
+    assert len(fps) == len(texts)
     for i, t in enumerate(texts):
         want = _ref_signature(t or "", n_perm, k)
         assert np.array_equal(sigs[i], want), repr(t)
         assert bands[i].tolist() == _ref_bands(want, n_bands), repr(t)
+        assert fps[i] == _ref_fingerprint(t or ""), repr(t)
         assert np.array_equal(minhash_signature(t, n_perm, k), sigs[i])
         assert minhash_bands(sigs[i], n_bands) == bands[i].tolist()
         assert word_shingles(t or "", k) == _ref_shingles(t or "", k)
@@ -120,10 +126,11 @@ def test_other_shapes_bit_identical():
 
 
 def test_batch_of_none_rows_and_empty_batch():
-    sigs, bands = minhash_batch([])
-    assert sigs.shape == (0, 64) and bands.shape == (0, 16)
-    sigs, _ = minhash_batch([None, ""])
+    sigs, bands, fps = minhash_batch([])
+    assert sigs.shape == (0, 64) and bands.shape == (0, 16) and fps == []
+    sigs, _, fps = minhash_batch([None, ""])
     assert (sigs == np.uint64(0xFFFFFFFFFFFFFFFF)).all()
+    assert fps == [hashlib.md5(b"").hexdigest()] * 2
 
 
 def test_uneven_bands_raise():

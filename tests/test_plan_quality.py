@@ -152,9 +152,10 @@ def test_lsh_band_join_is_hash_keyed_not_cartesian(spark):
 
 def test_dedup_corpus_is_one_linear_kernel_pass(spark):
     """dedup_corpus reads the text once: exactly one MapInArrow (the
-    kernel runs once per doc), no cached relation, no join, and `text`
-    never crosses an Exchange (fingerprint window, bucket and doc_id
-    shuffles only)."""
+    kernel runs once per doc, and emits the exact-dup fingerprint, so no
+    JVM projection normalizes or hashes the text), no cached relation, no
+    join, and `text` never crosses an Exchange (fingerprint window,
+    bucket and doc_id shuffles only)."""
     import os
 
     from pdf_to_text_spark.operators import dedup
@@ -171,6 +172,39 @@ def test_dedup_corpus_is_one_linear_kernel_pass(spark):
     assert len(inputs) == 3, plan
     for cols in inputs:
         assert not re.search(r"\btext#", cols), plan
+    assert "regexp_replace" not in plan, plan
+    assert not re.search(r"\bmd5\(", plan), plan
+
+
+# py4j round trips to build each root operator's lazy plan on a warm
+# session, with a small margin over the counts at the time of writing
+# (dedup_corpus 115, run_extraction 181, strip_duplicate_lines 366).
+# dedup_corpus's fold built from Python-lambda higher-order functions
+# took 937: each lambda costs dozens of round trips.
+GATEWAY_BUDGET = {"dedup_corpus": 250, "run_extraction": 200, "strip_duplicate_lines": 400}
+
+
+@pytest.mark.parametrize("op", sorted(GATEWAY_BUDGET))
+def test_plan_build_gateway_budget(spark, pages, op):
+    """Driver-side plan construction stays within its round-trip budget,
+    so chatter between the driver and the JVM cannot creep back
+    unnoticed."""
+    import os
+
+    from pdf_to_text_spark.operators import dedup
+    from pdf_to_text_spark.operators.extraction import run_extraction
+    from conftest import DEFAULT_SF_DIR, gateway_calls, load
+
+    docs = load(spark, "documents", os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001"))
+    build = {
+        "dedup_corpus": lambda: dedup.dedup_corpus(docs),
+        "run_extraction": lambda: run_extraction(pages),
+        "strip_duplicate_lines": lambda: dedup.strip_duplicate_lines(docs),
+    }[op]
+    build()  # the first call also loads classes and caches JVM handles
+    with gateway_calls(spark) as calls:
+        build()
+    assert 0 < calls[0] <= GATEWAY_BUDGET[op], calls[0]
 
 def test_strip_duplicate_lines_is_one_linear_plan(spark):
     """strip_duplicate_lines is explode → aggregate by line → aggregate
